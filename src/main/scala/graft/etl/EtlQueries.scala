@@ -2256,14 +2256,16 @@ object EtlQueries {
     * the middle two calendar years of the feed. */
   val TxSkipLo = "1997-01"
   val TxSkipHi = "1998-12"
+  private val TxSkipWhere = s"month >= '$TxSkipLo' AND month <= '$TxSkipHi'"
 
   /** MANIFEST-LEVEL DATA SKIPPING round trip — the stats-pruned read
     * path run end-to-end through [[TxParquetSink.appendWithStats]] /
-    * [[TxParquetSink.readSnapshotRange]] and gated by the oracle hash:
+    * [[TxParquetSink.readSnapshotWhere]] and gated by the oracle hash:
     * the monthly store-revenue rollup lands as ONE COMMIT PER CALENDAR
     * YEAR (each carrying its month-range stats in the manifest — the
     * ingestion pattern of a daily/weekly loader), then a two-year range
-    * read is answered through the pruned path plus the real predicate.
+    * read is answered through the pruned path, which applies the real
+    * predicate.
     * The oracle computes the same range declaratively, so the
     * differential proves the SUPERSET CONTRACT (pruning never loses a
     * matching row) on real data every round; the spec additionally pins
@@ -2276,8 +2278,7 @@ object EtlQueries {
     * the Delta/Iceberg stats-skipping shape. */
   def txSkippingRead(spark: SparkSession, dir: String): DataFrame = {
     val t = TxFixtures.statsYearSink(spark, dir)
-    t.readSnapshotRange(spark, "month", TxSkipLo, TxSkipHi).get
-      .where(col("month") >= TxSkipLo && col("month") <= TxSkipHi)
+    t.readSnapshotWhere(spark, TxSkipWhere).get
       .select("month", "store_id", "cents")
       .orderBy("month", "store_id")
   }
@@ -2292,8 +2293,7 @@ object EtlQueries {
     * round (the bucket-pruning counts are pinned by the spec). */
   def txSkippingCompacted(spark: SparkSession, dir: String): DataFrame = {
     val t = TxFixtures.rangeCompactedSink(spark, dir)
-    t.readSnapshotRange(spark, "month", TxSkipLo, TxSkipHi).get
-      .where(col("month") >= TxSkipLo && col("month") <= TxSkipHi)
+    t.readSnapshotWhere(spark, TxSkipWhere).get
       .select("month", "store_id", "cents")
       .orderBy("month", "store_id")
   }
@@ -2422,8 +2422,7 @@ object EtlQueries {
       monthly.where(col("month") === lit("1997-06"))
         .withColumn("cents", col("cents") + lit(1L)),
       Seq("month"))
-    t.readVersionWhere(spark, vBefore,
-      s"month >= '$TxSkipLo' AND month <= '$TxSkipHi'").get
+    t.readVersionWhere(spark, vBefore, TxSkipWhere).get
       .select("month", "store_id", "cents")
       .orderBy("month", "store_id")
   }
@@ -2438,7 +2437,8 @@ object EtlQueries {
     * [[txSkippingRead]]: orders land as one commit per calendar year,
     * each manifest carrying a customer-key bloom; a single customer's
     * order history is then answered through
-    * [[TxParquetSink.readSnapshotPoint]] plus the real predicate. The
+    * [[TxParquetSink.readSnapshotWhere]] with `o_custkey = <key>` — a
+    * bloom-only column, probed under its recorded integral type. The
     * oracle computes the same history declaratively, so the hash gate
     * proves the bloom path loses no row (false negatives impossible);
     * the spec pins that year-commits the customer never ordered in are
@@ -2451,9 +2451,8 @@ object EtlQueries {
     val t = TxFixtures.ordersYearSink(spark, dir)
     // a corpus without the probe key prunes EVERY commit (bloom
     // absence proof) — the read is then legitimately empty, not an error
-    t.readSnapshotPoint(spark, "o_custkey", TxProbeCustomer.toString)
+    t.readSnapshotWhere(spark, s"o_custkey = $TxProbeCustomer")
       .getOrElse(o.limit(0))
-      .where(col("o_custkey") === TxProbeCustomer)
       .select("o_orderkey", "year", "cents")
       .orderBy("o_orderkey")
   }
@@ -2468,9 +2467,8 @@ object EtlQueries {
   def txPointLookupCompacted(spark: SparkSession, dir: String): DataFrame = {
     val o = TxFixtures.ordersProjected(spark, dir)
     val t = TxFixtures.ordersCompactedSink(spark, dir)
-    t.readSnapshotPoint(spark, "o_custkey", TxProbeCustomer.toString)
+    t.readSnapshotWhere(spark, s"o_custkey = $TxProbeCustomer")
       .getOrElse(o.limit(0))
-      .where(col("o_custkey") === TxProbeCustomer)
       .select("o_orderkey", "year", "cents")
       .orderBy("o_orderkey")
   }
@@ -2613,8 +2611,8 @@ object EtlQueries {
   val TxDfpCustomerMod = 997L
 
   /** DYNAMIC FILE PRUNING join — the fact side of a selective
-    * dimension join served through
-    * [[TxParquetSink.readSnapshotPointAny]]: orders land one commit
+    * dimension join served through [[TxParquetSink.readSnapshotWhere]]
+    * with `o_custkey IN (<keys>)`: orders land one commit
     * per year with customer-key blooms; the FILTERED customer
     * dimension's keys (bounded by its selectivity — the same argument
     * as the broadcast join they feed) are collected and the fact read
@@ -2631,8 +2629,10 @@ object EtlQueries {
       .where(col("c_custkey") % TxDfpCustomerMod === 1)
       .select("c_custkey", "c_name")
     val keys = dim.select("c_custkey").distinct().orderBy("c_custkey")
-      .collect().map(_.getLong(0).toString).toSeq
-    t.readSnapshotPointAny(spark, "o_custkey", keys)
+      .collect().map(_.getLong(0))
+    // an empty probe set matches nothing: no read at all
+    Some(keys).filter(_.nonEmpty)
+      .flatMap(ks => t.readSnapshotWhere(spark, ks.mkString("o_custkey IN (", ", ", ")")))
       .getOrElse(o.limit(0))
       .join(broadcast(dim), col("o_custkey") === col("c_custkey"))
       .select("c_custkey", "c_name", "o_orderkey", "year", "cents")
@@ -2899,7 +2899,7 @@ object EtlQueries {
 
   /** GROUPED METADATA-AGGREGATE RULE — the `GROUP BY <partition col>`
     * profile answered commit-by-commit from manifests
-    * ([[TxParquetSink.groupedMetaProfile]] through the Catalyst rule):
+    * ([[TxParquetSink.groupedMetaProfileMulti]] through the Catalyst rule):
     * the rollup loads one commit per calendar YEAR with a `y` column
     * (each commit single-valued in `y` — the partition-grain shape),
     * and `GROUP BY y → count/min/max/sum(cents)` optimizes into

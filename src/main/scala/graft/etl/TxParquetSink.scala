@@ -277,13 +277,9 @@ final case class TxParquetSink(dir: String) extends WarehouseSink {
     * "what did the January slice look like at version v" touches the
     * January commits of that era, nothing else. */
   def readVersionWhere(spark: SparkSession, asOf: Long,
-      predicateSql: String): Option[DataFrame] = {
-    import org.apache.spark.sql.functions.expr
-    val cons = parsePruningConstraints(spark, predicateSql)
-    dataOf(spark, effective(commits().takeWhile(_._1 <= asOf)),
-      keepFile = (m, f) => cons.forall(consKeeps(m, f, _)))
-      .map(_.where(expr(predicateSql)))
-  }
+      predicateSql: String): Option[DataFrame] =
+    prunedRead(spark, effective(commits().takeWhile(_._1 <= asOf)),
+      predicateSql)
 
   /** Snapshot resolution under compaction: a BASE commit is a full
     * rewrite, so the effective log is the suffix from the newest base
@@ -441,7 +437,7 @@ final case class TxParquetSink(dir: String) extends WarehouseSink {
 
   /** Transactional append that records per-commit MIN/MAX column
     * statistics in the manifest — the metadata that makes
-    * [[readSnapshotRange]]'s data skipping possible. The stats
+    * [[readSnapshotWhere]]'s data skipping possible. The stats
     * aggregate is one bounded pass fused with the audit read-back (the
     * staged files are being re-read anyway); an all-null column yields
     * no stats entry (conservatively always read). At 100 TB this is
@@ -508,8 +504,7 @@ final case class TxParquetSink(dir: String) extends WarehouseSink {
     * OPTIMIZE). Driver-only, O(commits · k); zero data reads. */
   def tableSketch(column: String): KmvMins = {
     val cs = commits()
-    require(cs.forall { case (_, m) =>
-      m.deletePred.isEmpty && m.replaceCols.isEmpty },
+    require(!cs.exists(_._2.hidesRows),
       s"tableSketch('$column') on a log with row-hiding masks would " +
         "profile resurrected values; re-profile the compacted data")
     val data = cs.map(_._2).filter(m => m.rows > 0)
@@ -523,107 +518,63 @@ final case class TxParquetSink(dir: String) extends WarehouseSink {
     KmvMins(k, data.flatMap(_.sketches(column).mins).distinct.sorted.take(k))
   }
 
-  /** DATA-SKIPPING range read: the snapshot restricted to commits whose
-    * recorded `column` stats intersect [lo, hi] (inclusive; both bounds
-    * in the column's cast-to-string form — numeric stats compare as
-    * exact BigDecimal). Contract: returns a SUPERSET of the snapshot
-    * rows with `column` in range — commits without stats for `column`
-    * are always kept, and kept commits still carry their other rows —
-    * so the caller applies its real predicate unchanged and pruning is
-    * purely an I/O optimization, exactly Delta's stats-skipping
-    * contract. Replace semantics survive pruning: a later overwrite's
-    * drop mask applies to every KEPT earlier commit whether or not the
-    * overwrite's own data was skipped (manifests are never pruned,
-    * only their file reads). */
-  def readSnapshotRange(spark: SparkSession, column: String,
-      lo: String, hi: String): Option[DataFrame] =
-    dataOf(spark, resolvedCommits(),
-      keepFile = (m, f) => rangeKeeps(m, f, column, lo, hi))
-
-  /** The per-file range rule: file-level stats ([[compactRanged]])
-    * take precedence, then commit-level stats, then conservative
-    * keep. */
-  private def rangeKeeps(m: Manifest, f: String, column: String,
-      lo: String, hi: String): Boolean =
-    m.fileStats.get(f).flatMap(_.get(column)).orElse(m.stats.get(column))
-      .forall(s => !rangeDisjoint(s, lo, hi))
-
-  /** BLOOM-SKIPPING point read: the snapshot restricted to commits
-    * whose bloom filter for `column` might contain `value` (in its
-    * cast-to-string form). Same SUPERSET contract as
-    * [[readSnapshotRange]]: commits without a bloom for `column` are
-    * always kept, false positives only add reads, false negatives
-    * cannot occur, replace masks survive pruning. The lookup a minmax
-    * range cannot serve: every year-commit of a fact spans the full
-    * key range, but only the commits a key actually landed in light up
-    * its bloom. */
-  def readSnapshotPoint(spark: SparkSession, column: String,
-      value: String): Option[DataFrame] =
-    dataOf(spark, resolvedCommits(),
-      keepFile = (m, f) => pointKeeps(m, f, column, value))
-
-  /** The per-file point rule: file-level blooms ([[compactRanged]])
-    * take precedence, then commit-level, then conservative keep. */
-  private def pointKeeps(m: Manifest, f: String, column: String,
-      value: String): Boolean =
-    m.fileBlooms.get(f).flatMap(_.get(column)).orElse(m.blooms.get(column))
-      .forall(b => mightContain(b, value))
-
-  /** Bloom-skipping observability, the [[skippingAudit]] twin. */
-  def pointSkippingAudit(column: String, value: String): (Int, Int) = {
-    val ms = resolvedCommits().map(_._2).filter(_.files.nonEmpty)
-    val skipped = ms
-      .map(m => m.files.count(f => !pointKeeps(m, f, column, value))).sum
-    (ms.map(_.files.size).sum, skipped)
-  }
-
-  /** PREDICATE-DRIVEN DATA SKIPPING — [[readSnapshotRange]] /
-    * [[readSnapshotPoint]] derived AUTOMATICALLY from an arbitrary SQL
-    * predicate, the way Delta/Iceberg prune from a query's WHERE clause
-    * without the caller naming columns and bounds by hand. The
-    * predicate is parsed with Catalyst's own SQL parser into an
-    * expression tree; each recognized conjunct — `col = lit`,
-    * `col IN (...)`, `col < / <= / > / >= lit`, either argument
-    * order — contributes a stats-range and/or bloom constraint every
-    * file must survive; everything else (OR trees, functions, casts,
-    * typed literals) contributes NOTHING — the conservative always-read
-    * posture. Strict bounds prune with their closed form. The FULL
-    * original predicate is then applied to the pruned scan, so results
-    * are exact — pruning is pure I/O avoidance, never semantics.
+  /** PREDICATE-DRIVEN DATA SKIPPING — the sink's one pruned read, the
+    * way Delta/Iceberg prune from a query's WHERE clause without the
+    * caller naming columns and bounds by hand. The predicate is parsed
+    * with Catalyst's own SQL parser ([[parsePruningConstraintsFull]]);
+    * each recognized conjunct — `col = lit`, `col IN (...)`,
+    * `col < / <= / > / >= lit`, either argument order — contributes a
+    * stats-range and/or bloom constraint every file must survive;
+    * everything else (OR trees, functions, casts, typed literals)
+    * contributes NOTHING — the conservative always-read posture.
+    * [[classifyFiles]] then marks each file Excluded, Boundary or Full,
+    * and every file that is not Excluded is scanned. The FULL original
+    * predicate is applied to the pruned scan, so results are exact —
+    * pruning is pure I/O avoidance, never semantics (Delta's
+    * stats-skipping contract). Replace semantics survive pruning: a
+    * later overwrite's or delete's mask applies to every KEPT earlier
+    * commit whether or not the masking commit's own data was skipped
+    * (manifests are never pruned, only their file reads).
     *
     * Type-coercion safety (the part that makes auto-derivation sound):
     * manifest stats/blooms hold `CAST(x AS STRING)` forms, while SQL
     * comparison happens after implicit coercion — so a constraint only
     * prunes when the literal's rendering provably matches the column's:
     * numeric literals against numeric stats (exact BigDecimal), string
-    * literals against string stats (lexicographic); blooms probe only
-    * when the stats prove the stored cast form equals the literal's
-    * rendering (string col ↔ string lit, or integral-formed numeric
-    * stats ↔ integral lit — a DOUBLE column stores "5.0", so probing
-    * it with `= 5`'s "5" is refused rather than wrongly pruned). Any
-    * mismatch or missing stats ⇒ the file is read. At 100 TB this is
-    * the read path every ad-hoc query takes: the user writes WHERE,
-    * the manifests decide which files exist for the scan. Returns None
-    * for an empty table or an all-pruned read. */
+    * literals against string stats (engine collation). A bloom probes
+    * only when the stored cast form provably equals the literal's
+    * rendering — proven by the file's stats when recorded (string col ↔
+    * string lit, or integral-formed numeric stats ↔ integral lit — a
+    * DOUBLE column stores "5.0", so probing it with `= 5`'s "5" is
+    * refused rather than wrongly pruned), else by the manifest's
+    * recorded `schema` (STRING column ↔ string lit, integral column ↔
+    * integral lit). Any mismatch, or neither proof, ⇒ the file is read.
+    * At 100 TB this is the read path every ad-hoc query takes: the user
+    * writes WHERE, the manifests decide which files exist for the
+    * scan. Returns None for an empty table or an all-pruned read. */
   def readSnapshotWhere(spark: SparkSession,
+      predicateSql: String): Option[DataFrame] =
+    prunedRead(spark, resolvedCommits(), predicateSql)
+
+  /** [[readSnapshotWhere]] over any commit list (the time-travel prefix
+    * of [[readVersionWhere]] included): scan every file
+    * [[classifyFiles]] does not mark Excluded, then apply the full
+    * predicate. */
+  private def prunedRead(spark: SparkSession, cs: Seq[(Long, Manifest)],
       predicateSql: String): Option[DataFrame] = {
-    import org.apache.spark.sql.functions.expr
-    val cons = parsePruningConstraints(spark, predicateSql)
-    dataOf(spark, resolvedCommits(),
-      keepFile = (m, f) => cons.forall(consKeeps(m, f, _)))
-      .map(_.where(expr(predicateSql)))
+    val excluded = classifyFiles(spark, predicateSql, cs)
+      .collect { case (_, f, Excluded, _) => f }.toSet
+    dataOf(spark, cs, keepFile = (_, f) => !excluded(f))
+      .map(_.where(org.apache.spark.sql.functions.expr(predicateSql)))
   }
 
   /** Observability twin of [[readSnapshotWhere]]: (files in the
-    * effective snapshot, files the predicate's derived constraints
-    * skip). Driver-side metadata only. */
+    * effective snapshot, files [[classifyFiles]] marks Excluded — the
+    * files the pruned read skips). Driver-side metadata only. */
   def skippingAuditWhere(spark: SparkSession,
       predicateSql: String): (Int, Int) = {
-    val cons = parsePruningConstraints(spark, predicateSql)
-    val ms = resolvedCommits().map(_._2).filter(_.files.nonEmpty)
-    val skipped = ms.map(m =>
-      m.files.count(f => !cons.forall(consKeeps(m, f, _)))).sum
-    (ms.map(_.files.size).sum, skipped)
+    val classed = classifyFiles(spark, predicateSql)
+    (classed.size, classed.count(_._3 == Excluded))
   }
 
   /** BOUNDARY-EXACT PREDICATE COUNT — `SELECT COUNT(*) WHERE <pred>`
@@ -657,93 +608,48 @@ final case class TxParquetSink(dir: String) extends WarehouseSink {
     * (count, fullFiles, boundaryFiles, excludedFiles). */
   def countWhereAudit(spark: SparkSession,
       predicateSql: String): (Long, Int, Int, Int) = {
-    import org.apache.spark.sql.functions.expr
-    val (cs, classed) = classifyFiles(spark, predicateSql)
-    if (cs.isEmpty) return (0L, 0, 0, 0)
-    val boundarySet = classed.collect { case (_, f, 1, _) => f }.toSet
-    val full = classed.collect { case (_, _, 2, Some(n)) => n }.sum
-    val scanned = dataOf(spark, cs, keepFile = (_, f) => boundarySet(f))
-      .map(_.where(expr(predicateSql)).count()).getOrElse(0L)
-    (full + scanned, classed.count(_._3 == 2), classed.count(_._3 == 1),
-      classed.count(_._3 == 0))
+    val (classed, bRow) = classifiedScan(spark, predicateSql, Nil)
+    def files(cls: Int) = classed.count(_._3 == cls)
+    (credited(classed).map(_._3).sum + rowsOf(bRow),
+      files(Full), files(Boundary), files(Excluded))
   }
 
   /** BOUNDARY-EXACT AGGREGATE — [[statsAggregate]] under a predicate:
-    * COUNT(*)/MIN/MAX of `columns` over the predicate's rows, reading
-    * only Boundary files. Full files contribute their manifest row
-    * counts and recorded min/max (exact per-file extremes, and every
-    * row of a Full file satisfies the predicate; SQL MIN/MAX ignore
-    * NULLs exactly as the stats do, so no null-count condition is
-    * needed on the AGGREGATED columns — only on the constrained ones,
-    * which [[classifyFiles]] already enforces). Files lacking stats
-    * for an aggregated column demote to Boundary; extremes from the
-    * two sources combine in the stats' cast-to-string domain. One
+    * COUNT(*)/MIN/MAX/SUM of `columns` over the predicate's rows,
+    * reading only Boundary files. Full files contribute through the
+    * manifest fold ([[TxParquetSink.foldColumn]]): row counts, recorded
+    * min/max (exact per-file extremes, and every row of a Full file
+    * satisfies the predicate; SQL MIN/MAX ignore NULLs exactly as the
+    * stats do, so no null-count condition is needed on the AGGREGATED
+    * columns — only on the constrained ones, which [[classifyFiles]]
+    * already enforces) and recorded sums. Files lacking stats for an
+    * aggregated column demote to Boundary; extremes from the two
+    * sources combine in the stats' cast-to-string domain. SUM is exact
+    * or NULL: every Full file must carry a sum record and the boundary
+    * scan must have summed (integral column, or no boundary rows). One
     * output row per column, the [[statsAggregate]] shape. */
   def statsAggregateWhere(spark: SparkSession, columns: Seq[String],
       predicateSql: String): DataFrame = {
-    import org.apache.spark.sql.functions.{col, count, expr, lit, max, min}
     import spark.implicits._
-    val (cs, classed) = classifyFiles(spark, predicateSql,
+    val (classed, bRow) = classifiedScan(spark, predicateSql, columns,
       fullAlso = (m, f) => columns.forall(c => statsFor(m, f, c).isDefined))
-    val fullRows = classed.collect { case (_, _, 2, Some(n)) => n }.sum
-    val fullStats: Map[String, Seq[ColStats]] = columns.map(c =>
-      c -> classed.collect { case (m, f, 2, _) => statsFor(m, f, c).get }).toMap
-    val boundarySet = classed.collect { case (_, f, 1, _) => f }.toSet
-    val boundary = dataOf(spark, cs, keepFile = (_, f) => boundarySet(f))
-      .map(_.where(expr(predicateSql)))
-    val bRow = boundary.map { df =>
-      val integral = df.schema.fields.map(f => f.name -> (f.dataType match {
-        case org.apache.spark.sql.types.ByteType |
-             org.apache.spark.sql.types.ShortType |
-             org.apache.spark.sql.types.IntegerType |
-             org.apache.spark.sql.types.LongType => true
-        case _ => false
-      })).toMap
-      val aggs = count(lit(1)).as("__n") +: columns.flatMap(c => Seq(
-        min(col(c)).cast("string").as(s"__min_$c"),
-        max(col(c)).cast("string").as(s"__max_$c"),
-        (if (integral.getOrElse(c, false))
-          org.apache.spark.sql.functions.sum(col(c)).cast("string")
-        else lit(null).cast("string")).as(s"__sum_$c")))
-      df.agg(aggs.head, aggs.tail: _*).head()
-    }
-    val fullFiles = classed.collect { case (m, f, 2, _) => (m, f) }
-    val n = fullRows + bRow.map(_.getLong(0)).getOrElse(0L)
-    val out = columns.sorted.map { c =>
-      val i = columns.indexOf(c)
-      val fs = fullStats(c)
-      val num = fs.headOption.map(_.num).getOrElse(
-        boundary.exists(df => df.schema.fields.find(_.name == c)
-          .exists(_.dataType
-            .isInstanceOf[org.apache.spark.sql.types.NumericType])))
-      require(fs.forall(_.num == num),
+    val fulls = credited(classed)
+    val n = fulls.map(_._3).sum + rowsOf(bRow)
+    columns.sorted.map { c =>
+      val fold = foldColumn(fulls, c)
+      require(fulls.isEmpty || fold.domain.isDefined,
         s"statsAggregateWhere('$c'): commits disagree on the column's type")
-      val mins = fs.map(_.min) ++ bRow.flatMap(r => Option(r.getString(1 + 3 * i)))
-      val maxs = fs.map(_.max) ++ bRow.flatMap(r => Option(r.getString(2 + 3 * i)))
-      def pick(vals: Seq[String], wantMin: Boolean): String =
-        if (vals.isEmpty) null
-        else if (num) {
-          if (wantMin) vals.minBy(BigDecimal(_)) else vals.maxBy(BigDecimal(_))
-        } else if (wantMin) utf8Min(vals) else utf8Max(vals)
-      // exact SUM: every Full file must carry a recorded sum — its own
-      // fsum= record ([[compactClustered]] segments) or the commit sum
-      // when it staged a single directory (a file-subset's share of a
-      // multi-file commit sum is unknowable) — and the boundary scan
-      // must have summed (integral column, or no boundary files); else NULL
-      val fullSums = fullFiles.map { case (m, f) =>
-        m.fileSums.get(f).flatMap(_.get(c))
-          .orElse(if (m.files.size == 1) m.sums.get(c) else None)
-      }
-      val bSum = bRow.map(r => Option(r.getString(3 + 3 * i)))
-      val bSummed = bRow.isEmpty || bRow.exists(_.getLong(0) == 0L) ||
-        bSum.exists(_.isDefined)
-      val sm =
-        if (n == 0L || fullSums.exists(_.isEmpty) || !bSummed) null
-        else (fullSums.flatten.map(BigDecimal(_)) ++
-          bSum.flatten.map(BigDecimal(_))).sum.toBigInt.toString
-      (c, n, pick(mins, wantMin = true), pick(maxs, wantMin = false), sm)
-    }
-    out.toDF("column", "n_rows", "min_value", "max_value", "sum_value")
+      // one boundary value needs no order, so a Full-less fold's
+      // missing domain never matters
+      val num = fold.domain.getOrElse(false)
+      val mins = fold.extremes.map(_._1).toSeq ++ scanned(bRow, "min", c)
+      val maxs = fold.extremes.map(_._2).toSeq ++ scanned(bRow, "max", c)
+      val bSum = scanned(bRow, "sum", c)
+      val sum = fold.sum.filter(_ => n > 0L && (rowsOf(bRow) == 0L || bSum.isDefined))
+        .map(_ + bSum.map(exactSum).getOrElse(BigInt(0)))
+      (c, n, if (mins.isEmpty) null else minOf(mins, num),
+        if (maxs.isEmpty) null else maxOf(maxs, num), sum.map(_.toString).orNull)
+    }.toDF("column", "n_rows", "min_value", "max_value", "sum_value")
   }
 
   /** BOUNDARY-EXACT MOMENTS — [[momentsAggregate]] under a predicate:
@@ -760,57 +666,22 @@ final case class TxParquetSink(dir: String) extends WarehouseSink {
     * when a boundary column isn't integral. */
   def momentsAggregateWhere(spark: SparkSession, columns: Seq[String],
       predicateSql: String): DataFrame = {
-    import org.apache.spark.sql.functions.{col, count, expr, lit}
-    import spark.implicits._
-    val (cs, classed) = classifyFiles(spark, predicateSql,
+    val (classed, bRow) = classifiedScan(spark, predicateSql, columns,
       fullAlso = (m, _) => m.files.size == 1 && columns.forall(c =>
         m.sums.contains(c) && m.sumsqs.contains(c) &&
           m.nullCounts.contains(c)))
-    val boundarySet = classed.collect { case (_, f, 1, _) => f }.toSet
-    val fulls = classed.collect { case (m, _, 2, Some(_)) => m }
-    val boundary = dataOf(spark, cs, keepFile = (_, f) => boundarySet(f))
-      .map(_.where(expr(predicateSql)))
-    val bRow = boundary.map { df =>
-      val integral = df.schema.fields.map(f => f.name -> (f.dataType match {
-        case org.apache.spark.sql.types.ByteType |
-             org.apache.spark.sql.types.ShortType |
-             org.apache.spark.sql.types.IntegerType |
-             org.apache.spark.sql.types.LongType => true
-        case _ => false
-      })).toMap
-      val aggs = count(lit(1)).as("__n") +: columns.flatMap(c => Seq(
-        count(col(c)).as(s"__nn_$c"),
-        (if (integral.getOrElse(c, false))
-          org.apache.spark.sql.functions.sum(col(c)).cast("string")
-        else lit(null).cast("string")).as(s"__sum_$c"),
-        (if (integral.getOrElse(c, false))
-          org.apache.spark.sql.functions.sum(
-            col(c).cast("decimal(19,0)") * col(c).cast("decimal(19,0)"))
-            .cast("string")
-        else lit(null).cast("string")).as(s"__sq_$c")))
-      df.agg(aggs.head, aggs.tail: _*).head()
-    }
-    val bN = bRow.map(_.getLong(0)).getOrElse(0L)
-    val n = fulls.map(_.rows).sum + bN
-    val out = columns.sorted.map { c =>
-      val i = columns.indexOf(c)
-      val bSum = bRow.flatMap(r => Option(r.getString(2 + 3 * i)))
-      val bSq = bRow.flatMap(r => Option(r.getString(3 + 3 * i)))
-      if (n == 0L || (bN > 0L && (bSum.isEmpty || bSq.isEmpty)))
-        (c, n, null: String, null: String, null: String, null: String)
-      else {
-        val nVals = fulls.map(m => m.rows - m.nullCounts(c)).sum +
-          bRow.map(_.getLong(1 + 3 * i)).getOrElse(0L)
-        val sm = fulls.map(m => BigInt(m.sums(c))).sum +
-          bSum.map(v => BigDecimal(v).toBigInt).getOrElse(BigInt(0))
-        val sq = fulls.map(m => BigInt(m.sumsqs(c))).sum +
-          bSq.map(v => BigDecimal(v).toBigInt).getOrElse(BigInt(0))
-        val varNum = BigInt(nVals) * sq - sm * sm
-        (c, n, nVals.toString, sm.toString, sq.toString, varNum.toString)
-      }
-    }
-    out.toDF("column", "n_rows", "n_vals", "sum_value", "sumsq_value",
-      "var_num_value")
+    val fulls = credited(classed)
+    val n = fulls.map(_._3).sum + rowsOf(bRow)
+    momentsFrame(spark, columns.sorted.map { c =>
+      val fold = foldColumn(fulls, c)
+      val (bSum, bSq) = (scanned(bRow, "sum", c), scanned(bRow, "sumsq", c))
+      (c, n, for {
+        nn <- fold.nonNull; sm <- fold.sum; sq <- fold.sumsq
+        if n > 0L && (rowsOf(bRow) == 0L || (bSum.isDefined && bSq.isDefined))
+      } yield (nn + bRow.map(_.getAs[Long](s"__cnt_$c")).getOrElse(0L),
+        sm + bSum.map(exactSum).getOrElse(BigInt(0)),
+        sq + bSq.map(exactSum).getOrElse(BigInt(0))))
+    })
   }
 
   /** Per-staged-path row metadata for the CURRENT effective snapshot:
@@ -839,16 +710,14 @@ final case class TxParquetSink(dir: String) extends WarehouseSink {
   def countFromMetadata(spark: SparkSession,
       predicateSql: Option[String]): Option[Long] = {
     val cs = resolvedCommits()
-    if (cs.isEmpty) return None
-    if (cs.exists { case (_, m) =>
-      m.deletePred.nonEmpty || m.replaceCols.nonEmpty }) return None
+    if (cs.isEmpty || cs.exists(_._2.hidesRows)) return None
     predicateSql match {
       case None => Some(cs.map(_._2.rows).sum)
       case Some(p) =>
         try {
-          val (_, classed) = classifyFiles(spark, p)
-          if (classed.exists(_._3 == 1)) None
-          else Some(classed.collect { case (_, _, 2, Some(n)) => n }.sum)
+          val classed = classifyFiles(spark, p, cs)
+          if (classed.exists(_._3 == Boundary)) None
+          else Some(credited(classed).map(_._3).sum)
         } catch { case scala.util.control.NonFatal(_) => None }
     }
   }
@@ -860,36 +729,8 @@ final case class TxParquetSink(dir: String) extends WarehouseSink {
     * min/max stats for `column`. `nonNull`/`sum` are themselves
     * optional (each needs its record on every commit); `sum` folds as
     * BigInt — the caller decides whether it fits the engine type. */
-  def columnMetaProfile(column: String): Option[ColMetaProfile] = {
-    val cs = resolvedCommits()
-    if (cs.isEmpty) return None
-    val ms = cs.map(_._2)
-    if (ms.exists(m => m.deletePred.nonEmpty || m.replaceCols.nonEmpty))
-      return None
-    val data = ms.filter(_.rows > 0)
-    if (data.isEmpty || !data.forall(_.stats.contains(column))) return None
-    val ss = data.map(_.stats(column))
-    val num = ss.head.num
-    if (!ss.forall(_.num == num)) return None
-    val (mn, mx) =
-      try {
-        if (num) (ss.minBy(s => BigDecimal(s.min)).min,
-                  ss.maxBy(s => BigDecimal(s.max)).max)
-        // engine collation, not Java's: [[utf8Cmp]] scaladoc
-        else (utf8Min(ss.map(_.min)), utf8Max(ss.map(_.max)))
-      } catch { case _: NumberFormatException => return None }
-    val rows = data.map(_.rows).sum
-    val nonNull =
-      if (data.forall(_.nullCounts.contains(column)))
-        Some(rows - data.map(_.nullCounts(column)).sum)
-      else None
-    val sum =
-      if (data.forall(_.sums.contains(column)))
-        try Some(data.map(m => BigInt(m.sums(column))).sum)
-        catch { case _: NumberFormatException => None }
-      else None
-    Some(ColMetaProfile(num, mn, mx, rows, nonNull, sum))
-  }
+  def columnMetaProfile(column: String): Option[ColMetaProfile] =
+    maskFreeData().flatMap(data => foldColumn(wholeCommits(data), column).profile)
 
   /** OPTIMIZER-GRADE FILTERED PROFILE — [[columnMetaProfile]] under a
     * predicate: `Some((rows, per-column profile))` iff every aggregate
@@ -911,50 +752,24 @@ final case class TxParquetSink(dir: String) extends WarehouseSink {
   def filteredMetaProfile(spark: SparkSession, predicateSql: String,
       columns: Seq[String]): Option[(Long, Map[String, ColMetaProfile])] =
     try {
-      val (_, classed) = classifyFiles(spark, predicateSql,
+      val classed = classifyFiles(spark, predicateSql,
         fullAlso = (m, f) => columns.forall(c => statsFor(m, f, c).isDefined))
-      if (classed.exists(_._3 == 1)) return None
-      val fulls = classed.collect { case (m, f, 2, Some(k)) => (m, f, k) }
+      if (classed.exists(_._3 == Boundary)) return None
+      val fulls = credited(classed)
       val rows = fulls.map(_._3).sum
       if (rows == 0L) return Some((0L, Map.empty))
-      val profiles = columns.map { c =>
-        val ss = fulls.map { case (m, f, _) => statsFor(m, f, c).get }
-        val num = ss.head.num
-        if (!ss.forall(_.num == num)) return None
-        val (mn, mx) =
-          try {
-            if (num) (ss.minBy(s => BigDecimal(s.min)).min,
-                      ss.maxBy(s => BigDecimal(s.max)).max)
-            else (utf8Min(ss.map(_.min)), utf8Max(ss.map(_.max)))
-          } catch { case _: NumberFormatException => return None }
-        // null counts are commit-grain: creditable only when the Full
-        // file IS its whole commit
-        val nonNull =
-          if (fulls.forall { case (m, _, _) =>
-            m.files.size == 1 && m.nullCounts.contains(c) })
-            Some(rows - fulls.map(_._1.nullCounts(c)).sum)
-          else None
-        val sums = fulls.map { case (m, f, _) =>
-          m.fileSums.get(f).flatMap(_.get(c))
-            .orElse(if (m.files.size == 1) m.sums.get(c) else None)
-        }
-        val sum =
-          if (sums.forall(_.isDefined))
-            try Some(sums.flatten.map(BigInt(_)).sum)
-            catch { case _: NumberFormatException => None }
-          else None
-        c -> ColMetaProfile(num, mn, mx, rows, nonNull, sum)
-      }.toMap
-      Some((rows, profiles))
+      Some((rows, columns.map(c =>
+        c -> foldColumn(fulls, c).profile.getOrElse(return None)).toMap))
     } catch { case scala.util.control.NonFatal(_) => None }
 
-  /** OPTIMIZER-GRADE GROUPED PROFILE — the `GROUP BY <col>` sibling of
-    * [[columnMetaProfile]]: `Some` iff the log is mask-free and EVERY
-    * data commit is SINGLE-VALUED in `groupCol` (recorded min == max
-    * and a recorded zero null count) — the partition-grain load shape
-    * (one commit per day/month/year) where a grouped profile is just a
-    * per-group fold of per-commit records. Yields one entry per group
-    * value: (rendered group value, group is numeric, group rows, per
+  /** OPTIMIZER-GRADE GROUPED PROFILE — the `GROUP BY <cols>` sibling
+    * of [[columnMetaProfile]]: `Some` iff the log is mask-free and
+    * EVERY data commit is SINGLE-VALUED in EVERY group column (recorded
+    * min == max and a recorded zero null count) — the partition-grain
+    * load shape (one commit per day, per (day, region), …) where a
+    * grouped profile is just a per-group fold of per-commit records.
+    * One entry per distinct group tuple: (rendered group values in
+    * `groupCols` order, per-column numeric flags, tuple rows, per
     * `aggCols` column the group's [[ColMetaProfile]] — every commit of
     * the group must carry the column's stats, or the whole answer is
     * None). O(commits) driver metadata, never a job: the kernel behind
@@ -962,77 +777,49 @@ final case class TxParquetSink(dir: String) extends WarehouseSink {
     * `SELECT g, count(*), min(x), max(x), sum(x) … GROUP BY g` over a
     * partition-grain table into a literal LocalRelation with no scan
     * stage at any table size. */
-  def groupedMetaProfile(groupCol: String, aggCols: Seq[String])
-      : Option[Seq[(String, Boolean, Long, Map[String, ColMetaProfile])]] =
-    groupedMetaProfileMulti(Seq(groupCol), aggCols).map(_.map {
-      case (gvs, nums, rows, profiles) => (gvs.head, nums.head, rows, profiles)
-    })
-
-  /** [[groupedMetaProfile]] for a COMPOSITE group key: `Some` iff the
-    * log is mask-free and EVERY data commit is single-valued in EVERY
-    * group column — the multi-dimension partition-grain load (one
-    * commit per (day, region), per (year, half), …), where the grouped
-    * profile is a per-tuple fold of per-commit records. One entry per
-    * distinct group tuple: (rendered group values in `groupCols`
-    * order, per-column numeric flags, tuple rows, per-`aggCols`
-    * profile). Same O(commits) driver-metadata contract — the kernel
-    * behind [[graft.plans.MetadataAggregates]]' composite GROUP BY
-    * rewrite. */
   def groupedMetaProfileMulti(groupCols: Seq[String], aggCols: Seq[String])
       : Option[Seq[(Seq[String], Seq[Boolean], Long, Map[String, ColMetaProfile])]] = {
-    if (groupCols.isEmpty) return None
-    val cs = resolvedCommits()
-    if (cs.isEmpty) return None
-    val ms = cs.map(_._2)
-    if (ms.exists(m => m.deletePred.nonEmpty || m.replaceCols.nonEmpty))
-      return None
-    val data = ms.filter(_.rows > 0)
-    if (data.isEmpty) return None
-    val single = data.forall { m =>
-      groupCols.forall { g =>
-        m.stats.get(g).exists(s => s.min == s.max) &&
-          m.nullCounts.get(g).contains(0L)
-      }
-    }
-    if (!single) return None
+    val data = maskFreeData().filter(_ => groupCols.nonEmpty).getOrElse(return None)
+    if (!data.forall(m => groupCols.forall(g =>
+      m.stats.get(g).exists(s => s.min == s.max) &&
+        m.nullCounts.get(g).contains(0L)))) return None
     val gNums = groupCols.map(g => data.head.stats(g).num)
     if (!data.forall(m => groupCols.zip(gNums).forall {
       case (g, n) => m.stats(g).num == n })) return None
-    val groups = data.groupBy(m => groupCols.map(g => m.stats(g).min))
-      .toSeq.map { case (gv, gms) =>
-        val rows = gms.map(_.rows).sum
-        val profiles = aggCols.map { c =>
-          if (!gms.forall(_.stats.contains(c))) return None
-          val ss = gms.map(_.stats(c))
-          val num = ss.head.num
-          if (!ss.forall(_.num == num)) return None
-          val (mn, mx) =
-            try {
-              if (num) (ss.minBy(s => BigDecimal(s.min)).min,
-                        ss.maxBy(s => BigDecimal(s.max)).max)
-              else (utf8Min(ss.map(_.min)), utf8Max(ss.map(_.max)))
-            } catch { case _: NumberFormatException => return None }
-          val nonNull =
-            if (gms.forall(_.nullCounts.contains(c)))
-              Some(rows - gms.map(_.nullCounts(c)).sum)
-            else None
-          val sum =
-            if (gms.forall(_.sums.contains(c)))
-              try Some(gms.map(m => BigInt(m.sums(c))).sum)
-              catch { case _: NumberFormatException => None }
-            else None
-          c -> ColMetaProfile(num, mn, mx, rows, nonNull, sum)
-        }.toMap
-        (gv, gNums, rows, profiles)
-    }
-    Some(groups)
+    Some(data.groupBy(m => groupCols.map(g => m.stats(g).min)).toSeq.map {
+      case (gv, gms) =>
+        (gv, gNums, gms.map(_.rows).sum, aggCols.map(c =>
+          c -> foldColumn(wholeCommits(gms), c).profile.getOrElse(return None)).toMap)
+    })
   }
 
-  /** Shared FULL/BOUNDARY/EXCLUDED classification behind [[countWhere]]
-    * and [[statsAggregateWhere]]: returns the commit list it classified
-    * (one capture — callers scan through the same snapshot) and, per
-    * file, (manifest, path, class 0/1/2, exact rows if known). Exact
-    * per-file rows come from `frows=` records ([[compactClustered]]
+  /** The data commits (rows > 0) of a mask-free effective log — what
+    * the quiet whole-table profiles fold; None on an empty, masked or
+    * data-less log. */
+  private def maskFreeData(): Option[Seq[Manifest]] = {
+    val ms = resolvedCommits().map(_._2)
+    if (ms.exists(_.hidesRows)) None
+    else Some(ms.filter(_.rows > 0)).filter(_.nonEmpty)
+  }
+
+  /** The loud twin of [[maskFreeData]] behind [[statsAggregate]] and
+    * [[momentsAggregate]]: masked or data-less logs are REFUSED. */
+  private def profiledData(api: String): Seq[Manifest] = {
+    val ms = resolvedCommits().map(_._2)
+    require(!ms.exists(_.hidesRows),
+      s"$api on a log with row-hiding masks (deleteWhere / " +
+        "overwritePartitions) would aggregate hidden rows; compact first")
+    val data = ms.filter(_.rows > 0)
+    require(data.nonEmpty, s"$api: no data commits")
+    data
+  }
+
+  /** THE FILE CLASSIFICATION behind every pruned read and classified
+    * aggregate ([[readSnapshotWhere]], [[skippingAuditWhere]],
+    * [[countWhere]], [[statsAggregateWhere]], [[momentsAggregateWhere]],
+    * [[countFromMetadata]], [[filteredMetaProfile]]): per file of `cs`,
+    * (manifest, path, Excluded/Boundary/Full, exact rows if known).
+    * Exact per-file rows come from `frows=` records ([[compactClustered]]
     * bases) or the commit total when it staged a single directory.
     * The mask-free suffix rule: a file's rows can be hidden only by
     * masks in STRICTLY LATER commits ([[dataOf]]'s replacesAfter /
@@ -1040,30 +827,57 @@ final case class TxParquetSink(dir: String) extends WarehouseSink {
     * commits at or after the last row-hiding commit are credit-
     * eligible. `fullAlso` lets callers add eligibility conditions. */
   private def classifyFiles(spark: SparkSession, predicateSql: String,
-      fullAlso: (Manifest, String) => Boolean = (_, _) => true)
-      : (Seq[(Long, Manifest)], Seq[(Manifest, String, Int, Option[Long])]) = {
+      cs: Seq[(Long, Manifest)] = resolvedCommits(),
+      fullAlso: (Manifest, String) => Boolean = (_, _) => true): Seq[Classed] = {
     val (cons, complete) = parsePruningConstraintsFull(spark, predicateSql)
-    val cs = resolvedCommits()
-    val lastMask = cs.lastIndexWhere { case (_, m) =>
-      m.deletePred.nonEmpty || m.replaceCols.nonEmpty }
-    val classed = cs.zipWithIndex.flatMap { case ((_, m), i) =>
+    val lastMask = cs.lastIndexWhere(_._2.hidesRows)
+    cs.zipWithIndex.flatMap { case ((_, m), i) =>
       m.files.map { f =>
         val rowsKnown = m.fileRows.get(f)
           .orElse(if (m.files.size == 1) Some(m.rows) else None)
         val cls =
-          if (!cons.forall(consKeeps(m, f, _))) 0
+          if (!cons.forall(consKeeps(m, f, _))) Excluded
           else if (complete && cons.nonEmpty && i >= lastMask &&
             rowsKnown.isDefined &&
             cons.forall(c => consFull(m, f, c)) &&
             cons.forall(c => m.nullCounts.get(colOfCons(c)).contains(0L)) &&
             fullAlso(m, f))
-            2
-          else 1
+            Full
+          else Boundary
         (m, f, cls, rowsKnown)
       }
     }
-    (cs, classed)
   }
+
+  /** [[classifyFiles]] plus the ONE boundary scan every classified
+    * aggregate shares: only Boundary files are read, under the full
+    * predicate, and aggregated in one job — the row count `__n` plus
+    * [[statsAggsFor]]' per-column records (min/max, non-null count,
+    * exact integral sum and sum of squares). None when no file is
+    * Boundary. */
+  private def classifiedScan(spark: SparkSession, predicateSql: String,
+      columns: Seq[String],
+      fullAlso: (Manifest, String) => Boolean = (_, _) => true)
+      : (Seq[Classed], Option[org.apache.spark.sql.Row]) = {
+    import org.apache.spark.sql.functions.{count, expr, lit}
+    val cs = resolvedCommits()
+    val classed = classifyFiles(spark, predicateSql, cs, fullAlso)
+    val boundary = classed.collect { case (_, f, Boundary, _) => f }.toSet
+    val row = dataOf(spark, cs, keepFile = (_, f) => boundary(f)).map { df =>
+      val aggs = count(lit(1)).as("__n") +: statsAggsFor(df.schema, columns)
+      df.where(expr(predicateSql)).agg(aggs.head, aggs.tail: _*).head()
+    }
+    (classed, row)
+  }
+
+  /** The boundary scan's matching rows, and one of its per-column
+    * [[statsAggsFor]] records (`min`, `max`, `sum`, `sumsq`). */
+  private def rowsOf(boundary: Option[org.apache.spark.sql.Row]): Long =
+    boundary.map(_.getAs[Long]("__n")).getOrElse(0L)
+
+  private def scanned(boundary: Option[org.apache.spark.sql.Row],
+      rec: String, c: String): Option[String] =
+    boundary.flatMap(r => Option(r.getAs[String](s"__${rec}_$c")))
 
   private def colOfCons(c: PruneCons): String = c match {
     case r: RangeCons => r.col
@@ -1078,18 +892,33 @@ final case class TxParquetSink(dir: String) extends WarehouseSink {
       column: String): Option[ColStats] =
     m.fileStats.get(f).flatMap(_.get(column)).orElse(m.stats.get(column))
 
+  /** The per-file bloom probe: file-level blooms ([[compactRanged]])
+    * take precedence, then commit-level, then conservative keep. False
+    * positives only add reads; false negatives cannot occur. */
+  private def pointKeeps(m: Manifest, f: String, column: String,
+      value: String): Boolean =
+    m.fileBlooms.get(f).flatMap(_.get(column)).orElse(m.blooms.get(column))
+      .forall(b => mightContain(b, value))
+
   private def consKeeps(m: Manifest, f: String, c: PruneCons): Boolean = c match {
     case RangeCons(col, lo, hi, litNum, _, _) =>
       statsFor(m, f, col).forall(s =>
         s.num != litNum || !boundDisjoint(s, lo, hi))
     case EqCons(col, v, litNum, litIntegral) =>
-      val statsOk = statsFor(m, f, col).forall(s =>
+      val stats = statsFor(m, f, col)
+      val statsOk = stats.forall(s =>
         s.num != litNum || !boundDisjoint(s, Some(v), Some(v)))
-      // bloom probes only under a PROVEN cast-form match (see scaladoc)
-      val bloomSafe = statsFor(m, f, col).exists(s =>
-        if (litNum) litIntegral && s.num &&
-          integralForm(s.min) && integralForm(s.max)
-        else !s.num)
+      // bloom probes only under a PROVEN cast-form match (see
+      // readSnapshotWhere): from the stats, else the recorded schema
+      val bloomSafe = stats match {
+        case Some(s) =>
+          if (litNum) litIntegral && s.num &&
+            integralForm(s.min) && integralForm(s.max)
+          else !s.num
+        case None => m.fieldTypes.get(col).exists(t =>
+          if (litNum) litIntegral && integralType(t)
+          else t == org.apache.spark.sql.types.StringType)
+      }
       statsOk && (!bloomSafe || pointKeeps(m, f, col, v))
     case InCons(col, vs, litNum, litIntegral) =>
       vs.isEmpty || vs.exists(v =>
@@ -1129,24 +958,11 @@ final case class TxParquetSink(dir: String) extends WarehouseSink {
     case NotNullCons(_) => true
   }
 
-  /** One-sided [[rangeDisjoint]]: a missing bound never excludes;
-    * unparseable numeric literals conservatively keep. */
-  private def boundDisjoint(s: ColStats, lo: Option[String],
-      hi: Option[String]): Boolean =
-    if (s.num)
-      (try lo.exists(l => BigDecimal(s.max) < BigDecimal(l)) ||
-           hi.exists(h => BigDecimal(s.min) > BigDecimal(h))
-       catch { case _: NumberFormatException => false })
-    else lo.exists(utf8Cmp(s.max, _) < 0) || hi.exists(utf8Cmp(s.min, _) > 0)
-
-  private def parsePruningConstraints(spark: SparkSession,
-      predicateSql: String): Seq[PruneCons] =
-    parsePruningConstraintsFull(spark, predicateSql)._1
-
-  /** [[parsePruningConstraints]] plus a COMPLETENESS flag: true iff
-    * EVERY top-level conjunct yielded a constraint — the precondition
-    * for crediting Full files in [[countWhere]] (an unrecognized
-    * conjunct could reject rows a "fully satisfied" file would count). */
+  /** The predicate's pruning constraints plus a COMPLETENESS flag:
+    * true iff EVERY top-level conjunct yielded a constraint — the
+    * precondition for crediting Full files in [[classifyFiles]] (an
+    * unrecognized conjunct could reject rows a "fully satisfied" file
+    * would count). */
   private def parsePruningConstraintsFull(spark: SparkSession,
       predicateSql: String): (Seq[PruneCons], Boolean) = {
     import org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
@@ -1168,8 +984,7 @@ final case class TxParquetSink(dir: String) extends WarehouseSink {
       l.dataType match {
         case _ if l.value == null => None
         case StringType => Some((l.value.toString, false, false))
-        case ByteType | ShortType | IntegerType | LongType =>
-          Some((l.value.toString, true, true))
+        case t if integralType(t) => Some((l.value.toString, true, true))
         case _: NumericType => Some((l.value.toString, true, false))
         case _ => None
       }
@@ -1219,61 +1034,38 @@ final case class TxParquetSink(dir: String) extends WarehouseSink {
     (opts.flatten, opts.forall(_.isDefined))
   }
 
-  /** Skipping observability: (data directories in the effective
-    * snapshot, directories a [[readSnapshotRange]] of this range would
-    * skip). Driver-side metadata only. */
-  def skippingAudit(column: String, lo: String, hi: String): (Int, Int) = {
-    val ms = resolvedCommits().map(_._2).filter(_.files.nonEmpty)
-    val skipped = ms
-      .map(m => m.files.count(f => !rangeKeeps(m, f, column, lo, hi))).sum
-    (ms.map(_.files.size).sum, skipped)
-  }
-
-  /** One read-back profile pass shared by every stats-recording write:
-    * per-column min/max (cast-to-string domain), null counts, and —
-    * for INTEGRAL columns, the domain where addition is exact and
-    * associative — the column SUM and SUM OF SQUARES (the second
-    * moment: a long² always fits decimal(38,0), so the per-commit
-    * square-sum is exact; an overflowing total nulls out and is simply
-    * not recorded — the advisory posture), with the [[finiteNumeric]]
-    * admission rule on the extremes. */
-  /** The per-column stats aggregates ([[profileStatsOf]]'s pass), as
-    * named columns so they can run EITHER as a stand-alone aggregate
-    * over a staged read-back OR fused into the staging write's observe
-    * pass ([[stageObserved]]) — the optimization-round move that cut
-    * one full read per stats-recording commit. */
+  /** The per-column stats aggregates, as named columns so they run
+    * fused into a staging write's observe pass ([[stageObserved]] —
+    * the optimization-round move that cut one full read per
+    * stats-recording commit), per segment of a clustered rewrite
+    * ([[compactClustered]]), or over a boundary scan
+    * ([[classifiedScan]]): per-column min/max (cast-to-string domain),
+    * non-null counts, and — for INTEGRAL columns, the domain where
+    * addition is exact and associative — the column SUM and SUM OF
+    * SQUARES (the second moment: a long² always fits decimal(38,0)). */
   private def statsAggsFor(schema: org.apache.spark.sql.types.StructType,
       statsCols: Seq[String]): Seq[org.apache.spark.sql.Column] = {
-    import org.apache.spark.sql.functions.{col, count, max, min}
-    import org.apache.spark.sql.types._
-    val integral = schema.fields.map(f => f.name -> (f.dataType match {
-      case ByteType | ShortType | IntegerType | LongType => true
-      case _ => false
-    })).toMap
+    import org.apache.spark.sql.functions.{col, count, lit, max, min, try_sum}
+    val integral = schema.fields.map(f => f.name -> integralType(f.dataType)).toMap
     // sums fold in decimal(38,0) via try_sum: exact up to 38 digits
     // (a wrapped int64 sum would be recorded as truth otherwise), and
     // an overflow NULLS OUT under ANSI mode too instead of throwing —
     // stats recording is advisory and must never fail the commit
+    def integralSum(c: String, term: org.apache.spark.sql.Column) =
+      if (integral.getOrElse(c, false)) try_sum(term).cast("string")
+      else lit(null).cast("string")
     statsCols.flatMap(c => Seq(
       min(col(c)).cast("string").as(s"__min_$c"),
       max(col(c)).cast("string").as(s"__max_$c"),
       count(col(c)).as(s"__cnt_$c"),
-      (if (integral.getOrElse(c, false))
-        org.apache.spark.sql.functions.try_sum(col(c).cast("decimal(38,0)"))
-          .cast("string")
-       else org.apache.spark.sql.functions.lit(null).cast("string"))
-        .as(s"__sum_$c"),
-      (if (integral.getOrElse(c, false))
-        org.apache.spark.sql.functions.try_sum(
-          col(c).cast("decimal(19,0)") * col(c).cast("decimal(19,0)"))
-          .cast("string")
-       else org.apache.spark.sql.functions.lit(null).cast("string"))
+      integralSum(c, col(c).cast("decimal(38,0)")).as(s"__sum_$c"),
+      integralSum(c, col(c).cast("decimal(19,0)") * col(c).cast("decimal(19,0)"))
         .as(s"__sumsq_$c")))
   }
 
   /** Decode [[statsAggsFor]]'s aliases back into the manifest records,
     * from any alias→value lookup (an agg Row or an observe metrics
-    * map). */
+    * map), with the [[finiteNumeric]] admission rule on the extremes. */
   private def decodeStatsMetrics(lookup: String => Any, n: Long,
       statsCols: Seq[String],
       schema: org.apache.spark.sql.types.StructType)
@@ -1293,26 +1085,11 @@ final case class TxParquetSink(dir: String) extends WarehouseSink {
     }.toMap
     val nc = statsCols.map(c =>
       c -> (n - lookup(s"__cnt_$c").asInstanceOf[Long])).toMap
-    val sm = statsCols.flatMap(c =>
-      Option(str(s"__sum_$c")).map(v =>
-        c -> BigDecimal(v).toBigInt.toString)).toMap
-    val sq = statsCols.flatMap(c =>
-      // render as a plain integer string (decimal cast may print a
-      // scale); BigDecimal normalizes "123" and "123.000" alike
-      Option(str(s"__sumsq_$c")).map(v =>
-        c -> BigDecimal(v).toBigInt.toString)).toMap
-    (st, nc, sm, sq)
-  }
-
-  private def profileStatsOf(stagedDf: DataFrame, n: Long,
-      statsCols: Seq[String])
-      : (Map[String, ColStats], Map[String, Long], Map[String, String],
-         Map[String, String]) = {
-    if (statsCols.isEmpty)
-      return (Map.empty, Map.empty, Map.empty, Map.empty)
-    val aggs = statsAggsFor(stagedDf.schema, statsCols)
-    val r = stagedDf.agg(aggs.head, aggs.tail: _*).head()
-    decodeStatsMetrics(k => r.getAs[Any](k), n, statsCols, stagedDf.schema)
+    // render as a plain integer string (decimal cast may print a
+    // scale); BigDecimal normalizes "123" and "123.000" alike
+    def exact(k: String) = statsCols.flatMap(c =>
+      Option(str(s"__${k}_$c")).map(v => c -> exactSum(v).toString)).toMap
+    (st, nc, exact("sum"), exact("sumsq"))
   }
 
   /** METADATA-ONLY AGGREGATE — `COUNT(*)` / `MIN` / `MAX` answered from
@@ -1338,38 +1115,23 @@ final case class TxParquetSink(dir: String) extends WarehouseSink {
     *  - every data commit must carry stats for the column (a non-finite
     *    float extremum is dropped at append time — [[finiteNumeric]] —
     *    so its absence here surfaces as an error, not a wrong MIN);
-    *  - numeric columns fold by value ([[BigDecimal]]), strings
-    *    lexicographically, matching [[rangeKeeps]]' comparison rules. */
+    *  - numeric columns fold by value ([[BigDecimal]]), strings in
+    *    engine collation ([[utf8Cmp]]), matching the pruning rule's
+    *    comparisons ([[consKeeps]]). */
   def statsAggregate(spark: SparkSession, columns: Seq[String]): DataFrame = {
     import spark.implicits._
-    val ms = resolvedCommits().map(_._2)
-    require(ms.forall(m => m.deletePred.isEmpty && m.replaceCols.isEmpty),
-      "statsAggregate on a log with row-hiding masks (deleteWhere / " +
-        "overwritePartitions) would aggregate hidden rows; compact first")
-    val data = ms.filter(_.rows > 0)
-    require(data.nonEmpty, "statsAggregate: no data commits")
-    val nRows = data.map(_.rows).sum
+    val data = profiledData("statsAggregate")
     columns.sorted.map { c =>
-      val ss = data.map(m => m.stats.getOrElse(c,
+      if (!data.forall(_.stats.contains(c)))
         throw new IllegalArgumentException(
           s"statsAggregate('$c'): a data commit lacks min/max stats " +
             "(not profiled at append, or a non-finite extremum was " +
-            "dropped) — re-ingest with appendWithStats or read the data")))
-      val num = ss.head.num
-      require(ss.forall(_.num == num),
+            "dropped) — re-ingest with appendWithStats or read the data")
+      val fold = foldColumn(wholeCommits(data), c)
+      require(fold.domain.isDefined,
         s"statsAggregate('$c'): commits disagree on the column's type")
-      val (mn, mx) =
-        if (num) (ss.minBy(s => BigDecimal(s.min)).min,
-                  ss.maxBy(s => BigDecimal(s.max)).max)
-        // engine collation, not Java's: [[utf8Cmp]] scaladoc
-        else (utf8Min(ss.map(_.min)), utf8Max(ss.map(_.max)))
-      // exact SUM — recorded only for integral columns; NULL whenever
-      // any commit lacks the record (the advisory-metadata posture)
-      val sm =
-        if (data.forall(_.sums.contains(c)))
-          data.map(m => BigDecimal(m.sums(c))).sum.toBigInt.toString
-        else null
-      (c, nRows, mn, mx, sm)
+      val (mn, mx) = fold.extremes.get
+      (c, fold.rows, mn, mx, fold.sum.map(_.toString).orNull)
     }.toDF("column", "n_rows", "min_value", "max_value", "sum_value")
   }
 
@@ -1395,27 +1157,26 @@ final case class TxParquetSink(dir: String) extends WarehouseSink {
     * commit lacks the records — e.g. after a compaction base, which
     * drops commit-level sums: re-profile after OPTIMIZE. */
   def momentsAggregate(spark: SparkSession, columns: Seq[String]): DataFrame = {
+    val data = profiledData("momentsAggregate")
+    momentsFrame(spark, columns.sorted.map { c =>
+      val fold = foldColumn(wholeCommits(data), c)
+      (c, fold.rows,
+        for (nn <- fold.nonNull; sm <- fold.sum; sq <- fold.sumsq) yield (nn, sm, sq))
+    })
+  }
+
+  /** The moments output shape: (column, rows, non-null count, Σx, Σx²)
+    * → one row with the exact variance numerator, all-NULL moments
+    * when the ingredients are unknown. */
+  private def momentsFrame(spark: SparkSession,
+      rows: Seq[(String, Long, Option[(Long, BigInt, BigInt)])]): DataFrame = {
     import spark.implicits._
-    val ms = resolvedCommits().map(_._2)
-    require(ms.forall(m => m.deletePred.isEmpty && m.replaceCols.isEmpty),
-      "momentsAggregate on a log with row-hiding masks (deleteWhere / " +
-        "overwritePartitions) would aggregate hidden rows; compact first")
-    val data = ms.filter(_.rows > 0)
-    require(data.nonEmpty, "momentsAggregate: no data commits")
-    val nRows = data.map(_.rows).sum
-    columns.sorted.map { c =>
-      val have = data.forall(m =>
-        m.sums.contains(c) && m.sumsqs.contains(c) && m.nullCounts.contains(c))
-      if (!have) (c, nRows, null: String, null: String, null: String,
-        null: String)
-      else {
-        val nVals = nRows - data.map(_.nullCounts(c)).sum
-        val sm = data.map(m => BigInt(m.sums(c))).sum
-        val sq = data.map(m => BigInt(m.sumsqs(c))).sum
-        val varNum = BigInt(nVals) * sq - sm * sm
-        (c, nRows, nVals.toString, sm.toString, sq.toString,
-          varNum.toString)
-      }
+    rows.map {
+      case (c, n, Some((nVals, sm, sq))) =>
+        (c, n, nVals.toString, sm.toString, sq.toString,
+          (BigInt(nVals) * sq - sm * sm).toString)
+      case (c, n, None) =>
+        (c, n, null: String, null: String, null: String, null: String)
     }.toDF("column", "n_rows", "n_vals", "sum_value", "sumsq_value",
       "var_num_value")
   }
@@ -1699,8 +1460,8 @@ final case class TxParquetSink(dir: String) extends WarehouseSink {
     * bounded by the source batch; unmatched target rows are never
     * shuffled or rewritten. A
     * single-column key prunes the target read through the manifest
-    * bloom filters ([[readSnapshotPointAny]]'s superset contract —
-    * false positives only add join rows, false negatives impossible),
+    * bloom filters ([[pointKeeps]] — false positives only add join
+    * rows, false negatives impossible),
     * so the scan touches only commits the source keys landed in. The
     * manifest grows by O(batch keys) replaced tuples — bounded by the
     * BATCH, never the table. Concurrency is version-relative like
@@ -1979,8 +1740,7 @@ final case class TxParquetSink(dir: String) extends WarehouseSink {
     * across commits and a lost compact race is harmless (the next call
     * re-checks). Returns the base version when it compacted. */
   def maintainIfNeeded(spark: SparkSession, maskBudget: Int = 8): Option[Long] = {
-    val masked = resolvedCommits().count { case (_, m) =>
-      m.deletePred.nonEmpty || m.replaceCols.nonEmpty }
+    val masked = resolvedCommits().count(_._2.hidesRows)
     if (masked > maskBudget) Some(compact(spark)) else None
   }
 
@@ -2103,30 +1863,6 @@ final case class TxParquetSink(dir: String) extends WarehouseSink {
       deletes.toSeq ++ inserts.toSeq
     }
     frames.reduceOption(_.unionByName(_, allowMissingColumns = true))
-  }
-
-  /** DYNAMIC FILE PRUNING point read — [[readSnapshotPoint]] for a SET
-    * of probe values: keep a file iff its bloom might contain ANY of
-    * them. This is the fact-side half of Delta's dynamic file pruning:
-    * the caller collects the join keys of a FILTERED dimension (bounded
-    * by the dimension's selectivity — the same bounded-domain argument
-    * as the broadcast join it accompanies) and the fact scan drops
-    * every commit none of those keys landed in, decided on the driver
-    * before any task launches. Same superset contract as the
-    * single-value read: blooms never produce false negatives, commits
-    * without a bloom are always read, and the caller's real join/filter
-    * applies unchanged. */
-  def readSnapshotPointAny(spark: SparkSession, column: String,
-      values: Seq[String]): Option[DataFrame] =
-    dataOf(spark, resolvedCommits(),
-      keepFile = (m, f) => values.exists(v => pointKeeps(m, f, column, v)))
-
-  /** [[pointSkippingAudit]] for the any-of probe: (files, skipped). */
-  def pointSkippingAuditAny(column: String, values: Seq[String]): (Int, Int) = {
-    val ms = resolvedCommits().map(_._2).filter(_.files.nonEmpty)
-    val skipped = ms.map(m => m.files.count(f =>
-      !values.exists(v => pointKeeps(m, f, column, v)))).sum
-    (ms.map(_.files.size).sum, skipped)
   }
 
   /** SHALLOW CLONE — Delta's CLONE move: publish a new table whose log
@@ -2651,60 +2387,12 @@ final case class TxParquetSink(dir: String) extends WarehouseSink {
       maxAttempts: Int = 20): Long =
     compactWith(spark, identity, beforePublish, maxAttempts)
 
-  /** CLUSTERED compaction — `OPTIMIZE ... ZORDER BY (x, y)` on this
-    * log: the base rewrite is laid out z-clustered
-    * ([[ZOrder.zValue]] interleave, range-partitioned then sorted),
-    * so each base file covers a compact z-range and a 2-D slab
-    * predicate prunes most files via parquet min/max stats — the
-    * read-layout maintenance pass composed with the commit protocol
-    * (same races, same time travel; only the staged layout differs).
-    * Spec pins the physical property directly: per-file z-ranges are
-    * pairwise DISJOINT (range partitioning guarantees it). */
-  def compactZOrdered(spark: SparkSession, x: String, y: String,
-      bits: Int = 16, numFiles: Int = 8,
-      beforePublish: () => Unit = () => (),
-      maxAttempts: Int = 20): Long =
-    compactWith(spark, df => {
-      import org.apache.spark.sql.functions.col
-      // EXPLICIT file count: an unsized repartitionByRange of a small
-      // shuffle gets AQE-coalesced back to one partition and the
-      // clustering evaporates (the TextOps.shingleSet lesson); a
-      // deployment sizes this by target file bytes.
-      val zk = ZOrder.zValue(col(x), col(y), bits)
-      df.withColumn("__zk", zk)
-        .repartitionByRange(numFiles, col("__zk"))
-        .sortWithinPartitions("__zk")
-        .drop("__zk")
-    }, beforePublish, maxAttempts)
-
-  /** CLUSTERED compaction by HILBERT key — [[compactZOrdered]] with
-    * the continuous curve ([[Hilbert]]): same commit protocol, same
-    * per-file-disjoint-range guarantee (range partitioning on the
-    * key), but each file's curve segment is CONTIGUOUS IN SPACE, so
-    * its (x, y) bounding box is tighter and a 2-D box predicate
-    * prunes more files than under the Morton interleave — the
-    * measured property the spec pins (total per-file bounding-box
-    * area strictly smaller than the z-clustered rewrite of the same
-    * data). The upgrade OPTIMIZE implementations make when box-query
-    * file counts, not key math, are the cost. */
-  def compactHilbert(spark: SparkSession, x: String, y: String,
-      bits: Int = 16, numFiles: Int = 8,
-      beforePublish: () => Unit = () => (),
-      maxAttempts: Int = 20): Long =
-    compactWith(spark, df => {
-      import org.apache.spark.sql.functions.col
-      Hilbert.withHilbert(df, col(x), col(y), "__hk", bits)
-        .repartitionByRange(numFiles, col("__hk"))
-        .sortWithinPartitions("__hk")
-        .drop("__hk")
-    }, beforePublish, maxAttempts)
-
   /** RANGE-BUCKETED compaction — the maintenance pass that makes data
     * skipping SURVIVE compaction: [[compact]]'s single base directory
     * carries whole-table stats (useless for pruning — they span
     * everything); this one range-partitions the snapshot on `column`
     * into `numBuckets` directories and records PER-FILE min/max in the
-    * base manifest, so a [[readSnapshotRange]] after compaction prunes
+    * base manifest, so a [[readSnapshotWhere]] after compaction prunes
     * buckets exactly as it pruned the original commits — Delta's
     * OPTIMIZE-preserves-stats behavior. Same optimistic protocol,
     * races, and time travel as [[compact]]; the bucket column is
@@ -2735,7 +2423,7 @@ final case class TxParquetSink(dir: String) extends WarehouseSink {
       // what landed against it
       val df = dataOf(spark, effective(snap)).get
       // explicit bucket count: an unsized repartitionByRange gets
-      // AQE-coalesced and the bucketing evaporates (the zOrdered lesson)
+      // AQE-coalesced and the bucketing evaporates (the TextOps.shingleSet lesson)
       val rel = "data/tx-" + java.util.UUID.randomUUID().toString
       val stagedRoot = root.resolve(rel)
       val n = runObserved(
@@ -2805,13 +2493,17 @@ final case class TxParquetSink(dir: String) extends WarehouseSink {
     -1L // unreachable
   }
 
-  /** CLUSTERED compaction WITH PER-FILE METADATA — [[compactZOrdered]] /
-    * [[compactHilbert]]'s layout fused with [[compactRanged]]'s
-    * bucket-directory mechanics: the base is rewritten into
-    * `numBuckets` range-disjoint segments of the chosen space-filling
-    * curve, and the manifest records each segment's (x, y) min/max
-    * (`fstat=`), exact row count (`frows=`), and the commit-level null
-    * counts — so a 2-D box predicate auto-prunes through
+  /** CLUSTERED compaction WITH PER-FILE METADATA — `OPTIMIZE ...
+    * ZORDER BY (x, y)` on this log, with [[compactRanged]]'s
+    * bucket-directory mechanics: the snapshot is keyed by the chosen
+    * space-filling curve (`curve = "zorder"`: the [[ZOrder.zValue]]
+    * interleave; `"hilbert"`: the continuous [[Hilbert]] curve, whose
+    * segments are contiguous in space and so have tighter (x, y)
+    * boxes), range-partitioned on that key into `numBuckets`
+    * pairwise-disjoint segments and sorted within each. The manifest
+    * records each segment's (x, y) min/max (`fstat=`), exact row count
+    * (`frows=`) and sum (`fsum=`), plus their commit-level folds — so
+    * a 2-D box predicate auto-prunes through
     * [[readSnapshotWhere]] and [[countWhere]] credits interior
     * segments without reading them. Hilbert locality keeps per-file
     * boxes tight (the measured HilbertSpec claim), which is what makes
@@ -2822,8 +2514,7 @@ final case class TxParquetSink(dir: String) extends WarehouseSink {
       curve: String = "hilbert", bits: Int = 16, numBuckets: Int = 8,
       beforePublish: () => Unit = () => (),
       maxAttempts: Int = 20): Long = {
-    import org.apache.spark.sql.functions.{col, min, max, count, lit, spark_partition_id}
-    import org.apache.spark.sql.types.NumericType
+    import org.apache.spark.sql.functions.{col, count, lit, spark_partition_id}
     var attempts = 0
     while (true) {
       attempts += 1
@@ -2851,115 +2542,45 @@ final case class TxParquetSink(dir: String) extends WarehouseSink {
         Seq(count(lit(1)).as("__n")))(
         _.write.mode("error").partitionBy("__bucket")
           .parquet(stagedRoot.toString))("__n").asInstanceOf[Long]
-      // audit + per-segment stats + exact per-segment rows in ONE
-      // read-back pass (partition discovery restores __bucket)
-      val back = spark.read.parquet(stagedRoot.toString)
-      def isIntegral(c: String) = df0.schema.fields.find(_.name == c)
-        .exists(_.dataType match {
-          case org.apache.spark.sql.types.ByteType |
-               org.apache.spark.sql.types.ShortType |
-               org.apache.spark.sql.types.IntegerType |
-               org.apache.spark.sql.types.LongType => true
-          case _ => false
-        })
-      // try_sum in decimal(38,0): exact (never a wrapped int64) and
-      // advisory under ANSI mode — [[profileStatsOf]]'s discipline
-      def sumOf(c: String, as: String) =
-        (if (isIntegral(c))
-          org.apache.spark.sql.functions.try_sum(col(c).cast("decimal(38,0)"))
-            .cast("string")
-         else lit(null).cast("string")).as(as)
-      def sumsqOf(c: String, as: String) =
-        (if (isIntegral(c)) org.apache.spark.sql.functions.try_sum(
-          col(c).cast("decimal(19,0)") * col(c).cast("decimal(19,0)"))
-          .cast("string")
-         else lit(null).cast("string")).as(as)
-      val statRows = back.groupBy("__bucket")
-        .agg(count(lit(1)).as("__n"),
-          count(col(x)).as("__nx"), count(col(y)).as("__ny"),
-          min(col(x)).cast("string").as("__minx"),
-          max(col(x)).cast("string").as("__maxx"),
-          min(col(y)).cast("string").as("__miny"),
-          max(col(y)).cast("string").as("__maxy"),
-          sumOf(x, "__sumx"), sumOf(y, "__sumy"),
-          sumsqOf(x, "__sumsqx"), sumsqOf(y, "__sumsqy"))
-        .collect()
-      val audited = statRows.map(_.getAs[Long]("__n")).sum
+      // audit + per-segment records in ONE read-back pass (partition
+      // discovery restores __bucket): each segment decodes into a
+      // single-file manifest, and the commit-level records are the
+      // manifest fold over the segments — so statsAggregate and
+      // momentsAggregate keep answering AFTER this OPTIMIZE
+      val segs = spark.read.parquet(stagedRoot.toString).groupBy("__bucket")
+        .agg(count(lit(1)).as("__n"), statsAggsFor(df0.schema, Seq(x, y)): _*)
+        .collect().toSeq.map { r =>
+          val bn = r.getAs[Long]("__n")
+          val (st, nc, sm, sq) =
+            decodeStatsMetrics(r.getAs[Any](_), bn, Seq(x, y), df0.schema)
+          Manifest(bn, Seq(s"$rel/__bucket=${r.getAs[Any]("__bucket")}"),
+            stats = st, nullCounts = nc, sums = sm, sumsqs = sq)
+        }
+      val audited = segs.map(_.rows).sum
       if (audited != n) {
         deleteRecursively(stagedRoot)
         throw new IllegalStateException(
           s"compactClustered stage audit failed: wrote $audited rows, expected $n")
       }
-      def isNum(c: String) = df0.schema.fields.find(_.name == c)
-        .exists(_.dataType.isInstanceOf[NumericType])
-      val (numX, numY) = (isNum(x), isNum(y))
-      def fileOf(r: org.apache.spark.sql.Row) =
-        s"$rel/__bucket=${r.getAs[Any]("__bucket")}"
-      val files = statRows.map(fileOf).toSeq
-      val fileStats = statRows.flatMap { r =>
-        def statOf(c: String, num: Boolean, mnK: String, mxK: String) = {
-          val (mn, mx) = (r.getAs[String](mnK), r.getAs[String](mxK))
-          if (mn == null || mx == null || !finiteNumeric(num, mn, mx)) None
-          else Some(c -> ColStats(num, mn, mx))
-        }
-        val m = (statOf(x, numX, "__minx", "__maxx").toSeq ++
-          statOf(y, numY, "__miny", "__maxy").toSeq).toMap
-        if (m.isEmpty) None else Some(fileOf(r) -> m)
-      }.toMap
-      val fileRows = statRows.map(r => fileOf(r) -> r.getAs[Long]("__n")).toMap
-      val nullCounts = Map(
-        x -> (n - statRows.map(_.getAs[Long]("__nx")).sum),
-        y -> (n - statRows.map(_.getAs[Long]("__ny")).sum))
-      val fileSums = statRows.flatMap { r =>
-        val m = Seq(x -> Option(r.getAs[String]("__sumx")),
-          y -> Option(r.getAs[String]("__sumy")))
-          .collect { case (c, Some(v)) => c -> BigDecimal(v).toBigInt.toString }
-          .toMap
-        if (m.isEmpty) None else Some(fileOf(r) -> m)
-      }.toMap
-      // commit-level folds so the zero-I/O statsAggregate keeps
-      // answering AFTER this OPTIMIZE (plain compaction drops stats)
-      val sums = Seq(x, y).flatMap { c =>
-        val parts = statRows.map(r =>
-          Option(r.getAs[String](if (c == x) "__sumx" else "__sumy")))
-        if (parts.forall(_.isDefined))
-          Some(c -> parts.flatten.map(BigDecimal(_)).sum.toBigInt.toString)
-        else None
-      }.toMap
-      // second-moment credit too, so momentsAggregate (exact AVG/VAR)
-      // also survives this OPTIMIZE — the same fold, squared domain
-      val sumsqs = Seq(x, y).flatMap { c =>
-        val parts = statRows.map(r =>
-          Option(r.getAs[String](if (c == x) "__sumsqx" else "__sumsqy")))
-        if (parts.forall(_.isDefined))
-          Some(c -> parts.flatten.map(BigDecimal(_)).sum.toBigInt.toString)
-        else None
-      }.toMap
-      val commitStats = Seq(x -> (numX, "__minx", "__maxx"),
-        y -> (numY, "__miny", "__maxy")).flatMap { case (c, (num, mnK, mxK)) =>
-        val mns = statRows.toSeq.map(r => Option(r.getAs[String](mnK)))
-        val mxs = statRows.toSeq.map(r => Option(r.getAs[String](mxK)))
-        if (mns.forall(_.isDefined) && mxs.forall(_.isDefined) &&
-          mns.flatten.forall(v => finiteNumeric(num, v, v)) &&
-          mxs.flatten.forall(v => finiteNumeric(num, v, v))) {
-          def pick(vs: Seq[String], wantMin: Boolean) =
-            if (num) { if (wantMin) vs.minBy(BigDecimal(_)) else vs.maxBy(BigDecimal(_)) }
-            else if (wantMin) TxParquetSink.utf8Min(vs)
-            else TxParquetSink.utf8Max(vs)
-          Some(c -> ColStats(num, pick(mns.flatten, wantMin = true),
-            pick(mxs.flatten, wantMin = false)))
-        } else None
-      }.toMap
+      def perFile[T](rec: Manifest => Map[String, T]) =
+        segs.filter(rec(_).nonEmpty).map(m => m.files.head -> rec(m)).toMap
+      val folds = Seq(x, y).map(c => c -> foldColumn(wholeCommits(segs), c))
       beforePublish()
       if (!Files.isDirectory(stagedRoot))
         throw new IllegalStateException(
           s"compactClustered: staged directory $rel vanished before publish " +
             "(vacuumed mid-commit?) — aborting")
       if (tryPublish(snap.last._1 + 1,
-          Manifest(n, files, base = true, stats = commitStats,
-            fileStats = fileStats, fileRows = fileRows,
-            nullCounts = nullCounts, sums = sums, fileSums = fileSums,
-            sumsqs = sumsqs, schema = Some(df0.schema.json)))) {
+          Manifest(n, segs.map(_.files.head), base = true,
+            stats = folds.flatMap { case (c, fo) =>
+              fo.profile.map(p => c -> ColStats(p.num, p.min, p.max)) }.toMap,
+            fileStats = perFile(_.stats),
+            fileRows = segs.map(m => m.files.head -> m.rows).toMap,
+            nullCounts = Seq(x, y).map(c => c -> segs.map(_.nullCounts(c)).sum).toMap,
+            sums = folds.flatMap { case (c, fo) => fo.sum.map(c -> _.toString) }.toMap,
+            fileSums = perFile(_.sums),
+            sumsqs = folds.flatMap { case (c, fo) => fo.sumsq.map(c -> _.toString) }.toMap,
+            schema = Some(df0.schema.json)))) {
         writeBasePointer(snap.last._1 + 1)
         return snap.last._1 + 1
       }
@@ -3052,8 +2673,7 @@ final case class TxParquetSink(dir: String) extends WarehouseSink {
     * through the tail (insert-only) or must stand down (Gupta &
     * Mumick: extremes are not self-maintainable under retraction). */
   def maskedBetween(fromV: Long, toV: Long): Boolean =
-    commits().exists { case (v, m) => v > fromV && v <= toV &&
-      (m.deletePred.nonEmpty || m.replaceCols.nonEmpty) }
+    commits().exists { case (v, m) => v > fromV && v <= toV && m.hidesRows }
 
   private def compactWith(spark: SparkSession,
       layout: DataFrame => DataFrame,
@@ -3265,6 +2885,79 @@ object TxParquetSink {
   final case class ColMetaProfile(num: Boolean, min: String, max: String,
       rows: Long, nonNull: Option[Long], sum: Option[BigInt])
 
+  /** [[TxParquetSink.classifyFiles]]' per-file classes. */
+  private final val Excluded = 0
+  private final val Boundary = 1
+  private final val Full = 2
+
+  /** One classified file: (manifest, path, class, exact rows if known). */
+  private type Classed = (Manifest, String, Int, Option[Long])
+
+  /** One unit a manifest fold credits: (manifest, file, rows) — `None`
+    * credits the whole commit, `Some(f)` one of its files. */
+  private type Credit = (Manifest, Option[String], Long)
+
+  private def wholeCommits(ms: Seq[Manifest]): Seq[Credit] =
+    ms.map(m => (m, None, m.rows))
+
+  /** The Full files of a classification, as fold units. */
+  private def credited(classed: Seq[Classed]): Seq[Credit] =
+    classed.collect { case (m, f, Full, Some(n)) => (m, Some(f), n) }
+
+  /** One column's manifest fold ([[foldColumn]]): total `rows`;
+    * `domain` (numeric or not) iff every unit carries min/max stats
+    * for the column and all agree on it; the non-null count, exact sum
+    * and exact sum of squares, each None unless every unit carries its
+    * record. */
+  private final class ColFold(val rows: Long, val domain: Option[Boolean],
+      stats: Seq[ColStats], val nonNull: Option[Long],
+      val sum: Option[BigInt], val sumsq: Option[BigInt]) {
+    /** (min, max) in the domain's order; throws NumberFormatException
+      * on an unparseable numeric stat (a legacy NaN record). */
+    lazy val extremes: Option[(String, String)] = domain.map(num =>
+      (minOf(stats.map(_.min), num), maxOf(stats.map(_.max), num)))
+    /** The quiet form: None unless stats fold cleanly. */
+    def profile: Option[ColMetaProfile] =
+      try for (num <- domain; (mn, mx) <- extremes)
+        yield ColMetaProfile(num, mn, mx, rows, nonNull, sum)
+      catch { case _: NumberFormatException => None }
+  }
+
+  /** THE MANIFEST FOLD — the one reduction behind every metadata
+    * aggregate and profile ([[TxParquetSink.statsAggregate]],
+    * [[TxParquetSink.momentsAggregate]], their `Where` forms'
+    * Full-file credit, [[TxParquetSink.columnMetaProfile]],
+    * [[TxParquetSink.filteredMetaProfile]],
+    * [[TxParquetSink.groupedMetaProfileMulti]], and
+    * [[TxParquetSink.compactClustered]]'s commit-level records): min/max
+    * in the BigDecimal or [[utf8Cmp]] domain, rows, non-null count,
+    * sum and sum of squares over the credited units. A file's stats
+    * and sums are its own per-file records when present; the
+    * commit-grain records (null counts, commit sums, sums of squares)
+    * credit a file only when it is its commit's only file. */
+  private def foldColumn(units: Seq[Credit], c: String): ColFold = {
+    def all[T](rec: (Manifest, Option[String]) => Option[T]): Option[Seq[T]] = {
+      val vs = units.map { case (m, f, _) => rec(m, f) }
+      if (vs.forall(_.isDefined)) Some(vs.flatten) else None
+    }
+    def whole(m: Manifest, f: Option[String]) = f.isEmpty || m.files.size == 1
+    def exact(vs: Seq[String]): Option[BigInt] =
+      try Some(vs.map(BigInt(_)).sum)
+      catch { case _: NumberFormatException => None }
+    val rows = units.map(_._3).sum
+    val stats = all((m, f) =>
+      f.flatMap(m.fileStats.get(_).flatMap(_.get(c))).orElse(m.stats.get(c)))
+    val domain = stats.flatMap(ss =>
+      ss.headOption.map(_.num).filter(num => ss.forall(_.num == num)))
+    val nulls = all((m, f) => if (whole(m, f)) m.nullCounts.get(c) else None)
+    val sum = all((m, f) => f.flatMap(m.fileSums.get(_).flatMap(_.get(c)))
+      .orElse(if (whole(m, f)) m.sums.get(c) else None)).flatMap(exact)
+    val sumsq = all((m, f) =>
+      if (whole(m, f)) m.sumsqs.get(c) else None).flatMap(exact)
+    new ColFold(rows, domain, stats.getOrElse(Nil),
+      nulls.map(rows - _.sum), sum, sumsq)
+  }
+
   /** [[TxParquetSink.mergeInto]]'s outcome: rows inserted (not
     * matched), updated (matched, update clause), deleted (matched,
     * delete clause). Matched rows no clause claimed are not counted —
@@ -3313,7 +3006,21 @@ object TxParquetSink {
       // replay-style commit loops, measured by JobProf in round 14).
       // Advisory: absent or divergent schemas fall back to
       // mergeSchema=true, the exact pre-round-14 read path.
-      schema: Option[String] = None)
+      schema: Option[String] = None) {
+    /** Does this commit hide rows of EARLIER commits (a predicate
+      * delete or a partition/key replace set)? */
+    private[etl] def hidesRows: Boolean =
+      deletePred.nonEmpty || replaceCols.nonEmpty
+    /** Top-level column types of the recorded `schema` (empty when
+      * absent or unreadable) — the bloom-safety proof for columns
+      * without stats. */
+    @transient private[etl] lazy val fieldTypes
+        : Map[String, org.apache.spark.sql.types.DataType] =
+      try schema.map(s => org.apache.spark.sql.types.DataType.fromJson(s)
+        .asInstanceOf[org.apache.spark.sql.types.StructType].fields
+        .map(f => f.name -> f.dataType).toMap).getOrElse(Map.empty)
+      catch { case scala.util.control.NonFatal(_) => Map.empty }
+  }
 
   /** Per-commit KMV DISTINCT-VALUE sketch of a column — the third
     * metadata tier next to [[ColStats]] (ranges) and [[BloomBits]]
@@ -3657,18 +3364,20 @@ object TxParquetSink {
     } else not(sepKeyExpr(cols).isin(keys.toSeq: _*))
   }
 
-  /** True iff the commit's [min, max] cannot intersect [lo, hi] —
-    * the only case data skipping may drop its files. Unparseable
-    * numeric stats (a float column's min/max can be "NaN"/"Infinity" —
-    * Spark propagates NaN through min/max) NEVER throw at read time:
-    * they fall back to conservative keep, honoring the superset
-    * contract for manifests written before the write-side
-    * [[finiteNumeric]] filter existed. */
-  private[etl] def rangeDisjoint(s: ColStats, lo: String, hi: String): Boolean =
+  /** True iff the stats' [min, max] cannot intersect [lo, hi] (a
+    * missing bound never excludes) — the only case data skipping may
+    * drop a file. Unparseable numeric stats (a float column's min/max
+    * can be "NaN"/"Infinity" — Spark propagates NaN through min/max)
+    * NEVER throw at read time: they fall back to conservative keep,
+    * honoring the superset contract for manifests written before the
+    * write-side [[finiteNumeric]] filter existed. */
+  private[etl] def boundDisjoint(s: ColStats, lo: Option[String],
+      hi: Option[String]): Boolean =
     if (s.num)
-      (try BigDecimal(s.max) < BigDecimal(lo) || BigDecimal(s.min) > BigDecimal(hi)
+      (try lo.exists(l => BigDecimal(s.max) < BigDecimal(l)) ||
+           hi.exists(h => BigDecimal(s.min) > BigDecimal(h))
        catch { case _: NumberFormatException => false })
-    else utf8Cmp(s.max, lo) < 0 || utf8Cmp(s.min, hi) > 0
+    else lo.exists(utf8Cmp(s.max, _) < 0) || hi.exists(utf8Cmp(s.min, _) > 0)
 
   /** String comparison in the ENGINE's collation — UTF8String binary,
     * i.e. UTF-8 byte order == code-point order. The manifest's string
@@ -3683,11 +3392,28 @@ object TxParquetSink {
     org.apache.spark.unsafe.types.UTF8String.fromString(a)
       .compareTo(org.apache.spark.unsafe.types.UTF8String.fromString(b))
 
-  private[etl] def utf8Min(vs: Seq[String]): String =
-    vs.reduce((a, b) => if (utf8Cmp(a, b) <= 0) a else b)
+  /** Extremes in the stats' comparison domain: exact BigDecimal for
+    * numeric stats, engine collation ([[utf8Cmp]]) otherwise. */
+  private def minOf(vs: Seq[String], num: Boolean): String =
+    if (num) vs.minBy(BigDecimal(_))
+    else vs.reduce((a, b) => if (utf8Cmp(a, b) <= 0) a else b)
 
-  private[etl] def utf8Max(vs: Seq[String]): String =
-    vs.reduce((a, b) => if (utf8Cmp(a, b) >= 0) a else b)
+  private def maxOf(vs: Seq[String], num: Boolean): String =
+    if (num) vs.maxBy(BigDecimal(_))
+    else vs.reduce((a, b) => if (utf8Cmp(a, b) >= 0) a else b)
+
+  /** A scanned exact sum (a decimal cast may print a scale) as BigInt. */
+  private def exactSum(v: String): BigInt = BigDecimal(v).toBigInt
+
+  /** The integral types — where addition is exact and associative (so
+    * sums are recorded) and the cast-to-string form has no '.' (so an
+    * integral literal's rendering is bloom-probe-safe). */
+  private def integralType(t: org.apache.spark.sql.types.DataType): Boolean =
+    t match {
+      case org.apache.spark.sql.types.ByteType | org.apache.spark.sql.types.ShortType |
+           org.apache.spark.sql.types.IntegerType | org.apache.spark.sql.types.LongType => true
+      case _ => false
+    }
 
   /** Write-side stats admission rule for numeric columns: record only
     * min/max that parse as finite decimals. A NaN/±Infinity extremum

@@ -40,7 +40,7 @@ import graft.etl.TxParquetSink
   *  - with no filters, the same panel rewrites through
   *    [[TxParquetSink.columnMetaProfile]];
   *  - grouped by a single bare column, the panel rewrites through
-  *    [[TxParquetSink.groupedMetaProfile]] when every commit is
+  *    [[TxParquetSink.groupedMetaProfileMulti]] when every commit is
   *    single-valued in the group column (the partition-grain load
   *    shape) — one literal row per group; deterministic filters over
   *    the group column itself are admitted (each group is wholly in or

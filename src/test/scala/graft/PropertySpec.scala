@@ -139,10 +139,28 @@ class PropertySpec extends SparkSpec {
       case (acc, (a, o)) => s"($acc) $o ($a)" }
     def rows(df: org.apache.spark.sql.DataFrame): Seq[(String, Long)] =
       df.select("day", "amount").as[(String, Long)].collect().sorted.toSeq
+    // the unpruned COUNT/MIN/MAX/SUM per column, cast to string — SUM
+    // only where it is exact (the integral column), as the sink defines it
+    def unprunedStats(p: String): Seq[Seq[Any]] = {
+      val f = unpruned.where(expr(p))
+      Seq("amount", "day").map { c =>
+        val sm = if (c == "amount") sum(col(c)).cast("string") else lit(null).cast("string")
+        val r = f.agg(count(lit(1)), min(col(c)).cast("string"),
+          max(col(c)).cast("string"), sm).head()
+        Seq(c, r.getLong(0), r.getString(1), r.getString(2), r.getString(3))
+      }
+    }
     check(Prop.forAll(pred) { p =>
       val expect = rows(unpruned.where(expr(p)))
       val got = t.readSnapshotWhere(spark, p).map(rows).getOrElse(Nil)
-      got == expect
+      // the counted, audited and aggregated forms classify through the
+      // same rule the pruned read uses, so they agree with it too
+      val audit = t.countWhereAudit(spark, p)
+      val stats = t.statsAggregateWhere(spark, Seq("day", "amount"), p)
+        .collect().map(_.toSeq).toSeq
+      got == expect && audit._1 == expect.size.toLong &&
+        t.skippingAuditWhere(spark, p)._2 == audit._4 &&
+        stats == unprunedStats(p)
     })
   }
 

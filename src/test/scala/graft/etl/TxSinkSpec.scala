@@ -517,8 +517,14 @@ class TxSinkSpec extends SparkSpec {
     assert(t.readSnapshot(spark).get.count() == 3L)
   }
 
+  /** Every base file entry of `t`'s newest base — one directory per
+    * clustered segment ([[TxParquetSink.compactClustered]]). */
+  private def baseEntries(t: TxParquetSink): Seq[String] =
+    t.commits().filter(_._2.base).last._2.files
+      .map(f => java.nio.file.Paths.get(t.dir, f).toString)
+
   test("z-ordered compaction: snapshot equal, per-file z-ranges pairwise disjoint") {
-    import org.apache.spark.sql.functions.col
+    import org.apache.spark.sql.functions.{col, max, min}
     val t = table()
     // scatter a 2-D grid across several unclustered commits
     val rows = for (x <- 0 until 16; y <- 0 until 16)
@@ -527,28 +533,20 @@ class TxSinkSpec extends SparkSpec {
       t.append(g.toDF("cx", "cy", "payload"))
     }
     val pre = t.readSnapshot(spark).get.count()
-    val v = t.compactZOrdered(spark, "cx", "cy", bits = 8)
+    val v = t.compactClustered(spark, "cx", "cy", curve = "zorder", bits = 8)
     assert(v >= 0 && t.readSnapshot(spark).get.count() == pre,
       "clustered rewrite must not change the snapshot")
-    // physical pin: every base file covers a z-range disjoint from
-    // every other's (range partitioning on the interleave guarantees it)
-    val base = t.commits().filter(_._2.base).last._2.files.head
-    val dir = java.nio.file.Paths.get(t.dir, base)
-    val parquets = java.nio.file.Files.list(dir).iterator()
-    val ranges = scala.collection.mutable.ArrayBuffer[(Long, Long)]()
-    while (parquets.hasNext) {
-      val p = parquets.next()
-      if (p.getFileName.toString.endsWith(".parquet")) {
-        val zf = spark.read.parquet(p.toString)
-          .select(ZOrder.zValue(col("cx"), col("cy"), 8).as("zk"))
-          .agg(org.apache.spark.sql.functions.min("zk"),
-            org.apache.spark.sql.functions.max("zk"))
-          .head()
-        ranges += ((zf.getLong(0), zf.getLong(1)))
-      }
+    // physical pin: every base file entry covers a z-range disjoint
+    // from every other's (range partitioning on the interleave
+    // guarantees it)
+    val ranges = baseEntries(t).map { p =>
+      val zf = spark.read.parquet(p)
+        .select(ZOrder.zValue(col("cx"), col("cy"), 8).as("zk"))
+        .agg(min("zk"), max("zk")).head()
+      (zf.getLong(0), zf.getLong(1))
     }
     assert(ranges.size > 1, "clustered base should hold multiple range files")
-    val sorted = ranges.sortBy(_._1).toSeq
+    val sorted = ranges.sortBy(_._1)
     sorted.zip(sorted.tail).foreach { case (a, b) =>
       assert(a._2 < b._1, s"z-ranges overlap: $a vs $b")
     }
@@ -569,47 +567,35 @@ class TxSinkSpec extends SparkSpec {
       rows.grouped(200).foreach(g => t.append(g.toDF("cx", "cy", "payload")))
       t
     }
-    def fileBoxes(t: TxParquetSink): Seq[(Long, Long, Long, Long)] = {
-      val base = t.commits().filter(_._2.base).last._2.files.head
-      val dir = java.nio.file.Paths.get(t.dir, base)
-      val it = java.nio.file.Files.list(dir).iterator()
-      val boxes = scala.collection.mutable.ArrayBuffer[(Long, Long, Long, Long)]()
-      while (it.hasNext) {
-        val p = it.next()
-        if (p.getFileName.toString.endsWith(".parquet")) {
-          val r = spark.read.parquet(p.toString)
-            .agg(min("cx"), max("cx"), min("cy"), max("cy")).head()
-          boxes += ((r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)))
-        }
+    def fileBoxes(t: TxParquetSink): Seq[(Long, Long, Long, Long)] =
+      baseEntries(t).map { p =>
+        val r = spark.read.parquet(p)
+          .agg(min("cx"), max("cx"), min("cy"), max("cy")).head()
+        (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))
       }
-      boxes.toSeq
-    }
     val th = load()
     val pre = th.readSnapshot(spark).get.count()
-    assert(th.compactHilbert(spark, "cx", "cy", bits = 5, numFiles = 12) >= 0)
+    assert(th.compactClustered(spark, "cx", "cy", curve = "hilbert",
+      bits = 5, numBuckets = 12) >= 0)
     assert(th.readSnapshot(spark).get.count() == pre,
       "clustered rewrite must not change the snapshot")
     // per-file hilbert ranges pairwise disjoint (range partitioning)
-    val hb = th.commits().filter(_._2.base).last._2.files.head
-    val hk = scala.collection.mutable.ArrayBuffer[(Long, Long)]()
-    val it = java.nio.file.Files.list(java.nio.file.Paths.get(th.dir, hb)).iterator()
-    while (it.hasNext) {
-      val p = it.next()
-      if (p.getFileName.toString.endsWith(".parquet")) {
-        val r = Hilbert.withHilbert(spark.read.parquet(p.toString),
-            col("cx"), col("cy"), "hk", 5)
-          .agg(min("hk"), max("hk")).head()
-        hk += ((r.getLong(0), r.getLong(1)))
-      }
+    val hk = baseEntries(th).map { p =>
+      val r = Hilbert.withHilbert(spark.read.parquet(p),
+          col("cx"), col("cy"), "hk", 5)
+        .agg(min("hk"), max("hk")).head()
+      (r.getLong(0), r.getLong(1))
     }
-    val sorted = hk.sortBy(_._1).toSeq
+    assert(hk.size > 1, "clustered base should hold multiple range files")
+    val sorted = hk.sortBy(_._1)
     sorted.zip(sorted.tail).foreach { case (a, b) =>
       assert(a._2 < b._1, s"hilbert ranges overlap: $a vs $b")
     }
     // the measured locality claim: total per-file (x, y) bounding-box
     // area is strictly smaller than the z-clustered rewrite's
     val tz = load()
-    assert(tz.compactZOrdered(spark, "cx", "cy", bits = 5, numFiles = 12) >= 0)
+    assert(tz.compactClustered(spark, "cx", "cy", curve = "zorder",
+      bits = 5, numBuckets = 12) >= 0)
     def area(bs: Seq[(Long, Long, Long, Long)]): Long =
       bs.map { case (x0, x1, y0, y1) => (x1 - x0 + 1) * (y1 - y0 + 1) }.sum
     val (ha, za) = (area(fileBoxes(th)), area(fileBoxes(tz)))
@@ -693,23 +679,21 @@ class TxSinkSpec extends SparkSpec {
       t.appendWithStats(g.toDF("day", "amount"), Seq("day", "amount"))
     }
     // a narrow range touches exactly one commit
-    val (total, skipped) = t.skippingAudit("day", "2024-01-12", "2024-01-14")
+    val narrow = "day >= '2024-01-12' AND day <= '2024-01-14'"
+    val (total, skipped) = t.skippingAuditWhere(spark, narrow)
     assert(total == 3 && skipped == 2,
       s"expected 2 of 3 commits skipped, got ($total, $skipped)")
-    val pruned = t.readSnapshotRange(spark, "day", "2024-01-12", "2024-01-14").get
-    // superset contract: the pruned read holds every in-range row...
-    val inRange = pruned.where($"day" >= "2024-01-12" && $"day" <= "2024-01-14")
+    // the pruned read holds every in-range row, and only those (the
+    // read applies the predicate on top of the kept commit)
+    val inRange = t.readSnapshotWhere(spark, narrow).get
       .select("day").as[String].collect().sorted
     assert(inRange.toSeq == Seq("2024-01-12", "2024-01-13", "2024-01-14"))
-    // ...and only whole kept commits beyond it (days 11-20), never more
-    val all = pruned.select("day").as[String].collect().sorted
-    assert(all.toSeq == (11 to 20).map(d => f"2024-01-$d%02d"))
     // numeric stats compare numerically, not lexicographically:
     // amount 9 vs 10 would invert under string compare
-    val (t2, s2) = t.skippingAudit("amount", "9", "10")
+    val (t2, s2) = t.skippingAuditWhere(spark, "amount >= 9 AND amount <= 10")
     assert(t2 == 3 && s2 == 2, s"numeric stats compare: ($t2, $s2)")
     // a column with no recorded stats is never pruned
-    assert(t.skippingAudit("absent", "a", "b") == ((3, 0)))
+    assert(t.skippingAuditWhere(spark, "absent >= 'a' AND absent <= 'b'") == ((3, 0)))
   }
 
   test("statsAggregate answers count/min/max from manifests alone — zero data reads") {
@@ -894,6 +878,40 @@ class TxSinkSpec extends SparkSpec {
     assert(tt.skippingAuditWhere(spark, "day = DATE '2024-01-05'") == ((1, 0)))
   }
 
+  test("bloom probes without stats are proven safe by the manifest's recorded schema") {
+    // bloom-only columns (no stats): a LONG key and a DOUBLE measure
+    val t = table()
+    Seq(1L to 50L, 51L to 100L, 101L to 150L).foreach { ks =>
+      t.appendWithStats(ks.map(k => (k, k.toDouble, s"v$k")).toDF("k", "d", "payload"),
+        Nil, bloomCols = Seq("k", "d"))
+    }
+    val ms = t.commits().map(_._2)
+    assert(ms.forall(m => m.stats.isEmpty && m.schema.isDefined))
+    // LONG column + integral literal: the recorded type proves the cast
+    // form, so `k = 75` skips exactly the commits whose bloom rules the
+    // key out — the per-commit bloom probe, now reached from SQL
+    val bloomMiss = ms.count(m => !TxParquetSink.mightContain(m.blooms("k"), "75"))
+    assert(bloomMiss >= 1)
+    assert(t.skippingAuditWhere(spark, "k = 75") == ((3, bloomMiss)))
+    assert(t.readSnapshotWhere(spark, "k = 75").get
+      .select("payload").as[String].collect().toSeq == Seq("v75"))
+    // DOUBLE column stores "5.0": `d = 5` must not probe with "5"
+    assert(t.skippingAuditWhere(spark, "d = 5") == ((3, 0)))
+    assert(t.readSnapshotWhere(spark, "d = 5").get.count() == 1L)
+    // a manifest without a recorded schema proves nothing: every file is read
+    val legacy = table()
+    val logDir = java.nio.file.Paths.get(legacy.dir, "_txlog")
+    Files.createDirectories(logDir)
+    t.commits().foreach { case (v, m) =>
+      Files.write(logDir.resolve(f"$v%020d.txn"), TxParquetSink.renderManifest(
+        m.copy(files = m.files.map(f => java.nio.file.Paths.get(t.dir, f).toString),
+          schema = None)).getBytes)
+    }
+    assert(legacy.skippingAuditWhere(spark, "k = 75") == ((3, 0)))
+    assert(legacy.readSnapshotWhere(spark, "k = 75").get
+      .select("payload").as[String].collect().toSeq == Seq("v75"))
+  }
+
   test("countWhere credits full files from manifests, scans only boundaries") {
     val t = table()
     (1 to 30).map(d => (f"2024-01-$d%02d", d.toLong)).grouped(10).foreach(g =>
@@ -1036,10 +1054,10 @@ class TxSinkSpec extends SparkSpec {
       Seq(("2024-01-02", 20L)).toDF("day", "amount"), Seq("day"))
     // range read over January: the February commit is skipped, the
     // overwrite's mask still applies to the kept January commit
-    val (total, skipped) = t.skippingAudit("day", "2024-01-01", "2024-01-31")
+    val january = "day >= '2024-01-01' AND day <= '2024-01-31'"
+    val (total, skipped) = t.skippingAuditWhere(spark, january)
     assert(total == 3 && skipped == 1)
-    val jan = t.readSnapshotRange(spark, "day", "2024-01-01", "2024-01-31").get
-      .where($"day" <= "2024-01-31")
+    val jan = t.readSnapshotWhere(spark, january).get
       .select("day", "amount").as[(String, Long)].collect().sorted
     assert(jan.toSeq == Seq(("2024-01-01", 1L), ("2024-01-02", 20L)),
       s"pruned read must apply the overwrite mask: ${jan.toSeq}")
@@ -1062,20 +1080,19 @@ class TxSinkSpec extends SparkSpec {
     // (modulo the ~2% per-commit false-positive rate — with 3 commits
     // the chance of ANY false positive here is ~4%, so assert >= 1
     // skipped and exact row recovery, not an exact skip count)
-    val (total, skipped) = t.pointSkippingAudit("k", "75")
+    val (total, skipped) = t.skippingAuditWhere(spark, "k = 75")
     assert(total == 3 && skipped >= 1, s"bloom never fired: ($total, $skipped)")
-    val rows = t.readSnapshotPoint(spark, "k", "75").get
-      .where($"k" === 75L).select("payload").as[String].collect().toSeq
+    val rows = t.readSnapshotWhere(spark, "k = 75").get
+      .select("payload").as[String].collect().toSeq
     assert(rows == Seq("v75"))
     // every present key is found through the pruned path (no false negatives)
     val probes = Seq(1L, 50L, 51L, 100L, 101L, 150L)
     probes.foreach { k =>
-      val got = t.readSnapshotPoint(spark, "k", k.toString).get
-        .where($"k" === k).count()
+      val got = t.readSnapshotWhere(spark, s"k = $k").get.count()
       assert(got == 1L, s"bloom path lost key $k")
     }
     // an absent key may be skipped everywhere — the read is then empty
-    val (_, skAbsent) = t.pointSkippingAudit("k", "999999")
+    val (_, skAbsent) = t.skippingAuditWhere(spark, "k = 999999")
     assert(skAbsent >= 2, "absent key should prune nearly every commit")
     // bloom manifest codec round-trips
     val m = TxParquetSink.Manifest(1, Seq("data/y"),
@@ -1099,11 +1116,11 @@ class TxSinkSpec extends SparkSpec {
     assert(after == before)
     // the base's per-file stats prune buckets exactly as the original
     // commits pruned: a narrow range skips 2 of 3 bucket dirs
-    val (total, skipped) = t.skippingAudit("day", "2024-01-12", "2024-01-14")
+    val narrow = "day >= '2024-01-12' AND day <= '2024-01-14'"
+    val (total, skipped) = t.skippingAuditWhere(spark, narrow)
     assert(total == 3 && skipped == 2,
       s"post-compaction skipping: ($total, $skipped)")
-    val pruned = t.readSnapshotRange(spark, "day", "2024-01-12", "2024-01-14").get
-      .where($"day" >= "2024-01-12" && $"day" <= "2024-01-14")
+    val pruned = t.readSnapshotWhere(spark, narrow).get
       .select("day").as[String].collect().sorted
     assert(pruned.toSeq == Seq("2024-01-12", "2024-01-13", "2024-01-14"))
     // buckets are genuinely disjoint day ranges (range partitioning)
@@ -1128,13 +1145,12 @@ class TxSinkSpec extends SparkSpec {
     t.appendWithStats((1L to 90L).map(k => (k, s"v$k")).toDF("k", "payload"),
       Nil, bloomCols = Seq("k"))
     t.compactRanged(spark, "k", numBuckets = 3, bloomCols = Seq("k"))
-    val (total, skipped) = t.pointSkippingAudit("k", "45")
+    val (total, skipped) = t.skippingAuditWhere(spark, "k = 45")
     assert(total == 3 && skipped >= 1,
       s"post-compaction bloom never fired: ($total, $skipped)")
     // no false negatives through the compacted bloom path
     Seq(1L, 45L, 90L).foreach { k =>
-      val got = t.readSnapshotPoint(spark, "k", k.toString).get
-        .where($"k" === k).count()
+      val got = t.readSnapshotWhere(spark, s"k = $k").get.count()
       assert(got == 1L, s"compacted bloom path lost key $k")
     }
     // file-level blooms round-trip the codec
@@ -1325,17 +1341,21 @@ class TxSinkSpec extends SparkSpec {
     t.appendWithStats(
       Seq(("2024-02-01", Double.PositiveInfinity), ("2024-02-02", 7.0))
         .toDF("day", "score"), Seq("day", "score"))
-    // no throw, superset contract intact
-    val r = t.readSnapshotRange(spark, "score", "2", "8").get
-    assert(r.count() == 4L, "non-finite stats must mean conservative keep, not a skip")
+    // no throw, superset contract intact: both commits are read and
+    // the predicate keeps exactly the finite in-range rows
+    val score = "score >= 2 AND score <= 8"
+    assert(t.skippingAuditWhere(spark, score) == ((2, 0)),
+      "non-finite stats must mean conservative keep, not a skip")
+    assert(t.readSnapshotWhere(spark, score).get.count() == 2L)
     // the day column's (clean, string) stats still prune as before
-    val (total, skipped) = t.skippingAudit("day", "2024-02-01", "2024-02-28")
+    val (total, skipped) =
+      t.skippingAuditWhere(spark, "day >= '2024-02-01' AND day <= '2024-02-28'")
     assert(total == 2 && skipped == 1)
     // a legacy manifest that DID record "NaN" stats: conservative keep, no throw
-    assert(!TxParquetSink.rangeDisjoint(
-      TxParquetSink.ColStats(num = true, "NaN", "NaN"), "1", "2"))
-    assert(!TxParquetSink.rangeDisjoint(
-      TxParquetSink.ColStats(num = true, "-Infinity", "Infinity"), "1", "2"))
+    assert(!TxParquetSink.boundDisjoint(
+      TxParquetSink.ColStats(num = true, "NaN", "NaN"), Some("1"), Some("2")))
+    assert(!TxParquetSink.boundDisjoint(
+      TxParquetSink.ColStats(num = true, "-Infinity", "Infinity"), Some("1"), Some("2")))
   }
 
   test("deleteWhere: O(1) metadata commit hides matches; later appends unaffected") {
@@ -1453,7 +1473,6 @@ class TxSinkSpec extends SparkSpec {
   }
 
   test("any-of bloom pruning skips commits containing none of the probe keys") {
-    import org.apache.spark.sql.functions.col
     val t = table()
     // three commits with DISJOINT key ranges — the clustered shape
     // dynamic file pruning exists for
@@ -1462,15 +1481,12 @@ class TxSinkSpec extends SparkSpec {
         (base until base + 10).map(k => (k.toLong, s"v$k")).toDF("k", "v"),
         Nil, bloomCols = Seq("k"))
     }
-    val probes = Seq("5", "105") // keys from two of the three commits
-    val (total, skipped) = t.pointSkippingAuditAny("k", probes)
+    val probes = "k IN (5, 105)" // keys from two of the three commits
+    val (total, skipped) = t.skippingAuditWhere(spark, probes)
     assert(total == 3 && skipped == 1, "the commit with neither key must prune")
-    val r = t.readSnapshotPointAny(spark, "k", probes).get
-      .where(col("k").isin(5L, 105L))
+    val r = t.readSnapshotWhere(spark, probes).get
       .select("v").as[String].collect().toSeq.sorted
     assert(r == Seq("v105", "v5"))
-    // no probe keys at all: everything prunes, superset of nothing
-    assert(t.pointSkippingAuditAny("k", Nil) == ((3, 3)))
   }
 
   test("shallow clone: zero bytes copied, reads equal, divergence isolated both ways") {
@@ -1529,9 +1545,8 @@ class TxSinkSpec extends SparkSpec {
     }
     val clone = table()
     src.cloneTo(clone)
-    assert(clone.pointSkippingAudit("k", "105") == ((3, 2)))
-    val r = clone.readSnapshotRange(spark, "k", "100", "109").get
-      .where($"k".between(100L, 109L)).count()
+    assert(clone.skippingAuditWhere(spark, "k = 105") == ((3, 2)))
+    val r = clone.readSnapshotWhere(spark, "k >= 100 AND k <= 109").get.count()
     assert(r == 10L)
   }
 
@@ -1776,9 +1791,8 @@ class TxSinkSpec extends SparkSpec {
     assert((p.min, p.max) == scan)
     // pruning: a range starting at U+E000 must KEEP the pair's commit
     // (UTF-16 comparison would call it disjoint and silently lose the row)
-    val got = t.readSnapshotRange(spark, "day", lo,
-      new String(Character.toChars(0x10FFFF))).get
-      .where(col("day") >= lo)
+    val top = new String(Character.toChars(0x10FFFF))
+    val got = t.readSnapshotWhere(spark, s"day >= '$lo' AND day <= '$top'").get
     assert(got.count() == 2L, "supplementary-plane row lost to pruning")
   }
 

@@ -69,7 +69,7 @@ class MetadataAggregatesSpec extends AnyFunSuite {
       val dist = snap.agg(countDistinct(col("day")).as("n"))
       assert(!isLocal(dist) && dist.collect().head.getLong(0) == 30L)
       // a PRUNED read (skipping) does not cover the snapshot → no rewrite
-      val pruned = t.readSnapshotRange(s, "amount", "11", "20").get
+      val pruned = t.readSnapshotWhere(s, "amount >= 11 AND amount <= 20").get
         .agg(count(lit(1)).as("n"))
       assert(!isLocal(pruned))
       // a row-hiding mask forbids metadata credit → no rewrite
