@@ -80,17 +80,7 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // pin UTC like Explain and the test base: time-derived grouping
-      // (hourly windows, time-dim attributes) must not depend on the
-      // host's default zone or the measured per-query work shifts.
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Launch.session()
     // One-time setup, timed per-artifact and reported as setup/setup_sec:
     // materialize the star-schema warehouse tables AND the dedup/ANN
     // index artifacts — graft caches both families per session; a
@@ -145,16 +135,9 @@ object Bench {
       }
     }
 
-    // SPARK_GRAFT_PAIRED_ONLY=1 skips the main sweep — the a/b
-    // crossover measurements at factor 10 (ScaleBench's blown-up dir)
-    // only need the paired phase, and a full 300-query sweep at sf1
-    // would burn an hour to answer a three-pair question.
-    val pairedOnly = sys.env.get("SPARK_GRAFT_PAIRED_ONLY").contains("1")
-    val results =
-      if (pairedOnly) Map.empty[String, Double]
-      else SparkEntry.queries.map { case (name, fn) =>
-        name -> timed(fn, name)
-      }
+    val results = SparkEntry.queries.map { case (name, fn) =>
+      name -> timed(fn, name)
+    }
     val qs = results.map { case (k, v) => s"\"" + k + "\":" + v }
       .mkString("{", ",", "}")
     // total over successful queries only; -1 markers stay visible per-query
@@ -170,20 +153,7 @@ object Bench {
     val pairedJson =
       if (pairedRuns <= 0) "{}"
       else {
-        // SPARK_GRAFT_PAIRED_NAMES narrows the pair set (comma list)
-        // for targeted crossover runs at scaled dirs; unknown names
-        // are reported, never silently dropped (a typo'd run would
-        // otherwise read as "no pairs regressed")
-        val names = sys.env.get("SPARK_GRAFT_PAIRED_NAMES")
-          .map { raw =>
-            val asked = raw.split(",").toSeq.map(_.trim).filter(_.nonEmpty)
-            val (known, unknown) =
-              asked.partition(BenchVariants.variants.contains)
-            unknown.foreach(n => System.err.println(
-              s"[bench] SPARK_GRAFT_PAIRED_NAMES: no variant named '$n'"))
-            known
-          }
-          .getOrElse(BenchVariants.variants.keys.toSeq).sorted
+        val names = BenchVariants.variants.keys.toSeq.sorted
         val minA = collection.mutable.Map[String, Double]()
         val minB = collection.mutable.Map[String, Double]()
         for (_ <- 1 to pairedRuns; n <- names) {
@@ -210,10 +180,10 @@ object Bench {
     // also written to a file, and the path rides FIRST in the stdout
     // JSON so even a truncated tail names it. The DEFAULT is a
     // driver-run file (bench_out_driver.json): the committed
-    // bench_out.json is the CONTROLLED envelope (min-of-N quiet-box
-    // passes merged by tools/bench_merge.py) and a contended driver
-    // run must never overwrite it — provenance stays unambiguous.
-    // Controlled passes set SPARK_GRAFT_BENCH_OUT explicitly.
+    // bench_out.json is the historical controlled envelope (min-of-N
+    // quiet-box passes, measured round 14; see git history) and a
+    // default run must never overwrite it — provenance stays
+    // unambiguous. Other passes set SPARK_GRAFT_BENCH_OUT explicitly.
     val outPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT",
       "/root/repo/bench_out_driver.json")
     val json =

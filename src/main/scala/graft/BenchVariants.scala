@@ -150,7 +150,7 @@ object BenchVariants {
 
   /** vs the registered sweep-line: the original day-grain
     * explode+distinct spelling (|orders|·lead-time rows) — the 7.5 s
-    * version the sweep replaced (round-7; BASELINE third leg). */
+    * version the sweep replaced (measured round 7; see git history). */
   def intervalMergeDayExplode(spark: SparkSession, dir: String): DataFrame = {
     val l = Star.table(spark, dir, "lineitem")
     val o = Star.table(spark, dir, "orders")

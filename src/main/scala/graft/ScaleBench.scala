@@ -208,7 +208,6 @@ object ScaleBench {
     val passes = args.lift(3).map(_.toInt).getOrElse(1)
     val names = if (args.length > 4) args.drop(4).toSeq else DefaultQueries
 
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     // Shuffle parallelism must scale with DATA, not stay pinned at core
     // count: at factor 100 a 32-partition shuffle makes per-task state
     // ~100× the sf0.1 size and the big side falls off a heap cliff
@@ -217,23 +216,13 @@ object ScaleBench {
     // per-task working set a cluster deployment would keep constant;
     // AQE coalesces the small side's now-tiny shuffles back down, so
     // the small scale is unaffected.
-    def session(partitions: Int): SparkSession = {
-      val s = SparkSession.builder()
-        .master(s"local[$cpus]")
-        .config("spark.sql.shuffle.partitions", partitions)
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-      s.sparkContext.setLogLevel("ERROR")
-      s
-    }
-    val basePartitions = cpus.toInt
+    val basePartitions = Launch.cores(sys.env)
     def partitionsFor(dir: String): Int =
       if (dir == outDir) basePartitions * math.max(1, factor / 8)
       else basePartitions
 
     locally {
-      val spark = session(basePartitions)
+      val spark = Launch.session(basePartitions)
       if (!new java.io.File(s"$outDir/lineitem.parquet").exists())
         buildScaled(spark, srcDir, outDir, factor)
       spark.stop()
@@ -248,7 +237,7 @@ object ScaleBench {
     // (warehouse + dedup/ANN index build, Bench's setup_sec contract)
     // runs before timing so queries measure query work.
     def timeAll(dir: String): Map[String, Double] = {
-      val spark = session(partitionsFor(dir))
+      val spark = Launch.session(partitionsFor(dir))
       try {
         try {
           graft.etl.Star.salesFact(spark, dir).count()

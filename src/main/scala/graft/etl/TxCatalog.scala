@@ -528,10 +528,9 @@ final case class TxCatalog(dir: String,
         val content = render(ph ++ updates) + renderMarks(marks)
         if (tryPublish(vh + 1, content)) return vh + 1
         // lost the version race to a DISJOINT transactor: re-read its
-        // head pin-set and re-publish ours on top (counted — the
-        // contention-curve telemetry CatalogThroughputBench records)
-        TxCatalog.publishRetries.incrementAndGet()
-        ()
+        // head pin-set and re-publish ours on top (each retry is one
+        // O(tables) head re-read + re-link — the contention price
+        // measured round 12; see git history)
       }
       -1L // unreachable
     } finally {
@@ -548,14 +547,6 @@ final case class TxCatalog(dir: String,
 }
 
 object TxCatalog {
-
-  /** Lost-publish-race re-render count across every catalog in the
-    * process — the contention telemetry behind the disjoint-writer
-    * scaling claim: each retry is one O(tables) head re-read +
-    * re-link, so retries/commit is the direct price of catalog-version
-    * contention. */
-  private[graft] val publishRetries =
-    new java.util.concurrent.atomic.AtomicLong()
 
   /** How long a table lock outlives its last touch before another
     * transactor may presume the holder dead and steal it. Generous

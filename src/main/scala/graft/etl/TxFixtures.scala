@@ -116,7 +116,7 @@ object TxFixtures {
         .config("spark.sql.catalog.graft", "graft.catalog.GraftCatalog")
         .config("spark.sql.catalog.graft.root", root)
         .config("spark.sql.shuffle.partitions",
-          spark.conf.get("spark.sql.shuffle.partitions", "4"))
+          spark.conf.get("spark.sql.shuffle.partitions"))
         .config("spark.sql.session.timeZone", "UTC")
         .getOrCreate()
       finally {

@@ -225,18 +225,19 @@ final case class TxParquetSink(dir: String) extends WarehouseSink {
     * before the first commit. Uncommitted staged directories are never
     * visible here — that is the isolation guarantee.
     *
-    * Served from the RESOLVED-RELATION CACHE: [[MetaPlanBench]]
-    * measured the round-12 log snapshot cache at 2.17× on the
-    * metadata surface but only 1.14× end-to-end, because plan time
-    * is dominated by SCAN-RELATION construction — per-directory file
-    * listing and mergeSchema footer reads inside `spark.read.parquet`
-    * — not manifest parsing. The head snapshot's resolved DataFrame
-    * is therefore memoized per (session, table dir) and validated by
-    * the SAME (fingerprint, sorted manifest names) pair as the log
-    * cache: manifests are write-once, so an identical name set under
-    * an identical lifecycle fingerprint implies an identical file
-    * set, masks included. Pruned reads ([[readSnapshotWhere]], time
-    * travel) construct fresh — their path sets are query-specific.
+    * Served from the RESOLVED-RELATION CACHE: the round-12 log
+    * snapshot cache sped the metadata surface up 2.17× but end-to-end
+    * only 1.14× (measured round 12; see git history), because plan
+    * time is dominated by SCAN-RELATION construction — per-directory
+    * file listing and mergeSchema footer reads inside
+    * `spark.read.parquet` — not manifest parsing. The head snapshot's
+    * resolved DataFrame is therefore memoized per (session, table
+    * dir) and validated by the SAME (fingerprint, sorted manifest
+    * names) pair as the log cache: manifests are write-once, so an
+    * identical name set under an identical lifecycle fingerprint
+    * implies an identical file set, masks included. Pruned reads
+    * ([[readSnapshotWhere]], time travel) construct fresh — their path
+    * sets are query-specific.
     * The cached frame is immutable plan state; callers compose
     * filters/aggregates on top exactly as before. */
   def readSnapshot(spark: SparkSession): Option[DataFrame] = {
@@ -2872,13 +2873,6 @@ object TxParquetSink {
     }
   }
 
-  /** Drops every process-wide cache (log snapshots, parse memos,
-    * resolved relations) — the cold-path switch benchmarks and
-    * corruption-simulating tests use. */
-  private[graft] def dropCaches(): Unit = {
-    logCache.clear(); parsedLogs.clear(); relationCache.clear()
-  }
-
   /** [[TxParquetSink.columnMetaProfile]]'s answer: the comparison
     * domain flag and extremes in their cast-to-string form, total rows,
     * and the optional non-null count / exact integral sum. */
@@ -3003,7 +2997,7 @@ object TxParquetSink {
       // pass it to the parquet reader explicitly and skip the
       // mergeSchema footer-reading job entirely (a per-relation-build
       // Spark job + O(files) footer I/O — the dominant driver cost of
-      // replay-style commit loops, measured by JobProf in round 14).
+      // replay-style commit loops; measured round 14, see git history).
       // Advisory: absent or divergent schemas fall back to
       // mergeSchema=true, the exact pre-round-14 read path.
       schema: Option[String] = None) {

@@ -101,13 +101,12 @@ object BpeOps {
     * one-job-per-round cadence remains. */
   val CheckpointEvery = 8
 
-  def mergesFrom(spark: SparkSession, vocabFreq: DataFrame, rounds: Int,
-      onRound: (Int, Double) => Unit = (_, _) => ()): DataFrame = {
+  def mergesFrom(spark: SparkSession, vocabFreq: DataFrame,
+      rounds: Int): DataFrame = {
     import spark.implicits._
     var v = vocabFreq.withColumn("enc", encodeWord(col("w")))
     val merges = Seq.newBuilder[(Int, String, String, Long)]
     for (round <- 1 to rounds) {
-      val t0 = System.nanoTime()
       // driver-side argmax: the merge decision is a global scalar
       val best = pairCounts(v)
         .orderBy(col("cnt").desc, col("l").asc, col("r").asc)
@@ -120,19 +119,15 @@ object BpeOps {
         if (round % CheckpointEvery == 0 && round < rounds)
           v = v.localCheckpoint()
       }
-      onRound(round, (System.nanoTime() - t0) / 1e9)
     }
     merges.result().toDF("round", "left_sym", "right_sym", "pair_count")
       .orderBy("round")
   }
 
-  /** The corpus-trained merge table (driver query `ext_bpe_merges`).
-    * `onRound` receives (round, seconds) per merge — the seam
-    * [[graft.BpeBench]] uses to measure per-round flatness. */
-  def bpeMerges(spark: SparkSession, dir: String, rounds: Int = Rounds,
-      onRound: (Int, Double) => Unit = (_, _) => ()): DataFrame =
-    mergesFrom(spark,
-      vocab(spark, dir).select("w", "freq"), rounds, onRound)
+  /** The corpus-trained merge table (registered query `ext_bpe_merges`). */
+  def bpeMerges(spark: SparkSession, dir: String,
+      rounds: Int = Rounds): DataFrame =
+    mergesFrom(spark, vocab(spark, dir).select("w", "freq"), rounds)
 
   /** ENCODE with the trained merges — the artifact used, not just
     * produced: per-document token count under the learned BPE

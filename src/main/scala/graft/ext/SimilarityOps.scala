@@ -24,8 +24,9 @@ import org.apache.spark.sql.functions._
 object SimilarityOps {
 
   /** The IVF default operating point, chosen from the MEASURED
-    * recall/cost curve (graft.RecallSweep at sf0.1, 2000 vectors,
-    * ⌈√n⌉ = 45 cells, recall@3 over 64 queries vs brute force):
+    * recall/cost curve (measured round 7; see git history — sf0.1,
+    * 2000 vectors, ⌈√n⌉ = 45 cells, recall@3 over 64 queries vs brute
+    * force):
     *
     *   nProbe          1     2     4     8     12    16
     *   recall (sf0.1)  .714  .755  .792  .870  .911  .932

@@ -443,7 +443,7 @@ object VectorOps {
         .join(e.select("vec_id", "embedding", "norm"), "vec_id")
     }
 
-  /** Operating-point note (measured, graft.RecallSweep at sf0.1):
+  /** Operating-point note (sf0.1; measured round 7, see git history):
     * recall@3 = 0.521 at (kCent = 8, nProbe = 2) over near-isotropic
     * embeddings — 8 trained cells is too coarse for production recall.
     * This operator's role is the TRAINED-quantizer machinery shared
@@ -797,7 +797,7 @@ object VectorOps {
   /** Mining probe width for [[hardNegatives]]/[[mmrSelect]] retrieval —
     * wide enough that the probed region of the √n-cell router holds a
     * retrieval pool (nProbe·√n candidates per query), measured ≥ 0.9
-    * pool recall at both test SFs (graft.RecallSweep). */
+    * pool recall at both test SFs (measured round 8; see git history). */
   val MiningNProbe = 8
 
   /** Exact-cosine candidate generation THROUGH THE TRAINED CELLS — the
@@ -954,7 +954,7 @@ object VectorOps {
 
   /** Coarse probe width for [[ivfPqTopK]] over the √n-cell router —
     * the measured ≥ 0.9 recall operating point (see ivfPqTopK's
-    * scaladoc; graft.RecallSweep re-measures the curve). */
+    * scaladoc; measured round 8, see git history). */
   val IvfPqNProbe = 8
 
   /** (vec_id, sub, sq): the quantized vector split into its PqM int
@@ -1092,12 +1092,12 @@ object VectorOps {
     * neighbor id; folds are strict left folds — the DuckDB twin is
     * bit-identical.
     *
-    * Operating point (MEASURED, graft.RecallSweep
-    * `ivfpq_recall_by_probe_shortlist`, M = 8 subspaces, √n-cell
-    * scaled router — [[scaledKCent]]): recall@3 over the 8 bounded
-    * queries is 0.917 at BOTH sf0.01 (23 cells) and sf0.1 (45 cells)
-    * at (nProbe = [[IvfPqNProbe]] = 8, shortlist = [[IvfPqShortlist]]
-    * = 96); shortlist 128 buys 0.958 at both. Two measured lessons:
+    * Operating point (measured round 8; see git history — M = 8
+    * subspaces, √n-cell scaled router — [[scaledKCent]]): recall@3 over
+    * the 8 bounded queries is 0.917 at BOTH sf0.01 (23 cells) and sf0.1
+    * (45 cells) at (nProbe = [[IvfPqNProbe]] = 8,
+    * shortlist = [[IvfPqShortlist]] = 96); shortlist 128 buys 0.958 at
+    * both. Two measured lessons:
     * (a) past nProbe = 8 the curve is FLAT (p8 = p12 = p16 = p23 at
     * every shortlist — the residual loss is ADC code quantization
     * pushing true neighbors out of the shortlist, not the router:
