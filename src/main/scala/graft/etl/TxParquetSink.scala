@@ -23,7 +23,9 @@ import scala.jdk.CollectionConverters._
   *     ATOMICALLY via hard-link creation (`Files.createLink` is an
   *     atomic create-if-absent on POSIX — unlike create-then-rename,
   *     which `rename(2)` makes last-writer-wins). Losing the race throws
-  *     `FileAlreadyExistsException` → optimistic-concurrency retry.
+  *     `FileAlreadyExistsException` → optimistic-concurrency retry, which
+  *     every retrying commit runs through one loop ([[publishLoop]]),
+  *     bounded at [[TxParquetSink.MaxPublishAttempts]] attempts.
   *
   * MERGE semantics ([[mergeUpsert]]): insert-if-absent on `keys` under
   * snapshot isolation. The anti-join runs against the snapshot the
@@ -366,9 +368,8 @@ final case class TxParquetSink(dir: String) extends WarehouseSink {
       .getOrElse(WarehouseSink.emptyKeys(spark, keys, schemaSource))
 
   /** Unconditional transactional append (no key semantics): stage, audit,
-    * publish with retry. Appends never conflict with each other — a lost
-    * race just re-publishes the same staged directory at the next
-    * version. */
+    * publish. Appends never conflict with each other — a lost race just
+    * re-publishes the same staged directory at the next version. */
   def append(df: DataFrame): Unit = {
     // ONE pass (round-13 optimization): count + constraint check fused
     // into the staging write via observe; audit from the footers — the
@@ -378,9 +379,8 @@ final case class TxParquetSink(dir: String) extends WarehouseSink {
     val (staged, n, metrics) = stageObserved(df, cons.map(_._3))
     if (n == 0) { deleteRecursively(root.resolve(staged)); return }
     checkConstraintMetrics(cons, metrics, Some(staged))
-    var v = version() + 1
-    while (!tryPublish(v, Manifest(n, Seq(staged),
-      schema = Some(df.schema.json)))) v = version() + 1
+    val m = Manifest(n, Seq(staged), schema = Some(df.schema.json))
+    publishLoop("append")((_, _) => ())(() => Claim(version() + 1, m))
   }
 
   /** The highest committed application-transaction version for
@@ -421,19 +421,17 @@ final case class TxParquetSink(dir: String) extends WarehouseSink {
     checkConstraintMetrics(cons, metrics, Some(staged))
     val manifest = Manifest(n, Seq(staged), txn = Some((appId, txnVersion)),
       schema = Some(df.schema.json))
-    while (true) {
+    publishLoop("appendIdempotent")((_, _) => true) { () =>
       // pin the target version BEFORE re-checking the mark: a twin
       // writer landing between the check and the publish necessarily
-      // takes this version, so our publish fails and the next loop
-      // iteration sees its mark — no TOCTOU double-commit
+      // takes this version, so our publish fails and the next attempt
+      // sees its mark — no TOCTOU double-commit
       val v = version() + 1
       if (txnVersion <= lastTxnVersion(appId)) { // raced a twin writer
         deleteRecursively(root.resolve(staged))
-        return false
-      }
-      if (tryPublish(v, manifest)) return true
+        Done(false)
+      } else Claim(v, manifest)
     }
-    false // unreachable
   }
 
   /** Transactional append that records per-commit MIN/MAX column
@@ -447,7 +445,7 @@ final case class TxParquetSink(dir: String) extends WarehouseSink {
     * commits from the DRIVER, before any scan task launches. */
   def appendWithStats(df: DataFrame, statsCols: Seq[String],
       bloomCols: Seq[String] = Nil, sketchCols: Seq[String] = Nil): Unit = {
-    import org.apache.spark.sql.functions.{col, explode, array, pmod, concat, lit}
+    import org.apache.spark.sql.functions.{col, lit}
     val spark = df.sparkSession
     // count + constraints + min/max/nulls/sums profile fused into the
     // ONE staging write (round-13 optimization — this path used to run
@@ -462,22 +460,10 @@ final case class TxParquetSink(dir: String) extends WarehouseSink {
     lazy val stagedDf = spark.read.parquet(root.resolve(staged).toString)
     val (stats, nullCounts, sums, sumsqs) =
       decodeStatsMetrics(metrics(_), n, statsCols, df.schema)
-    // bloom bits computed DISTRIBUTED (the batch may be huge): k hash
-    // positions per row fused into the scan, one bounded distinct —
-    // at most BloomM ints per column ever reach the driver
-    val blooms = bloomCols.map { c =>
-      val positions = stagedDf
-        .where(col(c).isNotNull)
-        .select(explode(array((0 until BloomK).map(i =>
-          pmod(graft.ext.TextOps.h32(
-            concat(lit(s"bloom$i:"), col(c).cast("string"))), lit(BloomM))
-            .cast("int")): _*)).as("p"))
-        .distinct().collect().map(_.getInt(0))
-      val bs = new java.util.BitSet(BloomM)
-      positions.foreach(bs.set)
-      c -> BloomBits(BloomM, BloomK,
-        java.util.Base64.getUrlEncoder.withoutPadding.encodeToString(bs.toByteArray))
-    }.toMap
+    // one bloom over the whole batch; an all-null column gets the empty
+    // bloom, which every point probe misses
+    val blooms = bloomCols.map(c =>
+      c -> bloomsBy(stagedDf, c, lit("")).getOrElse("", bloomOf(Nil))).toMap
     // per-column KMV sketch: one bounded aggregate fused with the
     // read-back scan; at most SketchK longs per column reach the driver
     val sketches = sketchCols.map { c =>
@@ -487,11 +473,29 @@ final case class TxParquetSink(dir: String) extends WarehouseSink {
         .head().getSeq[Long](0)
       c -> KmvMins(SketchK, arr)
     }.toMap
-    var v = version() + 1
-    while (!tryPublish(v, Manifest(n, Seq(staged), stats = stats, blooms = blooms,
+    val m = Manifest(n, Seq(staged), stats = stats, blooms = blooms,
       sketches = sketches, nullCounts = nullCounts, sums = sums,
-      sumsqs = sumsqs, schema = Some(df.schema.json))))
-      v = version() + 1
+      sumsqs = sumsqs, schema = Some(df.schema.json))
+    publishLoop("appendWithStats")((_, _) => ())(() => Claim(version() + 1, m))
+  }
+
+  /** Bloom filters of column `c` over `df`, one per value of `group`,
+    * computed DISTRIBUTED (the data may be huge): k hash positions per
+    * non-null row fused into the scan, one bounded distinct — at most
+    * BloomM ints per group ever reach the driver. A group without a
+    * non-null value gets no entry. */
+  private def bloomsBy(df: DataFrame, c: String,
+      group: org.apache.spark.sql.Column): Map[String, BloomBits] = {
+    import org.apache.spark.sql.functions.{array, col, concat, explode, lit, pmod}
+    df.where(col(c).isNotNull)
+      .select(group.cast("string").as("g"),
+        explode(array((0 until BloomK).map(i =>
+          pmod(graft.ext.TextOps.h32(
+            concat(lit(s"bloom$i:"), col(c).cast("string"))), lit(BloomM))
+            .cast("int")): _*)).as("p"))
+      .distinct().collect()
+      .groupBy(_.getString(0))
+      .map { case (g, rows) => g -> bloomOf(rows.map(_.getInt(1))) }
   }
 
   /** The TABLE-level KMV sketch for `column`: the per-commit sketches
@@ -1184,9 +1188,8 @@ final case class TxParquetSink(dir: String) extends WarehouseSink {
 
   /** MERGE (WHEN NOT MATCHED THEN INSERT) on `keys` with optimistic
     * concurrency — see the class doc for the protocol. Returns the rows
-    * actually inserted. `beforePublish` is a test seam invoked between
-    * audit and publish (it is where a concurrent writer interleaves);
-    * production callers leave the default no-op.
+    * actually inserted. `beforePublish` is [[publishLoop]]'s seam, and
+    * a lost race re-filters before the next attempt (below).
     *
     * PARTITION-SCOPED CONFLICT DETECTION (`partitionCols`): at 100-TB
     * ingest many loaders commit in parallel, almost always into
@@ -1213,7 +1216,6 @@ final case class TxParquetSink(dir: String) extends WarehouseSink {
       keys: Seq[String],
       orderCols: Seq[String],
       beforePublish: () => Unit = () => (),
-      maxAttempts: Int = 20,
       partitionCols: Seq[String] = Nil,
       onRefilter: () => Unit = () => ()): Long = {
     require(partitionCols.forall(keys.contains),
@@ -1241,45 +1243,22 @@ final case class TxParquetSink(dir: String) extends WarehouseSink {
       else Some(decodeTouchedPartitions(metrics, partitionCols)
         .map(encodePartition))
 
-    var attempts = 0
-    while (true) {
-      attempts += 1
-      if (attempts > maxAttempts) {
-        deleteRecursively(root.resolve(staged))
-        throw new IllegalStateException(
-          s"mergeUpsert: gave up after $maxAttempts publish attempts on $dir")
-      }
-      beforePublish()
-      // Fail LOUD, not corrupt: if a mistimed vacuum (retention window
-      // shorter than this commit) deleted the staged dir, publishing
-      // would commit a manifest of dangling files and break every
-      // subsequent snapshot read. A races-with-vacuum deployment must
-      // raise the vacuum TTL; this check converts the common mistiming
-      // into an aborted commit instead of a poisoned table.
-      if (!Files.isDirectory(root.resolve(staged)))
-        throw new IllegalStateException(
-          s"mergeUpsert: staged directory $staged vanished before publish " +
-            "(vacuumed mid-commit?) — aborting instead of committing a " +
-            "dangling manifest")
-      if (tryPublish(snap.lastOption.map(_._1).getOrElse(-1L) + 1,
-          Manifest(n, Seq(staged), partitions = touched,
-            partitionCols = partitionCols,
-            schema = Some(toAdd.schema.json))))
-        return n
+    def tip: Long = snap.lastOption.map(_._1).getOrElse(-1L)
 
-      // Lost the race: some other writer committed first. The delta is
-      // computed BY VERSION, never by position: a concurrent
-      // [[truncateHistory]] can delete pre-base manifests between our
-      // snapshot and this retry, shrinking `commits()` so that a
-      // positional drop(snap.size) would hide the interleaved commit
-      // inside the vanished prefix and skip the key re-filter. Version
-      // numbers are monotone and never reused, so filtering on
-      // version > last-seen is immune to log truncation: a truncated
-      // interleaved commit is covered by the surviving base (a full
-      // rewrite containing its rows), which itself has a newer version
-      // and lands in the delta.
+    // Lost the race: some other writer committed first. The delta is
+    // computed BY VERSION, never by position: a concurrent
+    // [[truncateHistory]] can delete pre-base manifests between our
+    // snapshot and this retry, shrinking `commits()` so that a
+    // positional drop(snap.size) would hide the interleaved commit
+    // inside the vanished prefix and skip the key re-filter. Version
+    // numbers are monotone and never reused, so filtering on
+    // version > last-seen is immune to log truncation: a truncated
+    // interleaved commit is covered by the surviving base (a full
+    // rewrite containing its rows), which itself has a newer version
+    // and lands in the delta. False when no staged row is left.
+    def refilter(): Boolean = {
+      val lastSeen = tip
       val now = resolvedCommits()
-      val lastSeen = snap.lastOption.map(_._1).getOrElse(-1L)
       val delta = now.filter { case (v, _) => v > lastSeen }
       snap = now
       // Partition-scoped fast path: if this commit and every
@@ -1305,24 +1284,31 @@ final case class TxParquetSink(dir: String) extends WarehouseSink {
         // that landed in between — the snapshot we already anti-joined
         // against needs no re-read.
         onRefilter()
-        dataOf(spark, delta) match {
-          case Some(deltaDf) =>
-            val remaining = spark.read.parquet(root.resolve(staged).toString)
-              .join(deltaDf.select(keys.map(org.apache.spark.sql.functions.col): _*).distinct(),
-                keys, "left_anti")
-              .localCheckpoint(eager = true)
-            val m = remaining.count()
-            if (m < n) {
-              deleteRecursively(root.resolve(staged))
-              if (m == 0) return 0
-              n = m
-              staged = stageAudited(spark, remaining, n)
-            }
-          case None => ()
+        dataOf(spark, delta).foreach { deltaDf =>
+          val remaining = spark.read.parquet(root.resolve(staged).toString)
+            .join(deltaDf.select(keys.map(org.apache.spark.sql.functions.col): _*).distinct(),
+              keys, "left_anti")
+            .localCheckpoint(eager = true)
+          val m = remaining.count()
+          if (m < n) {
+            deleteRecursively(root.resolve(staged))
+            n = m
+            if (n > 0) staged = stageAudited(spark, remaining, n)
+          }
         }
       }
+      n > 0
     }
-    n // unreachable
+
+    var claimed = false
+    publishLoop("mergeUpsert", beforePublish)((_, m) => m.rows) { () =>
+      if (claimed && !refilter()) Done(0L)
+      else {
+        claimed = true
+        Claim(tip + 1, Manifest(n, Seq(staged), partitions = touched,
+          partitionCols = partitionCols, schema = Some(toAdd.schema.json)))
+      }
+    }
   }
 
   /** Distinct partition tuples of one staged batch, as raw value
@@ -1376,16 +1362,15 @@ final case class TxParquetSink(dir: String) extends WarehouseSink {
     * at pre-overwrite versions and [[vacuumOrphans]] semantics are
     * unchanged. Concurrency: replace semantics are version-relative
     * ("my content supersedes whatever these partitions held at any
-    * earlier version"), so a lost publish race retries with ZERO data
-    * work — overwrites never re-filter; an insert writer interleaving
-    * with a disjoint same-cols overwrite keeps ITS metadata-only fast
-    * path (see [[mergeUpsert]]). Returns the committed row count. */
+    * earlier version"), so a lost race republishes — overwrites never
+    * re-filter; an insert writer interleaving with a disjoint
+    * same-cols overwrite keeps ITS metadata-only fast path (see
+    * [[mergeUpsert]]). Returns the committed row count. */
   def overwritePartitions(
       spark: SparkSession,
       incoming: DataFrame,
       partitionCols: Seq[String],
       beforePublish: () => Unit = () => (),
-      maxAttempts: Int = 20,
       statsCols: Seq[String] = Nil): Long = {
     require(partitionCols.nonEmpty, "overwritePartitions needs partition columns")
     // ONE pass (round-13 optimization; round-14 extended): count +
@@ -1413,22 +1398,8 @@ final case class TxParquetSink(dir: String) extends WarehouseSink {
       replaceKeys = tuples.map(sepEncode),
       stats = stats, nullCounts = nullCounts, sums = sums,
       sumsqs = sumsqs, schema = Some(incoming.schema.json))
-    var attempts = 0
-    while (true) {
-      attempts += 1
-      if (attempts > maxAttempts) {
-        deleteRecursively(root.resolve(staged))
-        throw new IllegalStateException(
-          s"overwritePartitions: gave up after $maxAttempts publish attempts on $dir")
-      }
-      beforePublish()
-      if (!Files.isDirectory(root.resolve(staged)))
-        throw new IllegalStateException(
-          s"overwritePartitions: staged directory $staged vanished before " +
-            "publish (vacuumed mid-commit?) — aborting")
-      if (tryPublish(version() + 1, manifest)) return n
-    }
-    n // unreachable
+    publishLoop("overwritePartitions", beforePublish)((_, m) => m.rows)(
+      () => Claim(version() + 1, manifest))
   }
 
   /** MERGE INTO — the full conditional merge (the Delta `MERGE`
@@ -1466,10 +1437,9 @@ final case class TxParquetSink(dir: String) extends WarehouseSink {
     * so the scan touches only commits the source keys landed in. The
     * manifest grows by O(batch keys) replaced tuples — bounded by the
     * BATCH, never the table. Concurrency is version-relative like
-    * [[overwritePartitions]]: a lost publish race retries with zero
-    * data work, and the landed merge supersedes whatever its keys held
-    * at any earlier version (last-writer-wins at key grain — writers
-    * needing insert-only key reservation use [[mergeUpsert]]).
+    * [[overwritePartitions]]: the landed merge supersedes whatever its
+    * keys held at any earlier version (last-writer-wins at key grain —
+    * writers needing insert-only key reservation use [[mergeUpsert]]).
     *
     * Ambiguity guard: duplicate source key tuples are REFUSED (Delta's
     * multiple-matches error) — two source rows updating one target row
@@ -1484,8 +1454,7 @@ final case class TxParquetSink(dir: String) extends WarehouseSink {
       deleteCond: Option[String] = None,
       insertUnmatched: Boolean = true,
       insertCond: Option[String] = None,
-      beforePublish: () => Unit = () => (),
-      maxAttempts: Int = 20): MergeStats = {
+      beforePublish: () => Unit = () => ()): MergeStats = {
     import org.apache.spark.sql.functions.{coalesce, col, expr, lit, when}
     require(keys.nonEmpty, "mergeInto needs key columns")
     require(updateSet.keys.forall(c => !keys.contains(c)),
@@ -1584,7 +1553,7 @@ final case class TxParquetSink(dir: String) extends WarehouseSink {
     def clsCount(c: String) = coalesce(
       sum(when(col("__cls") === c, 1L).otherwise(0L)), lit(0L)).as(s"__m$c")
     val keyStruct = struct(keys.map(col): _*)
-    val rel = "data/tx-" + java.util.UUID.randomUUID().toString
+    val rel = newStagedRel()
     val stagedPath = root.resolve(rel)
     val metrics =
       try runObserved(classified,
@@ -1598,7 +1567,7 @@ final case class TxParquetSink(dir: String) extends WarehouseSink {
     val (nDel, nUpd, nIns) = (metrics("__mD").asInstanceOf[Long],
       metrics("__mU").asInstanceOf[Long], metrics("__mI").asInstanceOf[Long])
     val n = nUpd + nIns
-    val landed = footerRowCount(stagedPath)
+    val landed = footerRows(stagedPath)
     if (landed != n) {
       deleteRecursively(stagedPath)
       throw new IllegalStateException(
@@ -1624,23 +1593,8 @@ final case class TxParquetSink(dir: String) extends WarehouseSink {
       replaceCols = if (replTuples.isEmpty) Nil else keys,
       replaceKeys = replTuples.map(sepEncode),
       schema = if (staged.isEmpty) None else Some(incoming.schema.json))
-    var attempts = 0
-    while (true) {
-      attempts += 1
-      if (attempts > maxAttempts) {
-        staged.foreach(s => deleteRecursively(root.resolve(s)))
-        throw new IllegalStateException(
-          s"mergeInto: gave up after $maxAttempts publish attempts on $dir")
-      }
-      beforePublish()
-      if (staged.exists(s => !Files.isDirectory(root.resolve(s))))
-        throw new IllegalStateException(
-          "mergeInto: staged directory vanished before publish " +
-            "(vacuumed mid-commit?) — aborting")
-      if (tryPublish(version() + 1, manifest))
-        return MergeStats(nIns, nUpd, nDel)
-    }
-    MergeStats(nIns, nUpd, nDel) // unreachable
+    publishLoop("mergeInto", beforePublish)((_, _) => MergeStats(nIns, nUpd, nDel))(
+      () => Claim(version() + 1, manifest))
   }
 
   /** UPDATE WHERE — SQL UPDATE as ONE atomic commit, completing the
@@ -1661,67 +1615,56 @@ final case class TxParquetSink(dir: String) extends WarehouseSink {
     * read of the matching rows plus their rewrite — never a table
     * rewrite; the mask joins the merge-on-read lifecycle ([[compact]]
     * materializes it, [[maintainIfNeeded]] bounds the pile-up).
-    * Concurrency is version-relative like [[deleteWhere]]: a lost race
-    * retries the publish with zero data work. Returns rows updated. */
+    * Concurrency is snapshot-pinned: a lost race recomputes the rewrite
+    * from the new snapshot. Returns rows updated. */
   def updateWhere(spark: SparkSession, predicateSql: String,
       set: Map[String, String],
-      beforePublish: () => Unit = () => (),
-      maxAttempts: Int = 20): Long = {
+      beforePublish: () => Unit = () => ()): Long = {
     import org.apache.spark.sql.functions.{coalesce, col, expr, lit}
     require(set.nonEmpty, "updateWhere needs at least one SET column")
-    var attempts = 0
-    while (true) {
-      attempts += 1
-      if (attempts > maxAttempts)
-        throw new IllegalStateException(
-          s"updateWhere: gave up after $maxAttempts publish attempts on $dir")
-      // pin the snapshot VERSION the rewrite is computed from: the
-      // commit must land at exactly snapV+1, else a row appended
-      // concurrently (after this read, before our publish) that
-      // matches the predicate would be masked with no rewritten
-      // counterpart — a silent concurrent-UPDATE data loss. A lost
-      // race therefore RECOMPUTES from the new snapshot (the Delta
-      // OCC shape for UPDATE: re-read, re-rewrite, re-stage) instead
-      // of republishing the stale rewrite at a higher version.
+    // pin the snapshot VERSION the rewrite is computed from: the commit
+    // must land at exactly snapV+1, else a row appended concurrently
+    // (after this read, before our publish) that matches the predicate
+    // would be masked with no rewritten counterpart — a silent
+    // concurrent-UPDATE data loss. A lost race therefore RECOMPUTES
+    // from the new snapshot (the Delta OCC shape for UPDATE: re-read,
+    // re-rewrite, re-stage) instead of republishing the stale rewrite
+    // at a higher version.
+    publishLoop("updateWhere", beforePublish, stale = true)((_, m) => m.rows) { () =>
       val snapV = version()
-      val snap = readVersion(spark, snapV).getOrElse(return 0L)
-      val resolved = snap.select(expr(predicateSql).as("__pred")).schema.head
-      require(resolved.dataType == org.apache.spark.sql.types.BooleanType,
-        s"updateWhere predicate must be boolean, got ${resolved.dataType}: $predicateSql")
-      require(set.keys.forall(snap.columns.contains),
-        s"updateWhere SET names unknown columns " +
-          s"(${set.keys.filterNot(snap.columns.contains).mkString(",")})")
-      val cols = snap.columns.toSeq
-      val rewritten = snap
-        .where(coalesce(expr(predicateSql), lit(false)))
-        .select(cols.map(c =>
-          (if (set.contains(c)) expr(set(c)) else col(c)).as(c)): _*)
-      // ONE pass (round-13 optimization): the rewrite used to be
-      // checkpointed, counted, constraint-checked and then staged —
-      // four runs' worth of jobs; it now runs exactly once, inside the
-      // staging write, with the count and constraints observed
-      val cons = constraintViolationAggs()
-      val (staged, n, metrics) = stageObserved(rewritten, cons.map(_._3))
-      if (n == 0) {
-        deleteRecursively(root.resolve(staged))
-        // no matching row in snapshot snapV: the UPDATE serializes at
-        // snapV as a no-op; later concurrent appends serialize after it
-        if (version() == snapV) return 0L
-        // something landed while we validated — re-read and re-check
-      } else {
-        checkConstraintMetrics(cons, metrics, Some(staged))
-        val manifest = Manifest(n, Seq(staged), deletePred = Some(predicateSql),
-          schema = Some(rewritten.schema.json))
-        beforePublish()
-        if (!Files.isDirectory(root.resolve(staged)))
-          throw new IllegalStateException(
-            "updateWhere: staged directory vanished before publish " +
-              "(vacuumed mid-commit?) — aborting")
-        if (tryPublish(snapV + 1, manifest)) return n
-        deleteRecursively(root.resolve(staged)) // stale rewrite: recompute
+      readVersion(spark, snapV) match {
+        case None => Done(0L)
+        case Some(snap) =>
+          val resolved = snap.select(expr(predicateSql).as("__pred")).schema.head
+          require(resolved.dataType == org.apache.spark.sql.types.BooleanType,
+            s"updateWhere predicate must be boolean, got ${resolved.dataType}: $predicateSql")
+          require(set.keys.forall(snap.columns.contains),
+            s"updateWhere SET names unknown columns " +
+              s"(${set.keys.filterNot(snap.columns.contains).mkString(",")})")
+          val cols = snap.columns.toSeq
+          val rewritten = snap
+            .where(coalesce(expr(predicateSql), lit(false)))
+            .select(cols.map(c =>
+              (if (set.contains(c)) expr(set(c)) else col(c)).as(c)): _*)
+          // ONE pass (round-13 optimization): the rewrite used to be
+          // checkpointed, counted, constraint-checked and then staged —
+          // four runs' worth of jobs; it now runs exactly once, inside
+          // the staging write, with the count and constraints observed
+          val cons = constraintViolationAggs()
+          val (staged, n, metrics) = stageObserved(rewritten, cons.map(_._3))
+          if (n > 0) {
+            checkConstraintMetrics(cons, metrics, Some(staged))
+            Claim(snapV + 1, Manifest(n, Seq(staged),
+              deletePred = Some(predicateSql), schema = Some(rewritten.schema.json)))
+          } else {
+            deleteRecursively(root.resolve(staged))
+            // no matching row in snapshot snapV: the UPDATE serializes at
+            // snapV as a no-op (later concurrent appends serialize after
+            // it) — unless something landed while we validated: re-read
+            if (version() == snapV) Done(0L) else Reread
+          }
       }
     }
-    0L // unreachable
   }
 
   /** AUTO-MAINTENANCE POLICY — compact when the effective log carries
@@ -1767,14 +1710,12 @@ final case class TxParquetSink(dir: String) extends WarehouseSink {
     * snapshot before publishing — an unresolvable or non-boolean
     * predicate throws here, never at read time); NULL evaluations keep
     * the row (SQL DELETE semantics). Concurrency is version-relative
-    * like [[overwritePartitions]]: a lost race retries the publish with
-    * zero data work, and the landed delete masks everything below its
-    * final version. Returns the published version, or −1 on an empty
-    * table (nothing to delete from — masking nothing is a no-op commit
-    * not worth a version). */
+    * like [[overwritePartitions]]: the landed delete masks everything
+    * below its final version. Returns the published version, or −1 on
+    * an empty table (nothing to delete from — masking nothing is a
+    * no-op commit not worth a version). */
   def deleteWhere(spark: SparkSession, predicateSql: String,
-      beforePublish: () => Unit = () => (),
-      maxAttempts: Int = 20): Long = {
+      beforePublish: () => Unit = () => ()): Long = {
     import org.apache.spark.sql.functions.expr
     val snap = readSnapshot(spark).getOrElse(return -1L)
     // analysis-time validation: resolve the predicate against the
@@ -1785,17 +1726,8 @@ final case class TxParquetSink(dir: String) extends WarehouseSink {
     require(resolved.dataType == org.apache.spark.sql.types.BooleanType,
       s"deleteWhere predicate must be boolean, got ${resolved.dataType}: $predicateSql")
     val manifest = Manifest(0, Nil, deletePred = Some(predicateSql))
-    var attempts = 0
-    while (true) {
-      attempts += 1
-      if (attempts > maxAttempts)
-        throw new IllegalStateException(
-          s"deleteWhere: gave up after $maxAttempts publish attempts on $dir")
-      beforePublish()
-      val v = version() + 1
-      if (tryPublish(v, manifest)) return v
-    }
-    -1L // unreachable
+    publishLoop("deleteWhere", beforePublish)((v, _) => v)(
+      () => Claim(version() + 1, manifest))
   }
 
   /** CHANGE DATA FEED — the row-level change log between two versions,
@@ -2059,7 +1991,7 @@ final case class TxParquetSink(dir: String) extends WarehouseSink {
       } finally s.close()
     }
     require(parts.nonEmpty, s"no parquet part files in $parquetDir")
-    val rel = "data/tx-" + java.util.UUID.randomUUID().toString
+    val rel = newStagedRel()
     val stagedRoot = root.resolve(rel)
     Files.createDirectories(stagedRoot)
     parts.foreach(p =>
@@ -2067,7 +1999,7 @@ final case class TxParquetSink(dir: String) extends WarehouseSink {
     // audit from the linked files' parquet footers (driver-side, zero
     // Spark jobs — round-13 optimization): the footers are read THROUGH
     // the hard links, proving the adopted bytes serve
-    val rows = footerRowCount(stagedRoot)
+    val rows = footerRows(stagedRoot)
     if (!tryPublish(0L, Manifest(rows, Seq(rel)))) {
       deleteRecursively(stagedRoot)
       throw new IllegalStateException(
@@ -2125,11 +2057,9 @@ final case class TxParquetSink(dir: String) extends WarehouseSink {
         if (tmp != null) { Files.deleteIfExists(tmp); () } // no tmp litter
       }
     }
-    var v = version() + 1
     val m = Manifest(n, staged, base = true,
       schema = if (staged.isEmpty) None else Some(df.schema.json))
-    while (!tryPublish(v, m)) v = version() + 1
-    v
+    publishLoop("replaceAll")((v, _) => v)(() => Claim(version() + 1, m))
   }
 
   private def stageAudited(spark: SparkSession, df: DataFrame, expected: Long): String = {
@@ -2174,7 +2104,7 @@ final case class TxParquetSink(dir: String) extends WarehouseSink {
       extraAggs: Seq[org.apache.spark.sql.Column] = Nil)
       : (String, Long, Map[String, Any]) = {
     import org.apache.spark.sql.functions.{count, lit}
-    val rel = "data/tx-" + java.util.UUID.randomUUID().toString
+    val rel = newStagedRel()
     val p = root.resolve(rel)
     val metrics =
       try runObserved(df, count(lit(1)).as("__n") +: extraAggs)(
@@ -2183,7 +2113,7 @@ final case class TxParquetSink(dir: String) extends WarehouseSink {
         deleteRecursively(p); throw e
       }
     val n = metrics("__n").asInstanceOf[Long]
-    val landed = footerRowCount(p)
+    val landed = footerRows(p)
     if (landed != n) {
       deleteRecursively(p)
       throw new IllegalStateException(
@@ -2214,10 +2144,17 @@ final case class TxParquetSink(dir: String) extends WarehouseSink {
     } finally lm.unregister(listener)
   }
 
-  /** Row count of a staged directory from the parquet footers alone —
-    * driver-side metadata reads (one footer per part file), no Spark
-    * job, no data pages touched. */
-  private def footerRowCount(p: Path): Long = TxParquetSink.footerRows(p)
+  /** A fresh staging directory, relative to the table root:
+    * `data/tx-<uuid>`, the first two components of every staged path
+    * ([[stagedRoot]]). */
+  private def newStagedRel(): String =
+    "data/tx-" + java.util.UUID.randomUUID().toString
+
+  /** The staging directory a manifest file entry lives in: the entry
+    * itself, or the bucketed root of a `data/tx-<uuid>/__bucket=<b>`
+    * entry ([[stageBuckets]]). */
+  private def stagedRoot(file: String): String =
+    Paths.get(file).subpath(0, 2).toString
 
   /** CHECK-constraint enforcement as observe-fusable aggregates: one
     * violation counter per declared constraint (FALSE violates, TRUE
@@ -2269,6 +2206,17 @@ final case class TxParquetSink(dir: String) extends WarehouseSink {
     // HERE, before its manifest becomes visible — a thrown fence
     // leaves only an unreferenced staged dir for vacuum
     publishFence()
+    // Fail LOUD, not corrupt: if a mistimed vacuum (retention window
+    // shorter than this commit) deleted a staged dir, publishing would
+    // commit a manifest of dangling files and break every later
+    // snapshot read. A races-with-vacuum deployment must raise the
+    // vacuum TTL; this check turns the common mistiming into an
+    // aborted commit instead of a poisoned table.
+    m.files.find(f => !Files.isDirectory(root.resolve(f))).foreach { f =>
+      throw new IllegalStateException(
+        s"staged directory $f of $dir vanished before publish (vacuumed " +
+          "mid-commit?) — aborting instead of committing a dangling manifest")
+    }
     if (v <= version()) return false
     Files.createDirectories(logDir)
     val tmp = Files.createTempFile(logDir, ".stage-", ".txn.tmp")
@@ -2279,19 +2227,49 @@ final case class TxParquetSink(dir: String) extends WarehouseSink {
     } finally Files.deleteIfExists(tmp)
   }
 
-  /** Remove crashed-writer litter: staged data directories no manifest
-    * references (they staged, never published, so their data was never
-    * visible) and `.txn.tmp` manifest scratch files in `_txlog` left by a
-    * committer that died between link and delete. Gated on an age TTL
-    * exactly like Delta's VACUUM retention window: anything younger
-    * than `minAgeMs` is presumed to belong to an IN-FLIGHT commit and
-    * is left alone — deleting a live writer's staged dir would let its
-    * publish commit a manifest of dangling files. The default retention
-    * is deliberately much longer than any sane commit; a deployment
-    * that vacuums aggressively must keep the TTL above its slowest
-    * writer's stage→publish window (the publish path also re-checks the
-    * staged dir and aborts loudly if it vanished). Returns the removed
-    * paths. */
+  /** THE OPTIMISTIC PUBLISH LOOP — the one concurrency policy of every
+    * commit that can lose a race. Each attempt asks `turn` what to do:
+    *  - [[Claim]]: run `beforePublish` (the test seam where a concurrent
+    *    writer interleaves; production callers leave the no-op), then
+    *    [[tryPublish]] the manifest at the claimed version. A win
+    *    records a base manifest in the base pointer and returns
+    *    `won(version, manifest)`.
+    *    A lost race keeps the claim's staged dirs for the next attempt
+    *    (REPUBLISH: the same or a re-filtered manifest at a fresh
+    *    version) or, when `stale`, deletes them (RECOMPUTE: the staged
+    *    rows were derived from the snapshot that just moved);
+    *  - [[Reread]]: nothing to publish from this snapshot yet — try
+    *    again;
+    *  - [[Done]]: return without publishing.
+    * After [[MaxPublishAttempts]] attempts the loop deletes the staged
+    * dirs it still holds and throws: a commit under unending contention
+    * fails loudly, bounded in time, instead of spinning. */
+  private def publishLoop[T](op: String, beforePublish: () => Unit = () => (),
+      stale: Boolean = false)(won: (Long, Manifest) => T)(
+      turn: () => Turn[T]): T = {
+    var held: Seq[String] = Nil
+    def release(): Unit = { held.foreach(f => deleteRecursively(root.resolve(f))); held = Nil }
+    var attempts = 0
+    while (attempts < MaxPublishAttempts) {
+      attempts += 1
+      turn() match {
+        case Done(result) => return result
+        case Reread => ()
+        case Claim(v, m) =>
+          held = m.files.map(stagedRoot).distinct
+          beforePublish()
+          if (tryPublish(v, m)) {
+            if (m.base) writeBasePointer(v)
+            return won(v, m)
+          }
+          if (stale) release()
+      }
+    }
+    release()
+    throw new IllegalStateException(
+      s"$op: gave up after $MaxPublishAttempts publish attempts on $dir")
+  }
+
   /** LOG TRUNCATION — the deliberate history-retention pass the
     * time-travel scaladoc reserves: permanently forget every version
     * BEFORE the newest base commit by deleting the pre-base manifests
@@ -2336,6 +2314,18 @@ final case class TxParquetSink(dir: String) extends WarehouseSink {
     (manifests ++ dirs).map(_.toString)
   }
 
+  /** Remove crashed-writer litter: staged data directories no manifest
+    * references (they staged, never published, so their data was never
+    * visible) and `.txn.tmp` manifest scratch files in `_txlog` left by a
+    * committer that died between link and delete. Gated on an age TTL
+    * exactly like Delta's VACUUM retention window: anything younger
+    * than `minAgeMs` is presumed to belong to an IN-FLIGHT commit and
+    * is left alone — deleting a live writer's staged dir aborts its
+    * commit ([[tryPublish]] refuses a manifest whose staged dir
+    * vanished). The default retention is deliberately much longer than
+    * any sane commit; a deployment that vacuums aggressively must keep
+    * the TTL above its slowest writer's stage→publish window. Returns
+    * the removed paths. */
   def vacuumOrphans(minAgeMs: Long = DefaultVacuumRetentionMs): Seq[String] = {
     val now = System.currentTimeMillis()
     def oldEnough(p: Path): Boolean =
@@ -2372,31 +2362,34 @@ final case class TxParquetSink(dir: String) extends WarehouseSink {
     * codec makes `base=true` invisible to older readers of other
     * fields). Without it a long-lived table accumulates one directory
     * per commit and every snapshot read unions an O(commits) file
-    * list. Concurrency is the same optimistic protocol as
-    * [[mergeUpsert]]: the base publishes at exactly snapshot-tip + 1,
-    * so a commit that lands in between loses us the race and the
-    * WHOLE read-stage-publish cycle retries — a base manifest may
-    * never hide a commit it did not contain. Historical directories
-    * stay on disk (still referenced by pre-base manifests, so
-    * [[vacuumOrphans]] never touches them) — time travel across the
-    * compaction keeps working; log truncation would be a separate,
-    * deliberate retention pass. Returns the published base version, or
-    * −1 on an empty table. `beforePublish` is the race-injection test
-    * seam, as in [[mergeUpsert]]. */
-  def compact(spark: SparkSession,
-      beforePublish: () => Unit = () => (),
-      maxAttempts: Int = 20): Long =
-    compactWith(spark, identity, beforePublish, maxAttempts)
+    * list. Concurrency is [[compactLoop]]'s: a commit that lands
+    * between read and publish makes the WHOLE read-stage-publish cycle
+    * run again — a base manifest may never hide a commit it did not
+    * contain. Historical directories stay on disk (still referenced by
+    * pre-base manifests, so [[vacuumOrphans]] never touches them) —
+    * time travel across the compaction keeps working; log truncation
+    * would be a separate, deliberate retention pass. Returns the
+    * published base version, or −1 on an empty table. */
+  def compact(spark: SparkSession, beforePublish: () => Unit = () => ()): Long =
+    compactLoop(spark, "compact", beforePublish) { df =>
+      // ONE pass over the table (round-13 optimization): the rewrite
+      // used to checkpoint the snapshot, count it, write it, and read
+      // it back — four table-sized passes; it now runs exactly once
+      // inside the staging write, with the count observed and the
+      // audit served from the parquet footers
+      val (staged, n, _) = stageObserved(df)
+      Manifest(n, Seq(staged), base = true, schema = Some(df.schema.json))
+    }
 
   /** RANGE-BUCKETED compaction — the maintenance pass that makes data
     * skipping SURVIVE compaction: [[compact]]'s single base directory
     * carries whole-table stats (useless for pruning — they span
     * everything); this one range-partitions the snapshot on `column`
-    * into `numBuckets` directories and records PER-FILE min/max in the
-    * base manifest, so a [[readSnapshotWhere]] after compaction prunes
-    * buckets exactly as it pruned the original commits — Delta's
-    * OPTIMIZE-preserves-stats behavior. Same optimistic protocol,
-    * races, and time travel as [[compact]]; the bucket column is
+    * into `numBuckets` directories ([[stageBuckets]]) and records
+    * PER-FILE min/max in the base manifest, so a [[readSnapshotWhere]]
+    * after compaction prunes buckets exactly as it pruned the original
+    * commits — Delta's OPTIMIZE-preserves-stats behavior. Same
+    * concurrency and time travel as [[compact]]; the bucket column is
     * synthetic (range-partition id) and never lands in the data.
     * `bloomCols` rebuilds PER-FILE bloom filters for the base's
     * buckets (one distinct-positions aggregate grouped by bucket —
@@ -2405,94 +2398,19 @@ final case class TxParquetSink(dir: String) extends WarehouseSink {
   def compactRanged(spark: SparkSession, column: String,
       numBuckets: Int = 8,
       bloomCols: Seq[String] = Nil,
-      beforePublish: () => Unit = () => (),
-      maxAttempts: Int = 20): Long = {
-    import org.apache.spark.sql.functions.{col, min, max, count, lit, spark_partition_id, explode, array, pmod, concat}
-    import org.apache.spark.sql.types.NumericType
-    var attempts = 0
-    while (true) {
-      attempts += 1
-      if (attempts > maxAttempts)
-        throw new IllegalStateException(
-          s"compactRanged: gave up after $maxAttempts publish attempts on $dir")
-      val snap = commits()
-      if (snap.isEmpty) return -1L
-      // single pass (round-13 optimization): no checkpoint, no
-      // up-front count — the rewrite plan runs once, inside the
-      // bucketed staging write, with the row count observed; the
-      // read-back below (needed for per-bucket stats anyway) audits
-      // what landed against it
-      val df = dataOf(spark, effective(snap)).get
-      // explicit bucket count: an unsized repartitionByRange gets
-      // AQE-coalesced and the bucketing evaporates (the TextOps.shingleSet lesson)
-      val rel = "data/tx-" + java.util.UUID.randomUUID().toString
-      val stagedRoot = root.resolve(rel)
-      val n = runObserved(
-        df.repartitionByRange(numBuckets, col(column))
-          .withColumn("__bucket", spark_partition_id()),
-        Seq(count(lit(1)).as("__n")))(
-        _.write.mode("error").partitionBy("__bucket")
-          .parquet(stagedRoot.toString))("__n").asInstanceOf[Long]
-      // audit + per-bucket stats in one read-back pass (partition
-      // discovery restores __bucket)
-      val back = spark.read.parquet(stagedRoot.toString)
-      val statRows = back.groupBy("__bucket")
-        .agg(count(lit(1)).as("__n"),
-          min(col(column)).cast("string").as("__min"),
-          max(col(column)).cast("string").as("__max"))
-        .collect()
-      val audited = statRows.map(_.getAs[Long]("__n")).sum
-      if (audited != n) {
-        deleteRecursively(stagedRoot)
-        throw new IllegalStateException(
-          s"compactRanged stage audit failed: wrote $audited rows, expected $n")
-      }
-      val num = df.schema.fields.find(_.name == column)
-        .exists(_.dataType.isInstanceOf[NumericType])
-      val buckets = statRows.map(r => r.getAs[Any]("__bucket").toString)
-      val files = buckets.map(b => s"$rel/__bucket=$b").toSeq
-      val fileStats = statRows.flatMap { r =>
-        val (mn, mx) = (r.getAs[String]("__min"), r.getAs[String]("__max"))
-        if (mn == null || mx == null || !finiteNumeric(num, mn, mx)) None
-        else Some(s"$rel/__bucket=${r.getAs[Any]("__bucket")}" ->
-          Map(column -> ColStats(num, mn, mx)))
-      }.toMap
-      // per-bucket blooms: distinct (bucket, position) pairs —
-      // ≤ buckets·BloomM ints to the driver
-      val fileBlooms = bloomCols.flatMap { c =>
-        back.where(col(c).isNotNull)
-          .select(col("__bucket"),
-            explode(array((0 until BloomK).map(i =>
-              pmod(graft.ext.TextOps.h32(
-                concat(lit(s"bloom$i:"), col(c).cast("string"))), lit(BloomM))
-                .cast("int")): _*)).as("p"))
-          .distinct().collect()
-          .groupBy(_.getAs[Any]("__bucket").toString)
-          .map { case (b, rows) =>
-            val bs = new java.util.BitSet(BloomM)
-            rows.foreach(r => bs.set(r.getAs[Int]("p")))
-            (s"$rel/__bucket=$b", c, BloomBits(BloomM, BloomK,
-              java.util.Base64.getUrlEncoder.withoutPadding
-                .encodeToString(bs.toByteArray)))
-          }
-      }.groupBy(_._1).map { case (f, rows) =>
-        f -> rows.map(r => r._2 -> r._3).toMap
-      }
-      beforePublish()
-      if (!Files.isDirectory(stagedRoot))
-        throw new IllegalStateException(
-          s"compactRanged: staged directory $rel vanished before publish " +
-            "(vacuumed mid-commit?) — aborting")
-      if (tryPublish(snap.last._1 + 1,
-          Manifest(n, files, base = true, fileStats = fileStats,
-            fileBlooms = fileBlooms, schema = Some(df.schema.json)))) {
-        writeBasePointer(snap.last._1 + 1)
-        return snap.last._1 + 1
-      }
-      deleteRecursively(stagedRoot) // lost the race: stale by construction
+      beforePublish: () => Unit = () => ()): Long =
+    compactLoop(spark, "compactRanged", beforePublish) { df =>
+      import org.apache.spark.sql.functions.col
+      val (buckets, back) = stageBuckets(df, column, numBuckets, Seq(column))
+      val blooms = bloomCols.map(c => c -> bloomsBy(back, c, col("__file")))
+      // per-file min/max and blooms only: without per-file row counts
+      // the base's files stay boundary scans for count credit
+      Manifest(buckets.map(_.rows).sum, buckets.map(_.files.head), base = true,
+        fileStats = perBucket(buckets)(_.stats),
+        fileBlooms = perBucket(buckets)(m =>
+          blooms.flatMap { case (c, bs) => bs.get(m.files.head).map(c -> _) }.toMap),
+        schema = Some(df.schema.json))
     }
-    -1L // unreachable
-  }
 
   /** CLUSTERED compaction WITH PER-FILE METADATA — `OPTIMIZE ...
     * ZORDER BY (x, y)` on this log, with [[compactRanged]]'s
@@ -2513,82 +2431,98 @@ final case class TxParquetSink(dir: String) extends WarehouseSink {
     * data skipping in one commit — the pattern every lakehouse pairs. */
   def compactClustered(spark: SparkSession, x: String, y: String,
       curve: String = "hilbert", bits: Int = 16, numBuckets: Int = 8,
-      beforePublish: () => Unit = () => (),
-      maxAttempts: Int = 20): Long = {
-    import org.apache.spark.sql.functions.{col, count, lit, spark_partition_id}
-    var attempts = 0
-    while (true) {
-      attempts += 1
-      if (attempts > maxAttempts)
-        throw new IllegalStateException(
-          s"compactClustered: gave up after $maxAttempts publish attempts on $dir")
-      val snap = commits()
-      if (snap.isEmpty) return -1L
-      // single pass (round-13 optimization): the curve-keyed rewrite
-      // runs once, inside the staging write, count observed — the
-      // per-segment read-back below audits what landed against it
-      val df0 = dataOf(spark, effective(snap)).get
+      beforePublish: () => Unit = () => ()): Long =
+    compactLoop(spark, "compactClustered", beforePublish) { df =>
+      import org.apache.spark.sql.functions.col
       val keyed = curve match {
-        case "hilbert" => Hilbert.withHilbert(df0, col(x), col(y), "__ck", bits)
-        case "zorder" => df0.withColumn("__ck", ZOrder.zValue(col(x), col(y), bits))
+        case "hilbert" => Hilbert.withHilbert(df, col(x), col(y), "__ck", bits)
+        case "zorder" => df.withColumn("__ck", ZOrder.zValue(col(x), col(y), bits))
         case other => throw new IllegalArgumentException(s"unknown curve: $other")
       }
-      val rel = "data/tx-" + java.util.UUID.randomUUID().toString
-      val stagedRoot = root.resolve(rel)
-      val n = runObserved(
-        keyed.repartitionByRange(numBuckets, col("__ck"))
-          .sortWithinPartitions("__ck")
-          .withColumn("__bucket", spark_partition_id())
-          .drop("__ck"),
+      // the commit-level records are the manifest fold over the
+      // segments — so statsAggregate and momentsAggregate keep
+      // answering AFTER this OPTIMIZE
+      val (segs, _) = stageBuckets(keyed, "__ck", numBuckets, Seq(x, y),
+        synthetic = true)
+      val folds = Seq(x, y).map(c => c -> foldColumn(wholeCommits(segs), c))
+      Manifest(segs.map(_.rows).sum, segs.map(_.files.head), base = true,
+        stats = folds.flatMap { case (c, fo) =>
+          fo.profile.map(p => c -> ColStats(p.num, p.min, p.max)) }.toMap,
+        fileStats = perBucket(segs)(_.stats),
+        fileRows = segs.map(m => m.files.head -> m.rows).toMap,
+        nullCounts = Seq(x, y).map(c => c -> segs.map(_.nullCounts(c)).sum).toMap,
+        sums = folds.flatMap { case (c, fo) => fo.sum.map(c -> _.toString) }.toMap,
+        fileSums = perBucket(segs)(_.sums),
+        sumsqs = folds.flatMap { case (c, fo) => fo.sumsq.map(c -> _.toString) }.toMap,
+        schema = Some(df.schema.json))
+    }
+
+  /** The optimistic shape every compaction shares: `stage` rewrites
+    * the current snapshot into a base manifest claimed at exactly
+    * snapshot-tip + 1; a commit landing in between makes the staged
+    * rewrite stale, so the loser deletes it and the next attempt reads,
+    * stages and claims afresh. −1 on an empty table. */
+  private def compactLoop(spark: SparkSession, op: String,
+      beforePublish: () => Unit)(stage: DataFrame => Manifest): Long =
+    publishLoop(op, beforePublish, stale = true)((v, _) => v) { () =>
+      val snap = commits()
+      if (snap.isEmpty) Done(-1L)
+      else Claim(snap.last._1 + 1, stage(dataOf(spark, effective(snap)).get))
+    }
+
+  /** BUCKETED STAGING — the write half of [[compactRanged]] and
+    * [[compactClustered]]: range-partitions `df` on `key` into
+    * `numBuckets` directories `<staged>/__bucket=<b>` (an explicit
+    * count: an unsized repartitionByRange gets AQE-coalesced and the
+    * bucketing evaporates — the TextOps.shingleSet lesson) in one
+    * write with the row count observed, then reads the staged root
+    * back ONCE grouped by bucket (partition discovery restores
+    * `__bucket`): the audit against the observed count and each
+    * bucket's [[statsAggsFor]] record over `statsCols`, decoded into
+    * one single-file manifest per bucket. A `synthetic` key (a curve
+    * value) also orders each bucket and is dropped before the write.
+    * Returns the bucket manifests and the read-back frame, whose
+    * `__file` column names each row's bucket file (per-file blooms). */
+  private def stageBuckets(df: DataFrame, key: String, numBuckets: Int,
+      statsCols: Seq[String], synthetic: Boolean = false)
+      : (Seq[Manifest], DataFrame) = {
+    import org.apache.spark.sql.functions.{col, concat, count, lit, spark_partition_id}
+    val ranged = df.repartitionByRange(numBuckets, col(key))
+    val laid = if (synthetic) ranged.sortWithinPartitions(key).drop(key) else ranged
+    val rel = newStagedRel()
+    val stagedRoot = root.resolve(rel)
+    val n =
+      try runObserved(laid.withColumn("__bucket", spark_partition_id()),
         Seq(count(lit(1)).as("__n")))(
         _.write.mode("error").partitionBy("__bucket")
           .parquet(stagedRoot.toString))("__n").asInstanceOf[Long]
-      // audit + per-segment records in ONE read-back pass (partition
-      // discovery restores __bucket): each segment decodes into a
-      // single-file manifest, and the commit-level records are the
-      // manifest fold over the segments — so statsAggregate and
-      // momentsAggregate keep answering AFTER this OPTIMIZE
-      val segs = spark.read.parquet(stagedRoot.toString).groupBy("__bucket")
-        .agg(count(lit(1)).as("__n"), statsAggsFor(df0.schema, Seq(x, y)): _*)
-        .collect().toSeq.map { r =>
-          val bn = r.getAs[Long]("__n")
-          val (st, nc, sm, sq) =
-            decodeStatsMetrics(r.getAs[Any](_), bn, Seq(x, y), df0.schema)
-          Manifest(bn, Seq(s"$rel/__bucket=${r.getAs[Any]("__bucket")}"),
-            stats = st, nullCounts = nc, sums = sm, sumsqs = sq)
-        }
-      val audited = segs.map(_.rows).sum
-      if (audited != n) {
-        deleteRecursively(stagedRoot)
-        throw new IllegalStateException(
-          s"compactClustered stage audit failed: wrote $audited rows, expected $n")
+      catch { case e: Throwable => deleteRecursively(stagedRoot); throw e }
+    val back = df.sparkSession.read.parquet(stagedRoot.toString)
+      .withColumn("__file",
+        concat(lit(s"$rel/__bucket="), col("__bucket").cast("string")))
+    val buckets = back.groupBy("__file")
+      .agg(count(lit(1)).as("__n"), statsAggsFor(df.schema, statsCols): _*)
+      .collect().toSeq.map { r =>
+        val bn = r.getAs[Long]("__n")
+        val (st, nc, sm, sq) =
+          decodeStatsMetrics(r.getAs[Any](_), bn, statsCols, df.schema)
+        Manifest(bn, Seq(r.getAs[String]("__file")),
+          stats = st, nullCounts = nc, sums = sm, sumsqs = sq)
       }
-      def perFile[T](rec: Manifest => Map[String, T]) =
-        segs.filter(rec(_).nonEmpty).map(m => m.files.head -> rec(m)).toMap
-      val folds = Seq(x, y).map(c => c -> foldColumn(wholeCommits(segs), c))
-      beforePublish()
-      if (!Files.isDirectory(stagedRoot))
-        throw new IllegalStateException(
-          s"compactClustered: staged directory $rel vanished before publish " +
-            "(vacuumed mid-commit?) — aborting")
-      if (tryPublish(snap.last._1 + 1,
-          Manifest(n, segs.map(_.files.head), base = true,
-            stats = folds.flatMap { case (c, fo) =>
-              fo.profile.map(p => c -> ColStats(p.num, p.min, p.max)) }.toMap,
-            fileStats = perFile(_.stats),
-            fileRows = segs.map(m => m.files.head -> m.rows).toMap,
-            nullCounts = Seq(x, y).map(c => c -> segs.map(_.nullCounts(c)).sum).toMap,
-            sums = folds.flatMap { case (c, fo) => fo.sum.map(c -> _.toString) }.toMap,
-            fileSums = perFile(_.sums),
-            sumsqs = folds.flatMap { case (c, fo) => fo.sumsq.map(c -> _.toString) }.toMap,
-            schema = Some(df0.schema.json)))) {
-        writeBasePointer(snap.last._1 + 1)
-        return snap.last._1 + 1
-      }
-      deleteRecursively(stagedRoot) // lost the race: stale by construction
+    val audited = buckets.map(_.rows).sum
+    if (audited != n) {
+      deleteRecursively(stagedRoot)
+      throw new IllegalStateException(
+        s"stage audit failed: wrote $audited rows, expected $n ($stagedRoot)")
     }
-    -1L // unreachable
+    (buckets, back)
   }
+
+  /** A bucketed base's per-file record map, one entry per bucket
+    * manifest that carries the record. */
+  private def perBucket[T](buckets: Seq[Manifest])(
+      rec: Manifest => Map[String, T]): Map[String, Map[String, T]] =
+    buckets.filter(rec(_).nonEmpty).map(m => m.files.head -> rec(m)).toMap
 
   /** RESTORE TABLE TO VERSION — roll the table back to a historical
     * version AS A NEW COMMIT (Delta's RESTORE): the target version's
@@ -2604,55 +2538,28 @@ final case class TxParquetSink(dir: String) extends WarehouseSink {
     * trade documented on [[deleteWhere]]. Concurrency: restore wins by
     * design — an interleaved commit lands below the restore base and
     * is rolled back with everything else (a rollback that spared
-    * late-arriving writes would not be a rollback); the optimistic
-    * loop only re-stages to keep the version allocation race-free.
+    * late-arriving writes would not be a rollback), so a lost race
+    * republishes the same staged snapshot at the next version.
     * `toVersion = -1` restores the PRE-HISTORY EMPTY state (an empty
     * base commit, zero files — what rolling back a table's very first
     * transaction means; [[graft.etl.TxCatalog]]'s repair of orphans
     * above an empty pin needs exactly this). Returns the restore
     * commit's version. */
-  def restore(spark: SparkSession, toVersion: Long,
-      maxAttempts: Int = 20): Long = {
+  def restore(spark: SparkSession, toVersion: Long): Long = {
     require(toVersion <= version(),
       s"restore: version $toVersion is beyond the tip of $dir")
-    if (toVersion < 0L) {
-      var attempts = 0
-      while (true) {
-        attempts += 1
-        if (attempts > maxAttempts)
-          throw new IllegalStateException(
-            s"restore: gave up after $maxAttempts publish attempts on $dir")
-        val v = version() + 1
-        if (tryPublish(v, Manifest(0, Nil, base = true, restated = true))) {
-          writeBasePointer(v)
-          return v
-        }
+    val m =
+      if (toVersion < 0L) Manifest(0, Nil, base = true, restated = true)
+      else {
+        val df = readVersion(spark, toVersion).getOrElse(
+          throw new IllegalArgumentException(
+            s"restore: version $toVersion of $dir is not readable " +
+              "(never existed, or truncated away)"))
+        val (staged, n, _) = stageObserved(df)
+        Manifest(n, Seq(staged), base = true, restated = true,
+          schema = Some(df.schema.json))
       }
-    }
-    val df = readVersion(spark, toVersion).getOrElse(
-      throw new IllegalArgumentException(
-        s"restore: version $toVersion of $dir is not readable " +
-          "(never existed, or truncated away)"))
-      .localCheckpoint(eager = true)
-    var attempts = 0
-    while (true) {
-      attempts += 1
-      if (attempts > maxAttempts)
-        throw new IllegalStateException(
-          s"restore: gave up after $maxAttempts publish attempts on $dir")
-      // count fused into the staging write (round-13 optimization);
-      // the eager checkpoint above still pins the historical snapshot
-      // across publish retries
-      val (staged, n, _) = stageObserved(df)
-      val v = version() + 1
-      if (tryPublish(v, Manifest(n, Seq(staged), base = true,
-          restated = true, schema = Some(df.schema.json)))) {
-        writeBasePointer(v)
-        return v
-      }
-      deleteRecursively(root.resolve(staged))
-    }
-    -1L // unreachable
+    publishLoop("restore")((v, _) => v)(() => Claim(version() + 1, m))
   }
 
   /** TRUE iff any commit in (fromV, toV] RESTATED table contents (a
@@ -2675,43 +2582,6 @@ final case class TxParquetSink(dir: String) extends WarehouseSink {
     * Mumick: extremes are not self-maintainable under retraction). */
   def maskedBetween(fromV: Long, toV: Long): Boolean =
     commits().exists { case (v, m) => v > fromV && v <= toV && m.hidesRows }
-
-  private def compactWith(spark: SparkSession,
-      layout: DataFrame => DataFrame,
-      beforePublish: () => Unit,
-      maxAttempts: Int): Long = {
-    var attempts = 0
-    while (true) {
-      attempts += 1
-      if (attempts > maxAttempts)
-        throw new IllegalStateException(
-          s"compact: gave up after $maxAttempts publish attempts on $dir")
-      val snap = commits()
-      if (snap.isEmpty) return -1L
-      // ONE pass over the table (round-13 optimization): the rewrite
-      // used to checkpoint the snapshot, count it, write it, and read
-      // it back — four table-sized passes; the layout plan now runs
-      // exactly once inside the staging write, with the count observed
-      // and the audit served from the parquet footers. A lost publish
-      // race recomputes from the fresh snapshot exactly as before.
-      val df = layout(dataOf(spark, effective(snap)).get)
-      val (staged, n, _) = stageObserved(df)
-      beforePublish()
-      if (!Files.isDirectory(root.resolve(staged)))
-        throw new IllegalStateException(
-          s"compact: staged directory $staged vanished before publish " +
-            "(vacuumed mid-commit?) — aborting")
-      if (tryPublish(snap.last._1 + 1, Manifest(n, Seq(staged), base = true,
-          schema = Some(df.schema.json)))) {
-        writeBasePointer(snap.last._1 + 1)
-        return snap.last._1 + 1
-      }
-      // lost the race: a writer committed at our version — the staged
-      // rewrite is stale by construction; drop it and redo the cycle
-      deleteRecursively(root.resolve(staged))
-    }
-    -1L // unreachable
-  }
 
   /** Directory listing with the stream CLOSED before returning —
     * `Files.list` leaks a file descriptor per call otherwise, and
@@ -2762,7 +2632,15 @@ object TxParquetSink {
     * scaladoc for why Spark's own Observation listener is not used).
     * Listener-bus delivery is asynchronous, so [[await]] blocks with a
     * generous timeout and fails LOUDLY if the metrics never arrive —
-    * a silent default would let an unaudited commit publish. */
+    * a silent default would let an unaudited commit publish.
+    *
+    * Why a listener at all (checked against Spark 4.1.2): there is no
+    * synchronous handle on a write's observed metrics. `Observation`
+    * itself is completed by `classic.ObservationManager`'s
+    * `QueryExecutionListener` on this same asynchronous bus, so it
+    * would wait exactly as long; and `DataFrameWriter.save` returns
+    * Unit, not its command's `QueryExecution`, so the metrics the
+    * write computed on the driver cannot be read from the call. */
   private[etl] final class StageMetricsListener(name: String)
       extends org.apache.spark.sql.util.QueryExecutionListener {
     @volatile private var metrics: Option[Map[String, Any]] = None
@@ -2788,6 +2666,26 @@ object TxParquetSink {
 
   /** The shared no-op publish fence (plain sinks). */
   private val NoFence: () => Unit = () => ()
+
+  /** Publish attempts a commit makes before [[TxParquetSink.publishLoop]]
+    * gives up. */
+  private val MaxPublishAttempts = 20
+
+  /** One attempt of [[TxParquetSink.publishLoop]]: claim a version
+    * with a manifest, re-read without publishing, or finish. */
+  private sealed trait Turn[+T]
+  private final case class Claim(version: Long, manifest: Manifest)
+      extends Turn[Nothing]
+  private case object Reread extends Turn[Nothing]
+  private final case class Done[T](result: T) extends Turn[T]
+
+  /** A bloom filter with the given bit positions set. */
+  private def bloomOf(positions: Iterable[Int]): BloomBits = {
+    val bs = new java.util.BitSet(BloomM)
+    positions.foreach(bs.set)
+    BloomBits(BloomM, BloomK,
+      java.util.Base64.getUrlEncoder.withoutPadding.encodeToString(bs.toByteArray))
+  }
 
   /** One table's commit log as [[TxParquetSink.cachedLog]] caches it:
     * the validating sorted `.txn` name listing, the effective suffix

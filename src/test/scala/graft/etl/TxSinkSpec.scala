@@ -145,6 +145,24 @@ class TxSinkSpec extends SparkSpec {
     assert(keySet(t) == Seq("P1"))
   }
 
+  test("append and replaceAll refuse to publish a staged dir vacuumed mid-commit") {
+    val t = table()
+    t.append(batch("P1" -> "Widget"))
+    // the fence runs at publish time, after staging: a zero-TTL vacuum
+    // there deletes the commit's staged dir, as a mistimed vacuum would
+    val sabotaged = t.withFence(() => { t.vacuumOrphans(minAgeMs = 0L); () })
+    val e1 = intercept[IllegalStateException] {
+      sabotaged.append(batch("Q1" -> "victim"))
+    }
+    assert(e1.getMessage.contains("vanished before publish"))
+    assert(keySet(t) == Seq("P1"))
+    val e2 = intercept[IllegalStateException] {
+      sabotaged.replaceAll(spark, batch("Q2" -> "victim"))
+    }
+    assert(e2.getMessage.contains("vanished before publish"))
+    assert(keySet(t) == Seq("P1") && t.version() == 0L)
+  }
+
   test("mid-commit writer survives a concurrent default-TTL vacuum") {
     // The other face of the TTL guard (ADVICE r6): not just that a
     // synthetic staged dir is left alone, but that a REAL writer whose
@@ -428,6 +446,33 @@ class TxSinkSpec extends SparkSpec {
     // replace is version-relative: the interleaved commit published
     // FIRST, so its d1 row is superseded; its d3 row survives
     assert(keySet2(t) == Seq("d1/P1", "d2/Q1", "d3/X2"))
+  }
+
+  test("a commit that loses every race gives up after 20 attempts and deletes its staging") {
+    val t = table()
+    t.append(pbatch(("d1", "P1", "kept")))
+    // a concurrent commit lands inside every publish window
+    var landed = 0
+    val alwaysRaced: () => Unit = () => { t.deleteWhere(spark, "false"); landed += 1 }
+    val republish = intercept[IllegalStateException] {
+      t.overwritePartitions(spark, pbatch(("d1", "P2", "lost")), Seq("day"),
+        beforePublish = alwaysRaced)
+    }
+    assert(republish.getMessage.contains("gave up after 20 publish attempts"))
+    assert(landed == 20)
+    val recompute = intercept[IllegalStateException] {
+      t.compact(spark, beforePublish = alwaysRaced)
+    }
+    assert(recompute.getMessage.contains("gave up after 20 publish attempts"))
+    assert(landed == 40)
+    // neither loser left a staged dir behind, and the table is intact
+    import scala.jdk.CollectionConverters._
+    val referenced = t.commits().flatMap(_._2.files).toSet
+    val staged = Files.list(java.nio.file.Paths.get(t.dir, "data"))
+    val dirs = try staged.iterator().asScala.map(p => s"data/${p.getFileName}").toSeq
+      finally staged.close()
+    assert(dirs.forall(referenced.contains), s"unreferenced staging: $dirs")
+    assert(keySet2(t) == Seq("d1/P1"))
   }
 
   test("merge keeps its metadata-only fast path across a disjoint same-cols overwrite") {
