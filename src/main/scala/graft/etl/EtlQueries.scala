@@ -2749,8 +2749,8 @@ object EtlQueries {
     * sibling (the round-9 verdict's top metadata gap): a plain
     * `df.where(commit-aligned range).agg(count/min/max/sum)` over the
     * snapshot scan, rewritten WHOLE into a LocalRelation through
-    * [[TxParquetSink.filteredMetaProfile]] — every file proven Full or
-    * Excluded by the predicate, extremes and exact sums folded from
+    * [[TxParquetSink.metaProfile]] under the predicate — every file
+    * proven Full or Excluded, extremes and exact sums folded from
     * the credited manifests, zero scan stages (REQUIRED — a silently
     * non-firing rule fails the row). Hash-gated against DuckDB's
     * declarative recompute of the same range panel. At 100 TB:
@@ -2899,7 +2899,7 @@ object EtlQueries {
 
   /** GROUPED METADATA-AGGREGATE RULE — the `GROUP BY <partition col>`
     * profile answered commit-by-commit from manifests
-    * ([[TxParquetSink.groupedMetaProfileMulti]] through the Catalyst rule):
+    * ([[TxParquetSink.metaProfile]] grouped, through the Catalyst rule):
     * the rollup loads one commit per calendar YEAR with a `y` column
     * (each commit single-valued in `y` — the partition-grain shape),
     * and `GROUP BY y → count/min/max/sum(cents)` optimizes into
@@ -2931,7 +2931,7 @@ object EtlQueries {
   /** ROLLUP THROUGH THE METADATA RULE — GROUPING SETS over a
     * partition-grain table answered from commit-log manifests alone:
     * the (y) set folds per-commit records
-    * ([[TxParquetSink.groupedMetaProfileMulti]]), the grand total
+    * ([[TxParquetSink.metaProfile]] grouped by `y`), the grand total
     * folds the whole-table profile (with a row-count probe so an
     * empty input yields zero rows, matching the native
     * Aggregate-over-Expand semantics), and the union optimizes into
@@ -2992,7 +2992,7 @@ object EtlQueries {
 
   /** COMPOSITE-KEY GROUPED RULE — [[txGroupRule]] generalized to a
     * MULTI-column partition grain
-    * ([[TxParquetSink.groupedMetaProfileMulti]]): the load commits
+    * ([[TxParquetSink.metaProfile]] grouped by both): the load commits
     * once per (year, half) with both `y` and `hh` single-valued per
     * commit, a WHERE over both group columns drops interior tuples on
     * the driver, and `GROUP BY y, hh → count/min/max/sum(cents)`

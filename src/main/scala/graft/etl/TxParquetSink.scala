@@ -83,7 +83,7 @@ final case class TxParquetSink(dir: String) extends WarehouseSink {
 
   /** THE COMMIT-LOG SNAPSHOT CACHE — every optimizer-time metadata
     * read ([[version]], [[commits]], [[restatedBetween]],
-    * [[maskedBetween]], [[columnMetaProfile]], and through them
+    * [[maskedBetween]], [[metaProfile]], and through them
     * [[graft.plans.MvRewrite]] / [[graft.plans.MetadataAggregates]] /
     * [[graft.plans.ManifestBroadcastJoins]]) used to re-read and
     * re-parse manifest files per PLAN — fine at bench QPS, repeated
@@ -545,15 +545,19 @@ final case class TxParquetSink(dir: String) extends WarehouseSink {
     * manifest stats/blooms hold `CAST(x AS STRING)` forms, while SQL
     * comparison happens after implicit coercion — so a constraint only
     * prunes when the literal's rendering provably matches the column's:
-    * numeric literals against numeric stats (exact BigDecimal), string
-    * literals against string stats (engine collation). A bloom probes
-    * only when the stored cast form provably equals the literal's
-    * rendering — proven by the file's stats when recorded (string col ↔
-    * string lit, or integral-formed numeric stats ↔ integral lit — a
+    * numeric literals against numeric stats (exact BigDecimal), and
+    * string literals ONLY against a column the manifest's recorded
+    * `schema` proves STRING (engine collation). Spark casts a string
+    * literal to a DATE/TIMESTAMP column's type before comparing, so
+    * `d = '2024-1-1'` or `ts <= '2024-01-01'` constrains nothing here;
+    * a manifest without a recorded schema keeps the file and never
+    * gives it Full credit. A bloom probes only when the stored cast
+    * form provably equals the literal's rendering: the proven STRING
+    * column for a string literal; integral-formed numeric stats, else
+    * an integral column in the recorded schema, for an integral one (a
     * DOUBLE column stores "5.0", so probing it with `= 5`'s "5" is
-    * refused rather than wrongly pruned), else by the manifest's
-    * recorded `schema` (STRING column ↔ string lit, integral column ↔
-    * integral lit). Any mismatch, or neither proof, ⇒ the file is read.
+    * refused rather than wrongly pruned). Any mismatch, or no proof,
+    * ⇒ the file is read.
     * At 100 TB this is the read path every ad-hoc query takes: the user
     * writes WHERE, the manifests decide which files exist for the
     * scan. Returns None for an empty table or an all-pruned read. */
@@ -701,114 +705,66 @@ final case class TxParquetSink(dir: String) extends WarehouseSink {
       m.files.map(f => root.resolve(f).toString -> (v, m.rows))
     }.toMap
 
-  /** OPTIMIZER-GRADE METADATA COUNT — `Some(count)` iff COUNT(*) under
-    * the (optional) predicate is answerable from manifests WITHOUT any
-    * scan: the log carries no row-hiding masks, and — when a predicate
-    * is given — [[classifyFiles]] proves every file Full or Excluded
-    * (one Boundary file would need data). `None` means "stay silent":
-    * this is the driver-side kernel behind
-    * [[graft.plans.MetadataAggregates]], the Catalyst rule that
-    * rewrites whole count aggregates into literal results, so a wrong
-    * answer is never an option and an unanswerable one costs nothing
-    * (the scan plan stands). Unlike [[countWhere]] this NEVER launches
-    * a job — pure O(commits) metadata, safe inside the optimizer. */
-  def countFromMetadata(spark: SparkSession,
-      predicateSql: Option[String]): Option[Long] = {
-    val cs = resolvedCommits()
-    if (cs.isEmpty || cs.exists(_._2.hidesRows)) return None
-    predicateSql match {
-      case None => Some(cs.map(_._2.rows).sum)
-      case Some(p) =>
-        try {
-          val classed = classifyFiles(spark, p, cs)
-          if (classed.exists(_._3 == Boundary)) None
-          else Some(credited(classed).map(_._3).sum)
-        } catch { case scala.util.control.NonFatal(_) => None }
-    }
-  }
-
-  /** OPTIMIZER-GRADE COLUMN PROFILE — the quiet (Option, never-throw,
-    * never-scan) sibling of [[statsAggregate]]/[[momentsAggregate]],
-    * for [[graft.plans.MetadataAggregates]]' MIN/MAX/SUM rewrites:
-    * Some iff the log is mask-free and EVERY data commit carries
-    * min/max stats for `column`. `nonNull`/`sum` are themselves
-    * optional (each needs its record on every commit); `sum` folds as
-    * BigInt — the caller decides whether it fits the engine type. */
-  def columnMetaProfile(column: String): Option[ColMetaProfile] =
-    maskFreeData().flatMap(data => foldColumn(wholeCommits(data), column).profile)
-
-  /** OPTIMIZER-GRADE FILTERED PROFILE — [[columnMetaProfile]] under a
-    * predicate: `Some((rows, per-column profile))` iff every aggregate
-    * ingredient is provable from manifests with ZERO data reads —
-    * [[classifyFiles]] classifies every file Full or Excluded (one
-    * Boundary file would need a scan; the predicate must have parsed
-    * completely) and every Full file carries min/max stats for every
-    * requested column. Per-column `nonNull` needs the file's null
-    * count (single-directory commits only — null counts are
-    * commit-grain) and `sum` a per-file or single-directory sum
-    * record; each is independently absent rather than wrong. An
-    * all-Excluded classification returns `Some((0, empty))` — the
-    * predicate provably matches nothing. Never launches a job: this
-    * is [[graft.plans.MetadataAggregates]]' filtered branch, so a
-    * `df.where(commit-aligned range).agg(min/max/sum)` plans to a
-    * literal — the boundary-exact [[statsAggregateWhere]] capability,
-    * reachable from a plain DataFrame aggregate when (and only when)
-    * no boundary scan would be needed. */
-  def filteredMetaProfile(spark: SparkSession, predicateSql: String,
-      columns: Seq[String]): Option[(Long, Map[String, ColMetaProfile])] =
+  /** THE QUIET METADATA KERNEL — the (Option, never-throw, never-scan)
+    * sibling of [[statsAggregate]]/[[momentsAggregate]] and the one
+    * driver-side kernel behind [[graft.plans.MetadataAggregates]] (and
+    * [[graft.plans.MvRewrite]]'s AVG proof). One entry per group tuple:
+    * (rendered group values in `groupCols` order, rows, and per
+    * `aggCols` column whose stats every unit of the group carries, its
+    * [[ColMetaProfile]]). The units a fold credits:
+    *
+    *  - no predicate: the data commits of the log;
+    *  - a predicate: the Full files of [[classifyFiles]] — one Boundary
+    *    file would need data, so the answer is None (an all-Excluded
+    *    classification credits nothing: one empty ungrouped entry).
+    *
+    * With `groupCols` empty there is exactly one entry (empty values).
+    * Grouping needs every unit SINGLE-VALUED and null-free in every
+    * group column (recorded min == max and a recorded zero null
+    * count) with one numeric flag per column — the partition-grain
+    * load shape (one commit per day, per (day, region), …) where a
+    * grouped profile is just a per-group fold of per-unit records.
+    * None on an empty or row-hiding (masked) log, on a predicate the
+    * parser rejects, and whenever the guard fails: an unanswerable
+    * question costs nothing (the scan plan stands), a wrong answer is
+    * never an option. O(commits) driver metadata — safe inside the
+    * optimizer. `nonNull`/`sum` of a profile are themselves optional
+    * (each needs its record on every unit); `sum` folds as BigInt —
+    * the caller decides whether it fits the engine type. */
+  def metaProfile(spark: SparkSession, predicateSql: Option[String],
+      groupCols: Seq[String], aggCols: Seq[String])
+      : Option[Seq[(Seq[String], Long, Map[String, ColMetaProfile])]] =
     try {
-      val classed = classifyFiles(spark, predicateSql,
-        fullAlso = (m, f) => columns.forall(c => statsFor(m, f, c).isDefined))
-      if (classed.exists(_._3 == Boundary)) return None
-      val fulls = credited(classed)
-      val rows = fulls.map(_._3).sum
-      if (rows == 0L) return Some((0L, Map.empty))
-      Some((rows, columns.map(c =>
-        c -> foldColumn(fulls, c).profile.getOrElse(return None)).toMap))
+      val cs = resolvedCommits()
+      if (cs.isEmpty || cs.exists(_._2.hidesRows)) return None
+      val units = predicateSql match {
+        case None => wholeCommits(cs.map(_._2).filter(_.rows > 0))
+        case Some(p) =>
+          val classed = classifyFiles(spark, p, cs)
+          if (classed.exists(_._3 == Boundary)) return None
+          credited(classed)
+      }
+      // each unit's single value per group column, or no grouping
+      val keys = units.map { case (m, f, _) => groupCols.map { g =>
+        val s = f.fold(m.stats.get(g))(statsFor(m, _, g))
+          .filter(s => s.min == s.max && m.nullCounts.get(g).contains(0L))
+          .getOrElse(return None)
+        (s.min, s.num)
+      } }
+      if (keys.map(_.map(_._2)).distinct.size > 1) return None
+      val groups =
+        if (groupCols.isEmpty) Seq(Nil -> units)
+        else units.zip(keys).groupBy(_._2.map(_._1)).toSeq
+          .map { case (gv, us) => gv -> us.map(_._1) }
+      Some(groups.map { case (gv, us) =>
+        (gv, us.map(_._3).sum, aggCols.flatMap(c =>
+          foldColumn(us, c).profile.map(c -> _)).toMap)
+      })
     } catch { case scala.util.control.NonFatal(_) => None }
 
-  /** OPTIMIZER-GRADE GROUPED PROFILE — the `GROUP BY <cols>` sibling
-    * of [[columnMetaProfile]]: `Some` iff the log is mask-free and
-    * EVERY data commit is SINGLE-VALUED in EVERY group column (recorded
-    * min == max and a recorded zero null count) — the partition-grain
-    * load shape (one commit per day, per (day, region), …) where a
-    * grouped profile is just a per-group fold of per-commit records.
-    * One entry per distinct group tuple: (rendered group values in
-    * `groupCols` order, per-column numeric flags, tuple rows, per
-    * `aggCols` column the group's [[ColMetaProfile]] — every commit of
-    * the group must carry the column's stats, or the whole answer is
-    * None). O(commits) driver metadata, never a job: the kernel behind
-    * [[graft.plans.MetadataAggregates]]' grouped rewrite, which turns
-    * `SELECT g, count(*), min(x), max(x), sum(x) … GROUP BY g` over a
-    * partition-grain table into a literal LocalRelation with no scan
-    * stage at any table size. */
-  def groupedMetaProfileMulti(groupCols: Seq[String], aggCols: Seq[String])
-      : Option[Seq[(Seq[String], Seq[Boolean], Long, Map[String, ColMetaProfile])]] = {
-    val data = maskFreeData().filter(_ => groupCols.nonEmpty).getOrElse(return None)
-    if (!data.forall(m => groupCols.forall(g =>
-      m.stats.get(g).exists(s => s.min == s.max) &&
-        m.nullCounts.get(g).contains(0L)))) return None
-    val gNums = groupCols.map(g => data.head.stats(g).num)
-    if (!data.forall(m => groupCols.zip(gNums).forall {
-      case (g, n) => m.stats(g).num == n })) return None
-    Some(data.groupBy(m => groupCols.map(g => m.stats(g).min)).toSeq.map {
-      case (gv, gms) =>
-        (gv, gNums, gms.map(_.rows).sum, aggCols.map(c =>
-          c -> foldColumn(wholeCommits(gms), c).profile.getOrElse(return None)).toMap)
-    })
-  }
-
-  /** The data commits (rows > 0) of a mask-free effective log — what
-    * the quiet whole-table profiles fold; None on an empty, masked or
-    * data-less log. */
-  private def maskFreeData(): Option[Seq[Manifest]] = {
-    val ms = resolvedCommits().map(_._2)
-    if (ms.exists(_.hidesRows)) None
-    else Some(ms.filter(_.rows > 0)).filter(_.nonEmpty)
-  }
-
-  /** The loud twin of [[maskFreeData]] behind [[statsAggregate]] and
-    * [[momentsAggregate]]: masked or data-less logs are REFUSED. */
+  /** The data commits behind [[statsAggregate]] and
+    * [[momentsAggregate]] — the loud twin of [[metaProfile]]'s
+    * unfiltered units: masked or data-less logs are REFUSED. */
   private def profiledData(api: String): Seq[Manifest] = {
     val ms = resolvedCommits().map(_._2)
     require(!ms.exists(_.hidesRows),
@@ -822,7 +778,7 @@ final case class TxParquetSink(dir: String) extends WarehouseSink {
   /** THE FILE CLASSIFICATION behind every pruned read and classified
     * aggregate ([[readSnapshotWhere]], [[skippingAuditWhere]],
     * [[countWhere]], [[statsAggregateWhere]], [[momentsAggregateWhere]],
-    * [[countFromMetadata]], [[filteredMetaProfile]]): per file of `cs`,
+    * [[metaProfile]]): per file of `cs`,
     * (manifest, path, Excluded/Boundary/Full, exact rows if known).
     * Exact per-file rows come from `frows=` records ([[compactClustered]]
     * bases) or the commit total when it staged a single directory.
@@ -905,7 +861,23 @@ final case class TxParquetSink(dir: String) extends WarehouseSink {
     m.fileBlooms.get(f).flatMap(_.get(column)).orElse(m.blooms.get(column))
       .forall(b => mightContain(b, value))
 
+  /** Is `c` a string-literal constraint on a column the manifest's
+    * recorded schema does not prove STRING? Spark compares a string
+    * literal with a DATE/TIMESTAMP/… column only after casting the
+    * literal (`d = '2024-1-1'` matches the stat "2024-01-01"), so such
+    * a constraint says nothing about the cast-to-string stats or
+    * blooms: the file is kept and never Full. */
+  private def stringLitUnproven(m: Manifest, c: PruneCons): Boolean =
+    (c match {
+      case r: RangeCons => !r.litNum
+      case e: EqCons => !e.litNum
+      case i: InCons => !i.litNum
+      case _: NotNullCons => false
+    }) && !m.fieldTypes.get(colOfCons(c))
+      .contains(org.apache.spark.sql.types.StringType)
+
   private def consKeeps(m: Manifest, f: String, c: PruneCons): Boolean = c match {
+    case _ if stringLitUnproven(m, c) => true
     case RangeCons(col, lo, hi, litNum, _, _) =>
       statsFor(m, f, col).forall(s =>
         s.num != litNum || !boundDisjoint(s, lo, hi))
@@ -914,16 +886,13 @@ final case class TxParquetSink(dir: String) extends WarehouseSink {
       val statsOk = stats.forall(s =>
         s.num != litNum || !boundDisjoint(s, Some(v), Some(v)))
       // bloom probes only under a PROVEN cast-form match (see
-      // readSnapshotWhere): from the stats, else the recorded schema
-      val bloomSafe = stats match {
-        case Some(s) =>
-          if (litNum) litIntegral && s.num &&
-            integralForm(s.min) && integralForm(s.max)
-          else !s.num
-        case None => m.fieldTypes.get(col).exists(t =>
-          if (litNum) litIntegral && integralType(t)
-          else t == org.apache.spark.sql.types.StringType)
-      }
+      // readSnapshotWhere): a string literal's STRING column is proven
+      // above; an integral literal needs integral-formed stats, else
+      // an integral column in the recorded schema
+      val bloomSafe = !litNum || litIntegral && (stats match {
+        case Some(s) => s.num && integralForm(s.min) && integralForm(s.max)
+        case None => m.fieldTypes.get(col).exists(integralType)
+      })
       statsOk && (!bloomSafe || pointKeeps(m, f, col, v))
     case InCons(col, vs, litNum, litIntegral) =>
       vs.isEmpty || vs.exists(v =>
@@ -938,6 +907,7 @@ final case class TxParquetSink(dir: String) extends WarehouseSink {
     * is full only when min > 20. Domain mismatches and unparseable
     * literals are never full. */
   private def consFull(m: Manifest, f: String, c: PruneCons): Boolean = c match {
+    case _ if stringLitUnproven(m, c) => false
     case r: RangeCons =>
       statsFor(m, f, r.col).exists { s =>
         s.num == r.litNum && (try {
@@ -2771,7 +2741,7 @@ object TxParquetSink {
     }
   }
 
-  /** [[TxParquetSink.columnMetaProfile]]'s answer: the comparison
+  /** [[TxParquetSink.metaProfile]]'s per-column answer: the comparison
     * domain flag and extremes in their cast-to-string form, total rows,
     * and the optional non-null count / exact integral sum. */
   final case class ColMetaProfile(num: Boolean, min: String, max: String,
@@ -2818,9 +2788,7 @@ object TxParquetSink {
   /** THE MANIFEST FOLD — the one reduction behind every metadata
     * aggregate and profile ([[TxParquetSink.statsAggregate]],
     * [[TxParquetSink.momentsAggregate]], their `Where` forms'
-    * Full-file credit, [[TxParquetSink.columnMetaProfile]],
-    * [[TxParquetSink.filteredMetaProfile]],
-    * [[TxParquetSink.groupedMetaProfileMulti]], and
+    * Full-file credit, [[TxParquetSink.metaProfile]], and
     * [[TxParquetSink.compactClustered]]'s commit-level records): min/max
     * in the BigDecimal or [[utf8Cmp]] domain, rows, non-null count,
     * sum and sum of squares over the credited units. A file's stats
@@ -2998,7 +2966,7 @@ object TxParquetSink {
     * iff its recorded null count is zero, which [[classifyFiles]]'s
     * existing per-constraint null-count gate already enforces. Parsing
     * it (instead of treating it as unrecognized) keeps `complete` true
-    * for the inferred-filter spelling, so [[countFromMetadata]] can
+    * for the inferred-filter spelling, so [[metaProfile]] can
     * credit Full files on plans the optimizer has already decorated. */
   private[etl] final case class NotNullCons(col: String) extends PruneCons
 
@@ -3300,7 +3268,7 @@ object TxParquetSink {
   /** The integral types — where addition is exact and associative (so
     * sums are recorded) and the cast-to-string form has no '.' (so an
     * integral literal's rendering is bloom-probe-safe). */
-  private def integralType(t: org.apache.spark.sql.types.DataType): Boolean =
+  private[graft] def integralType(t: org.apache.spark.sql.types.DataType): Boolean =
     t match {
       case org.apache.spark.sql.types.ByteType | org.apache.spark.sql.types.ShortType |
            org.apache.spark.sql.types.IntegerType | org.apache.spark.sql.types.LongType => true

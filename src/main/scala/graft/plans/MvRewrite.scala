@@ -5,7 +5,7 @@ import org.apache.spark.sql.catalyst.expressions.{Alias, AttributeReference, Cas
 import org.apache.spark.sql.catalyst.expressions.aggregate.{AggregateExpression, Average, Count, Max, Min, Sum}
 import org.apache.spark.sql.catalyst.plans.logical._
 import org.apache.spark.sql.catalyst.rules.Rule
-import org.apache.spark.sql.types.{ByteType, DoubleType, IntegerType, LongType, ShortType, StructType}
+import org.apache.spark.sql.types.{DoubleType, LongType, StructType}
 
 import graft.etl.TxParquetSink
 
@@ -21,8 +21,9 @@ import graft.etl.TxParquetSink
   *    columns (same grain = direct hit; strictly coarser = rollup:
   *    SUM re-sums partial sums, COUNT(*) sums the view's row counts,
   *    MIN/MAX fold the view's extremes — the only aggregates whose
-  *    re-aggregation is exact, which is why AVG and DISTINCT are
-  *    deliberately out of scope),
+  *    re-aggregation is exact, which is why DISTINCT is out of scope
+  *    and AVG serves only as one division of re-summed exact partials
+  *    under the 2^53 proof of [[avgExact]]),
   *  - every aggregate's source column has the matching pre-aggregate
   *    stored in the view (sum_/cntn_/min_/max_ per registered value
   *    column, `cnt` for COUNT(*), `cntn_` for the non-null
@@ -70,129 +71,44 @@ object MvRewrite extends Rule[LogicalPlan] {
     // even with a perfectly fresh registered cube (the reference's own
     // Q7 shape). Each grouping set is served from the finest covering
     // registered view and the branches union.
-    case agg @ Aggregate(groups, aggs, expand: Expand, _)
-        if groups.forall(_.isInstanceOf[AttributeReference]) &&
-          aggs.nonEmpty &&
-          groups.exists(_.asInstanceOf[AttributeReference].name ==
-            org.apache.spark.sql.catalyst.expressions.VirtualColumn.groupingIdName) =>
-      rewriteGroupingSets(groups.map(_.asInstanceOf[AttributeReference]),
-        aggs, expand).getOrElse(agg)
-    case agg @ Aggregate(groups, aggs, child, _)
+    case agg @ Aggregate(_, _, _: Expand, _) =>
+      GroupingSetShape.decompose(agg, viewServed)(rewrite).getOrElse(agg)
+    case agg @ Aggregate(groups, aggs, _, _)
         if groups.forall(_.isInstanceOf[AttributeReference]) &&
           aggs.nonEmpty && aggs.forall {
             case _: AttributeReference => true
-            case Alias(ae: AggregateExpression, _) => supported(ae)
+            case Alias(ae: AggregateExpression, _) => viewServed(ae)
             case _ => false
           } =>
-      rewrite(agg, groups.map(_.asInstanceOf[AttributeReference]),
-        aggs, child).getOrElse(agg)
+      rewrite(agg).getOrElse(agg)
   }
 
-  /** GROUPING-SETS REWRITE — `Aggregate(gid :: groupCopies, aggs,
-    * Expand(projections, _, child))` decomposes into one PLAIN
-    * aggregate per grouping set (the Expand projection tells which
-    * group columns the set keeps and which it nulls, plus the
-    * grouping-id literal), each served through the ordinary
-    * view-selection [[rewrite]] against `child`; the branches then
-    * project to the rollup's output shape (kept columns, NULLs for the
-    * rolled-up ones, the set's grouping-id) and UNION, with the
-    * original output names and exprIds restored on top. All-or-nothing
-    * across sets: one branch the views cannot answer keeps the fact
-    * scan for the whole rollup (a half-served Expand would read the
-    * fact anyway). Cost: |sets| small view aggregations instead of one
-    * |sets|-way row replication of the fact scan — the Expand shape is
-    * literally |sets| copies of every base row through one shuffle. */
-  private def rewriteGroupingSets(groups: Seq[AttributeReference],
-      aggs: Seq[NamedExpression], expand: Expand): Option[LogicalPlan] = {
-    val shape = GroupingSetShape.of(groups, expand).getOrElse(return None)
-    if (!GroupingSetShape.outputsOk(groups, aggs, supported)) return None
-    val branches = shape.sets.map { case (gidLit, included) =>
-      val branchGroups = shape.setCols.flatMap(c => included.get(c.exprId))
-      // fresh output aliases per branch: Union branches must not share
-      // output exprIds, and the final projection restores the originals
-      val aggAliases = aggs.collect {
-        case al @ Alias(ae: AggregateExpression, name) =>
-          al.exprId -> Alias(ae, name)()
-      }
-      // the GRAND-TOTAL set needs an empty-input guard: a global
-      // Aggregate(Nil, …) yields ONE row over empty input, while the
-      // native Aggregate-over-Expand groups by the grouping id and
-      // yields ZERO — so the () branch carries an extra COUNT(*) and
-      // filters it > 0 (a grouped branch emits rows only for existing
-      // groups and needs no guard)
-      val guard =
-        if (branchGroups.nonEmpty) None
-        else Some(Alias(Count(Literal(1)).toAggregateExpression(), "__rows")())
-      val innerAggs: Seq[NamedExpression] =
-        branchGroups ++ aggAliases.map(_._2) ++ guard
-      val inner = Aggregate(branchGroups, innerAggs, expand.child)
-      rewrite(inner, branchGroups, innerAggs, expand.child).map { served =>
-        val byId = served.output.map(a => a.exprId -> a).toMap
-        val aliasById = aggAliases.toMap
-        def groupValue(a: AttributeReference): Expression =
-          if (a.exprId == shape.gid.exprId) gidLit
-          else included.get(a.exprId) match {
-            case Some(childAttr) => byId(childAttr.exprId)
-            case None => Literal(null, a.dataType)
-          }
-        val projOut: Seq[NamedExpression] = aggs.map {
-          case a: AttributeReference => Alias(groupValue(a), a.name)()
-          case Alias(a: AttributeReference, name) =>
-            Alias(groupValue(a), name)()
-          case al @ Alias(_: AggregateExpression, name) =>
-            Alias(byId(aliasById(al.exprId).exprId), name)()
-          case _ => return None // unreachable: outputsOk gated
-        }
-        val src = guard.map(g =>
-          Filter(GreaterThan(byId(g.exprId), Literal(0L)), served))
-          .getOrElse(served)
-        Project(projOut, src)
-      }
-    }
-    // all-or-nothing: every set must serve from a view
-    if (branches.exists(_.isEmpty)) return None
-    val union = Union(branches.map(_.get))
-    val restored = union.output.zip(aggs).map { case (u, o) =>
-      Alias(u, o.name)(exprId = o.exprId)
-    }
-    Some(Project(restored, union))
-  }
-
-  private def supported(ae: AggregateExpression): Boolean =
-    !ae.isDistinct && ae.filter.isEmpty && (ae.aggregateFunction match {
-      case Count(Seq(l: Literal)) => l.value != null
-      case Count(Seq(_: AttributeReference)) => true
-      case Min(_: AttributeReference) => true
-      case Max(_: AttributeReference) => true
-      case Sum(a: AttributeReference, _) => a.dataType match {
-        case ByteType | ShortType | IntegerType | LongType => true
-        case _ => false
-      }
-      // AVG serves as ONE final division of exact partials —
-      // Sum(view sums) / Sum(view non-null counts), cast and divided
-      // exactly the way Average's own evaluateExpression does — but
-      // only under [[avgExact]]'s 2^53 bound: Spark accumulates
-      // non-decimal AVG in double, which is bit-identical to the exact
-      // long fold precisely while every intermediate subset sum stays
-      // under 2^53 (integer doubles are closed under exact addition
-      // there). Past the bound the rule stays silent rather than
-      // trading exactness for speed.
-      case Average(a: AttributeReference, _) => a.dataType match {
-        case ByteType | ShortType | IntegerType | LongType => true
-        case _ => false
-      }
-      case _ => false
-    })
+  /** The aggregates a view serves: [[MetadataAggregates.supported]]
+    * minus the two only manifests answer, exact DISTINCT (the
+    * partition-grain proof) and `ndv_estimate` (the sketch fold). */
+  private val viewServed: AggregateExpression => Boolean = ae =>
+    MetadataAggregates.supported(ae) && !ae.isDistinct &&
+      !ae.aggregateFunction.isInstanceOf[graft.functions.KmvNdvAgg]
 
   /** The 2^53 exactness bound for the AVG rewrite, provable from the
     * base table's commit-log stats alone (the ONE shared proof —
-    * [[MetadataAggregates.avgBoundOk]]). A masked log (no profile) or
-    * a non-numeric column declines. */
+    * [[MetadataAggregates.avgBoundOk]]). AVG serves as ONE final
+    * division of exact partials — Sum(view sums) / Sum(view non-null
+    * counts), cast and divided exactly the way Average's own
+    * evaluateExpression does: Spark accumulates non-decimal AVG in
+    * double, which is bit-identical to the exact long fold precisely
+    * while every intermediate subset sum stays under 2^53. Past the
+    * bound, over a masked log (no profile) or a non-numeric column the
+    * rule stays silent rather than trading exactness for speed. */
   private def avgExact(sink: TxParquetSink, column: String): Boolean =
-    sink.columnMetaProfile(column).exists(MetadataAggregates.avgBoundOk)
+    sink.metaProfile(SparkSession.active, None, Nil, Seq(column))
+      .flatMap(_.head._3.get(column)).exists(MetadataAggregates.avgBoundOk)
 
-  private def rewrite(agg: Aggregate, groups: Seq[AttributeReference],
-      aggs: Seq[NamedExpression], child: LogicalPlan): Option[LogicalPlan] = {
+  /** Serves the plain aggregate `agg` (all-attribute grouping) from
+    * the best registered view of the table its scan covers. */
+  private def rewrite(agg: Aggregate): Option[LogicalPlan] = {
+    val groups = agg.groupingExpressions.map(_.asInstanceOf[AttributeReference])
+    val (aggs, child) = (agg.aggregateExpressions, agg.child)
     val filters = scala.collection.mutable.ListBuffer.empty[Expression]
     // a diverged clone's scan yields both the clone and (failing
     // coverage) its source as candidates; each covering sink may carry
@@ -363,10 +279,8 @@ object MvRewrite extends Rule[LogicalPlan] {
     if (minMax &&
       !mv.valueCols.forall(c => fBy(c).dataType == vBy(s"min_$c").dataType))
       return None
-    if (!mv.valueCols.forall(c => fBy(c).dataType match {
-      case ByteType | ShortType | IntegerType | LongType => true
-      case _ => false
-    })) return None
+    if (!mv.valueCols.forall(c => TxParquetSink.integralType(fBy(c).dataType)))
+      return None
 
     val sgn = If(EqualTo(fBy("_change_type"), Literal("I")),
       Literal(1L), Literal(-1L))
@@ -455,10 +369,7 @@ object MvRewrite extends Rule[LogicalPlan] {
     if (!mv.valueCols.forall { c =>
       val vt = vTypes.get(s"min_$c")
       fTypes.get(c) == vt && bTypes.get(c) == vt &&
-        (fTypes.get(c) match {
-          case Some(ByteType | ShortType | IntegerType | LongType) => true
-          case _ => false
-        })
+        fTypes.get(c).exists(TxParquetSink.integralType)
     }) return None
 
     // the recompute reads the CURRENT snapshot while view ⊕ feed cover

@@ -957,6 +957,31 @@ class TxSinkSpec extends SparkSpec {
       .select("payload").as[String].collect().toSeq == Seq("v75"))
   }
 
+  test("a string literal prunes only a column the recorded schema proves STRING") {
+    // Spark casts a string literal to a DATE/TIMESTAMP column's type
+    // before comparing, so the cast-to-string stats ("2024-01-01",
+    // "2024-01-01 00:00:00") cannot judge '2024-1-1' or '2024-01-01'
+    // as strings: such files are kept and never credited Full
+    val t = table()
+    Seq(("2024-01-01", "a"), ("2024-01-05", "b")).foreach { case (day, tag) =>
+      t.appendWithStats(
+        Seq((java.sql.Timestamp.from(java.time.Instant.parse(s"${day}T00:00:00Z")),
+          java.sql.Date.valueOf(day), tag)).toDF("ts", "d", "tag"),
+        Seq("ts", "d", "tag"), bloomCols = Seq("ts", "d", "tag"))
+    }
+    def unpruned(p: String) = t.readSnapshot(spark).get.where(p).count()
+    Seq("ts <= '2024-01-01'", "ts = '2024-01-01'", "d = '2024-1-1'",
+      "d IN ('2024-1-5')", "d <= '2024-1-1'", "tag = 'b'").foreach { p =>
+      assert(unpruned(p) == 1L, s"fixture: '$p' matches one row")
+      assert(t.readSnapshotWhere(spark, p).map(_.count()).getOrElse(0L) == 1L, p)
+      assert(t.countWhere(spark, p) == 1L, p)
+    }
+    // the STRING column still prunes and credits from its stats
+    assert(t.skippingAuditWhere(spark, "tag = 'b'") == ((2, 1)))
+    assert(t.countWhereAudit(spark, "tag = 'b'") == ((1L, 1, 0, 1)))
+    assert(t.skippingAuditWhere(spark, "d = '2024-1-1'") == ((2, 0)))
+  }
+
   test("countWhere credits full files from manifests, scans only boundaries") {
     val t = table()
     (1 to 30).map(d => (f"2024-01-$d%02d", d.toLong)).grouped(10).foreach(g =>
@@ -1331,7 +1356,7 @@ class TxSinkSpec extends SparkSpec {
   test("log snapshot cache: repeated metadata reads against an unchanged table parse the log once") {
     // round-11 "What's missing #3": each optimization against a
     // tx-table scan re-read version/commits/restatedBetween/
-    // columnMetaProfile from disk — per-plan driver I/O at dashboard
+    // the column profile from disk — per-plan driver I/O at dashboard
     // QPS. The counted-I/O contract: N reads, ONE parse per manifest.
     val t = table()
     t.appendWithStats(batch("P1" -> "a"), statsCols = Seq("product_id"))
@@ -1344,7 +1369,8 @@ class TxSinkSpec extends SparkSpec {
       assert(t.commits().size == 2)
       assert(!t.restatedBetween(0L, 1L))
       assert(!t.maskedBetween(0L, 1L))
-      assert(t.columnMetaProfile("product_id").nonEmpty)
+      assert(t.metaProfile(spark, None, Nil, Seq("product_id"))
+        .exists(_.head._3.contains("product_id")))
       t.readSnapshot(spark).get // plan-time resolution, no job needed
     }
     assert(TxParquetSink.manifestParses.get() === before,
@@ -1832,7 +1858,7 @@ class TxSinkSpec extends SparkSpec {
     val meta = t.statsAggregate(spark, Seq("day"))
       .select("min_value", "max_value").as[(String, String)].head()
     assert(meta == scan, "metadata extremes must match the scan's collation")
-    val p = t.columnMetaProfile("day").get
+    val p = t.metaProfile(spark, None, Nil, Seq("day")).get.head._3("day")
     assert((p.min, p.max) == scan)
     // pruning: a range starting at U+E000 must KEEP the pair's commit
     // (UTF-16 comparison would call it disjoint and silently lose the row)

@@ -501,6 +501,7 @@ class MetadataAggregatesSpec extends AnyFunSuite {
   test("the rewrite equals the scanning plan on every probe") {
     val s = fresh()
     try {
+      import s.implicits._
       val t = table(s)
       val preds = Seq("amount >= 11 AND amount <= 20", "amount >= 1",
         "day >= '2024-01-11' AND day <= '2024-01-20'")
@@ -511,6 +512,45 @@ class MetadataAggregatesSpec extends AnyFunSuite {
         // fire: .count() plans through a different aggregate shape)
         val ground = t.readSnapshot(s).get.where(p).count()
         assert(withRule == ground, s"pred '$p': $withRule vs $ground")
+      }
+      // whole panels over a partition-grain table (one commit per
+      // month), each answered by the rule and compared with the same
+      // query over `.repartition(1)` of the snapshot — a shape the rule
+      // cannot see through, so it scans
+      val grain = TxParquetSink(
+        Files.createTempDirectory("metaaggprobe").toString + "/t")
+      (1 to 30).map(d => (f"2024-${(d - 1) / 10 + 1}%02d", f"2024-01-$d%02d",
+          if (d % 7 == 0) null else java.lang.Long.valueOf(d.toLong)))
+        .grouped(10).foreach(g => grain.appendWithStats(
+          g.toDF("month", "day", "amount"), Seq("month", "day", "amount")))
+      val cols = Seq(
+        count(lit(1)).as("n"), count(col("amount")).as("nn"),
+        min(col("amount")).as("mn"), max(col("amount")).as("mx"),
+        sum(col("amount")).as("sm"), avg(col("amount")).as("a"),
+        min(col("day")).as("d0"), max(col("day")).as("d1"))
+      def panel(df: org.apache.spark.sql.DataFrame) = df.agg(cols.head, cols.tail: _*)
+      val probes: Seq[(String, org.apache.spark.sql.DataFrame =>
+          org.apache.spark.sql.DataFrame)] = Seq(
+        "unfiltered panel" -> (df => df.agg(
+          countDistinct(col("month")).as("months"), cols: _*)),
+        "commit-aligned filter" -> (df => panel(df.where("month >= '2024-02'"))),
+        "empty filter" -> (df => panel(df.where("amount > 100"))),
+        "group-column filter" -> (df => df.where("month <> '2024-02'")
+          .groupBy("month").agg(count(lit(1)).as("n"),
+            min(col("amount")).as("mn"), sum(col("amount")).as("sm"),
+            avg(col("amount")).as("a"))),
+        "rollup" -> (df => df.rollup("month").agg(count(lit(1)).as("n"),
+          max(col("amount")).as("mx"), sum(col("amount")).as("sm"),
+          grouping_id().as("gid"))))
+      probes.foreach { case (name, q) =>
+        val snap = grain.readSnapshot(s).get
+        val ruled = q(snap)
+        assert(isLocal(ruled), s"$name: ${ruled.queryExecution.optimizedPlan}")
+        val scanned = q(snap.repartition(1))
+        assert(!isLocal(scanned), s"$name: the ground truth must scan")
+        def rows(df: org.apache.spark.sql.DataFrame) =
+          df.collect().map(_.toSeq.toString).sorted.toSeq
+        assert(rows(ruled) == rows(scanned), name)
       }
     } finally s.stop()
   }
@@ -579,6 +619,31 @@ class MetadataAggregatesSpec extends AnyFunSuite {
       val masked = t.readSnapshot(s).get
         .agg(expr("ndv_estimate(amount)").as("ndv"))
       assert(!isLocal(masked))
+      // exact DISTINCT admits only group values that round-trip into
+      // the engine's type: renderings the engine folds keep the scan.
+      // (1) −0.0 and 0.0 render apart, but Spark normalizes −0.0
+      val zeros = TxParquetSink(
+        Files.createTempDirectory("metaagg-zero").toString + "/t")
+      Seq(-0.0d, 0.0d).foreach(z => zeros.appendWithStats(
+        Seq.fill(3)(z).toDF("z"), Seq("z")))
+      // (2) one instant stamped under two session zones renders as
+      // "2024-01-01 00:00:00" and "2023-12-31 19:00:00"
+      val stamps = TxParquetSink(
+        Files.createTempDirectory("metaagg-ts").toString + "/t")
+      val instant = java.sql.Timestamp.from(
+        java.time.Instant.parse("2024-01-01T00:00:00Z"))
+      try Seq("UTC", "America/New_York").foreach { zone =>
+        s.conf.set("spark.sql.session.timeZone", zone)
+        stamps.appendWithStats(Seq(instant).toDF("ts"), Seq("ts"))
+      } finally s.conf.set("spark.sql.session.timeZone", "UTC")
+      Seq(zeros -> "z", stamps -> "ts").foreach { case (sink, c) =>
+        val q = sink.readSnapshot(s).get.agg(countDistinct(col(c)).as("n"))
+        val scan = sink.readSnapshot(s).get.repartition(1)
+          .agg(countDistinct(col(c)).as("n"))
+        assert(!isLocal(q), q.queryExecution.optimizedPlan.toString)
+        assert(q.collect().head.getLong(0) == scan.collect().head.getLong(0))
+        assert(scan.collect().head.getLong(0) == 1L)
+      }
     } finally s.stop()
   }
 }

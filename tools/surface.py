@@ -2,10 +2,13 @@
 """Code-surface counts for before/after comparisons of a change.
 
 Prints the non-blank, non-comment Scala lines of src/main, src/test and
-etl/TxParquetSink.scala, and the number of top-level `main` entry points
-in src/main. A line counts as comment when, stripped, it starts with
-`//`, `/*` or `*` (scaladoc bodies and closers); code followed by a
-trailing comment counts as code.
+etl/TxParquetSink.scala, the number of top-level `main` entry points
+in src/main, and the number of public TxParquetSink members. A line
+counts as comment when, stripped, it starts with `//`, `/*` or `*`
+(scaladoc bodies and closers); code followed by a trailing comment
+counts as code. A public member is a declaration (def, val, var, class,
+object, trait, type) at two-space indent, i.e. in the class or its
+companion, that is not `private` (nor `private[...]`).
 
 Usage: python3 tools/surface.py [repo-root]   (default: the current dir)
 """
@@ -15,6 +18,8 @@ import sys
 
 SINK = os.path.join("src", "main", "scala", "graft", "etl", "TxParquetSink.scala")
 MAIN = re.compile(r"^\s*def main\(")
+MEMBER = re.compile(r"^  (?:(?:final|override|implicit|lazy|sealed|abstract|case)\s+)*"
+                    r"(?:def|val|var|class|object|trait|type)\b")
 
 
 def scala_files(top):
@@ -35,6 +40,11 @@ def mains(path):
         return sum(1 for l in f if MAIN.match(l))
 
 
+def public_members(path):
+    with open(path, encoding="utf-8") as f:
+        return sum(1 for l in f if MEMBER.match(l))
+
+
 def main():
     root = sys.argv[1] if len(sys.argv) > 1 else "."
     src_main = os.path.join(root, "src", "main")
@@ -43,6 +53,7 @@ def main():
     print(f"src/test code lines: {sum(map(code_lines, scala_files(src_test))):,}")
     print(f"TxParquetSink.scala code lines: {code_lines(os.path.join(root, SINK)):,}")
     print(f"top-level mains: {sum(map(mains, scala_files(src_main)))}")
+    print(f"TxParquetSink public members: {public_members(os.path.join(root, SINK))}")
 
 
 if __name__ == "__main__":
