@@ -14,7 +14,7 @@ import org.apache.spark.sql.sources.InsertableRelation
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
-import graft.etl.TxParquetSink
+import graft.etl.{TxLog, TxParquetSink}
 
 import scala.jdk.CollectionConverters._
 
@@ -77,17 +77,13 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces {
   private def dirOf(ident: Identifier): Path =
     ident.namespace().foldLeft(root)(_.resolve(_)).resolve(ident.name)
 
-  private def isTableDir(p: Path): Boolean =
-    Files.isDirectory(p.resolve("_txlog"))
-
-  private def schemaFileOf(dir: Path): Path =
-    dir.resolve("_txlog").resolve("_schema.ddl")
+  private def isTableDir(p: Path): Boolean = TxLog.isTable(p)
 
   override def loadTable(ident: Identifier): Table = {
     val dir = dirOf(ident)
     if (!isTableDir(dir)) throw new NoSuchTableException(ident)
     val t = GraftTable(fullName(ident), TxParquetSink(dir.toString), None,
-      schemaFileOf(dir).toString)
+      TxLog.schemaFile(dir).toString)
     t.schema() // fail fast on an unreadable table; memoizes the
     t          // resolution the substitution rule reuses
   }
@@ -102,7 +98,7 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces {
         s"graft time travel takes a commit version number, got '$version'")
     }
     val t = GraftTable(s"${fullName(ident)}@v$v",
-      TxParquetSink(dir.toString), Some(v), schemaFileOf(dir).toString)
+      TxParquetSink(dir.toString), Some(v), TxLog.schemaFile(dir).toString)
     t.schema()
     t
   }
@@ -132,10 +128,9 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces {
         "maintenance concern (OPTIMIZE / compactRanged / z-order)")
     val dir = dirOf(ident)
     if (isTableDir(dir)) throw new TableAlreadyExistsException(ident)
-    Files.createDirectories(dir.resolve("_txlog"))
-    Files.write(schemaFileOf(dir), schema.toDDL.getBytes(UTF_8))
+    TxLog.replace(TxLog.schemaFile(dir), schema.toDDL.getBytes(UTF_8))
     GraftTable(fullName(ident), TxParquetSink(dir.toString), None,
-      schemaFileOf(dir).toString)
+      TxLog.schemaFile(dir).toString)
   }
 
   override def alterTable(ident: Identifier, changes: TableChange*): Table =
@@ -146,7 +141,7 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces {
   override def dropTable(ident: Identifier): Boolean = {
     val dir = dirOf(ident)
     if (!isTableDir(dir)) return false
-    deleteRecursively(dir)
+    TxLog.deleteTree(dir)
     true
   }
 
@@ -210,12 +205,9 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces {
       if (nonEmpty) throw new IllegalStateException(
         s"namespace ${namespace.mkString(".")} is not empty (use CASCADE)")
     }
-    deleteRecursively(ns)
+    TxLog.deleteTree(ns)
     true
   }
-
-  private def deleteRecursively(p: Path): Unit =
-    TxParquetSink.deleteTree(p)
 }
 
 /** One governed table as a DataSourceV2 `Table`. Reads are served by

@@ -3886,7 +3886,8 @@ object EtlQueries {
     * same IEEE expression trees — the planner's numbers are VERIFIED,
     * not trusted. */
   def txJoinCard(spark: SparkSession, dir: String): DataFrame = {
-    import graft.etl.TxParquetSink.{KmvMins, kmvEstimate, SketchK}
+    import graft.etl.TxLog.KmvMins
+    import graft.etl.TxParquetSink.{kmvEstimate, SketchK}
     val monthly = TxFixtures.monthlyCents(spark, dir)
     val suppliers = TxFixtures.suppliersProjected(spark, dir)
     val (tA, tB) = TxFixtures.sketchSinks(spark, dir)

@@ -1,7 +1,7 @@
 package graft.etl
 
 import java.nio.charset.StandardCharsets.UTF_8
-import java.nio.file.{FileAlreadyExistsException, Files, NoSuchFileException, Path, Paths, StandardCopyOption}
+import java.nio.file.{Files, NoSuchFileException, Path, Paths}
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
@@ -12,7 +12,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * `table → (dir, version)`, and a transaction is (1) apply each
   * table's writes through the sink's ordinary single-table commits,
   * then (2) advance the whole pin-set in ONE atomic catalog commit
-  * (the same create-hard-link publish the sinks use). Readers who
+  * ([[TxLog.createExclusive]], the create-if-absent publish the sinks
+  * use; lock acquisition links through it too, and lock steals and
+  * lease renewals swap content through [[TxLog.replace]]). Readers who
   * resolve tables THROUGH the catalog ([[readAt]] = `readVersion` at
   * the pin of one CAPTURED catalog version) therefore see every
   * transaction's tables move TOGETHER or not at all — never a
@@ -66,26 +68,16 @@ final case class TxCatalog(dir: String,
     lockLeaseMs: Long = TxCatalog.DefaultLockLeaseMs) {
 
   private val root = Paths.get(dir)
-  private val logDir = root.resolve("_catlog")
-  private val locksDir = logDir.resolve("locks")
+  private val logDir = TxLog.catalogLog(root)
 
   /** Newest catalog version, −1 before [[TxCatalog.create]]. */
-  def version(): Long = {
-    if (!Files.isDirectory(logDir)) return -1L
-    val s = Files.list(logDir)
-    try {
-      import scala.jdk.CollectionConverters._
-      s.iterator().asScala.map(_.getFileName.toString)
-        .filter(_.endsWith(".cat"))
-        .map(_.stripSuffix(".cat").toLong)
-        .maxOption.getOrElse(-1L)
-    } finally s.close()
-  }
+  def version(): Long =
+    TxLog.entries(logDir, TxLog.Cat).lastOption.map(TxLog.entryVersion).getOrElse(-1L)
 
-  private def manifestAt(v: Long): String = {
-    val f = logDir.resolve(f"$v%020d.cat")
-    new String(Files.readAllBytes(f), UTF_8)
-  }
+  private def entry(v: Long): Path = logDir.resolve(TxLog.entryName(v, TxLog.Cat))
+
+  private def manifestAt(v: Long): String =
+    new String(Files.readAllBytes(entry(v)), UTF_8)
 
   /** The pin-set at catalog version `v`: name → (table dir, pinned
     * table version). Lines starting with `#` are metadata (txn marks),
@@ -181,18 +173,14 @@ final case class TxCatalog(dir: String,
       .map { case (app, ver) => s"#txn\t$app\t$ver" }
       .mkString("", "\n", if (marks.nonEmpty) "\n" else "") + "#txnall\n"
 
-  private def tryPublish(v: Long, content: String): Boolean = {
-    Files.createDirectories(logDir)
-    val tmp = Files.createTempFile(logDir, ".stage-", ".cat.tmp")
-    try {
-      Files.write(tmp, content.getBytes(UTF_8))
-      try { Files.createLink(logDir.resolve(f"$v%020d.cat"), tmp); true }
-      catch { case _: FileAlreadyExistsException => false }
-    } finally Files.deleteIfExists(tmp)
-  }
+  private def tryPublish(v: Long, content: String): Boolean =
+    TxLog.createExclusive(entry(v), content.getBytes(UTF_8))
 
-  private def lockPath(name: String): Path = locksDir.resolve(
-    java.net.URLEncoder.encode(name, UTF_8) + ".lock")
+  private def lockPath(name: String): Path = TxLog.lockFile(root, name)
+
+  /** Lock content: `<timestamp>\t<owner token>`, stamped now. */
+  private def stamp(token: String): Array[Byte] =
+    s"${System.currentTimeMillis()}\t$token\n".getBytes(UTF_8)
 
   /** One atomic lock acquisition with lease-steal: the hard link is
     * the linearization point; a holder past `lockLeaseMs` is presumed
@@ -224,8 +212,9 @@ final case class TxCatalog(dir: String,
     *
     * Residual (inherent to lease locks without resource-side fencing):
     * a holder that is alive PAST its lease and releases in the
-    * microseconds between the claim holder's re-read and its rename
-    * can admit one extra acquirer; the publish-time pin verification
+    * microseconds between the claim holder's re-read and its replace
+    * (one scratch-file write, then the rename) can admit one extra
+    * acquirer; the publish-time pin verification
     * in [[transact]] is the backstop that turns that into a loud
     * failure instead of a merged pin-set.
     *
@@ -235,104 +224,87 @@ final case class TxCatalog(dir: String,
   private[etl] def tryAcquire(name: String, token: String,
       beforeRead: () => Unit = () => (),
       beforeSteal: () => Unit = () => ()): Boolean = {
-    Files.createDirectories(locksDir)
     val p = lockPath(name)
-    val tmp = Files.createTempFile(locksDir, ".stage-", ".lock.tmp")
+    def link(): Boolean = TxLog.createExclusive(p, stamp(token))
+    if (link()) return true
+    beforeRead()
+    val observed = try Some(new String(Files.readAllBytes(p), UTF_8))
+    catch {
+      case _: NoSuchFileException => None
+      case _: Exception => Some("") // present but unreadable: malformed
+    }
+    val content = observed match {
+      case None => return link() // release gap: free, not stale — relink
+      case Some(c) => c
+    }
+    val age = try {
+      System.currentTimeMillis() - content.trim.split("\t", 2).head.toLong
+    } catch { case _: Exception => Long.MaxValue } // malformed: stale
+    if (age <= lockLeaseMs) return false
+    beforeSteal()
+    val claim = TxLog.claimFile(p)
+    if (!TxLog.createExclusive(claim, stamp(token))) {
+      // another stealer is mid-steal; clear only a claim whose OWN
+      // lease expired (its holder died mid-steal), then stand down —
+      // the next acquisition attempt proceeds against a free claim.
+      // The clear re-reads and compares CONTENT immediately before
+      // the delete, so a fresh claim linked after our age read is
+      // (outside a residual instruction-level window, backstopped
+      // by the publish-time pin check) never the one deleted.
+      val claimContent = try {
+        Some(new String(Files.readAllBytes(claim), UTF_8))
+      } catch {
+        case _: NoSuchFileException => None // already finished
+        case _: Exception => Some("")
+      }
+      val claimAge = claimContent.map { c =>
+        try System.currentTimeMillis() - c.trim.split("\t", 2).head.toLong
+        catch { case _: Exception => Long.MaxValue }
+      }.getOrElse(0L)
+      if (claimAge > lockLeaseMs) {
+        // the re-read maps exceptions EXACTLY like the first read —
+        // an asymmetric mapping (other-exception -> None here) would
+        // make a persistently unreadable claim never compare equal,
+        // wedging the table forever instead of clearing it
+        val still = try {
+          Some(new String(Files.readAllBytes(claim), UTF_8))
+        } catch {
+          case _: NoSuchFileException => None
+          case _: Exception => Some("")
+        }
+        if (still == claimContent) Files.deleteIfExists(claim)
+        ()
+      }
+      return false
+    }
     try {
-      Files.write(tmp,
-        s"${System.currentTimeMillis()}\t$token\n".getBytes(UTF_8))
-      def link(): Boolean =
-        try { Files.createLink(p, tmp); true }
-        catch { case _: FileAlreadyExistsException => false }
-      if (link()) return true
-      beforeRead()
-      val observed = try Some(new String(Files.readAllBytes(p), UTF_8))
+      // under the claim: the lock must STILL be the exact content
+      // classified as expired — anything else means the world moved
+      // on (a completed steal, a release + fresh acquire) and the
+      // late stealer stands down instead of deleting a live lock
+      val now = try Some(new String(Files.readAllBytes(p), UTF_8))
       catch {
         case _: NoSuchFileException => None
-        case _: Exception => Some("") // present but unreadable: malformed
+        case _: Exception => Some("")
       }
-      val content = observed match {
-        case None => return link() // release gap: free, not stale — relink
-        case Some(c) => c
+      now match {
+        case None => link() // released under the claim: plain acquire
+        case Some(c2) if c2 != content => false
+        case _ =>
+          // one atomic replace over the stale lock: the lock file is
+          // never missing mid-steal, so no fresh acquirer can link
+          // into the window. The REPLACE is the success signal: the
+          // claim already serialized competing stealers and the
+          // content re-verify above established the preconditions,
+          // so a post-replace verification read would only ADD a
+          // failure mode — a transient read error mapping to
+          // "not acquired" would leave our published lock held by
+          // nobody (never released, wedging the table for a full
+          // lease) even though the rename atomically succeeded.
+          TxLog.replace(p, stamp(token))
+          true
       }
-      val age = try {
-        System.currentTimeMillis() - content.trim.split("\t", 2).head.toLong
-      } catch { case _: Exception => Long.MaxValue } // malformed: stale
-      if (age <= lockLeaseMs) return false
-      beforeSteal()
-      val claim = locksDir.resolve(p.getFileName.toString + ".steal")
-      val claimTmp = Files.createTempFile(locksDir, ".stage-", ".steal.tmp")
-      try {
-        Files.write(claimTmp,
-          s"${System.currentTimeMillis()}\t$token\n".getBytes(UTF_8))
-        val claimed =
-          try { Files.createLink(claim, claimTmp); true }
-          catch { case _: FileAlreadyExistsException => false }
-        if (!claimed) {
-          // another stealer is mid-steal; clear only a claim whose OWN
-          // lease expired (its holder died mid-steal), then stand down —
-          // the next acquisition attempt proceeds against a free claim.
-          // The clear re-reads and compares CONTENT immediately before
-          // the delete, so a fresh claim linked after our age read is
-          // (outside a residual instruction-level window, backstopped
-          // by the publish-time pin check) never the one deleted.
-          val claimContent = try {
-            Some(new String(Files.readAllBytes(claim), UTF_8))
-          } catch {
-            case _: NoSuchFileException => None // already finished
-            case _: Exception => Some("")
-          }
-          val claimAge = claimContent.map { c =>
-            try System.currentTimeMillis() - c.trim.split("\t", 2).head.toLong
-            catch { case _: Exception => Long.MaxValue }
-          }.getOrElse(0L)
-          if (claimAge > lockLeaseMs) {
-            // the re-read maps exceptions EXACTLY like the first read —
-            // an asymmetric mapping (other-exception -> None here) would
-            // make a persistently unreadable claim never compare equal,
-            // wedging the table forever instead of clearing it
-            val still = try {
-              Some(new String(Files.readAllBytes(claim), UTF_8))
-            } catch {
-              case _: NoSuchFileException => None
-              case _: Exception => Some("")
-            }
-            if (still == claimContent) Files.deleteIfExists(claim)
-            ()
-          }
-          return false
-        }
-        try {
-          // under the claim: the lock must STILL be the exact content
-          // classified as expired — anything else means the world moved
-          // on (a completed steal, a release + fresh acquire) and the
-          // late stealer stands down instead of deleting a live lock
-          val now = try Some(new String(Files.readAllBytes(p), UTF_8))
-          catch {
-            case _: NoSuchFileException => None
-            case _: Exception => Some("")
-          }
-          now match {
-            case None => link() // released under the claim: plain acquire
-            case Some(c2) if c2 != content => false
-            case _ =>
-              // one atomic rename over the stale lock: the lock file is
-              // never missing mid-steal, so no fresh acquirer can link
-              // into the window. The MOVE is the success signal: the
-              // claim already serialized competing stealers and the
-              // content re-verify above established the preconditions,
-              // so a post-move verification read would only ADD a
-              // failure mode — a transient read error mapping to
-              // "not acquired" would leave our published lock held by
-              // nobody (never released, wedging the table for a full
-              // lease) even though the rename atomically succeeded.
-              Files.move(tmp, p, StandardCopyOption.REPLACE_EXISTING,
-                StandardCopyOption.ATOMIC_MOVE)
-              true
-          }
-        } finally { Files.deleteIfExists(claim); () }
-      } finally { Files.deleteIfExists(claimTmp); () }
-    } finally { Files.deleteIfExists(tmp); () } // no-op if moved over p
+    } finally { Files.deleteIfExists(claim); () }
   }
 
   /** One lock-lease heartbeat: re-stamps `name`'s lock with a fresh
@@ -349,26 +321,15 @@ final case class TxCatalog(dir: String,
       new String(Files.readAllBytes(p), UTF_8).trim
         .split("\t", 2).lift(1).contains(token)
     } catch { case _: Exception => false }
-    if (mine) {
-      val tmp = Files.createTempFile(locksDir, ".renew-", ".lock.tmp")
-      try {
-        Files.write(tmp,
-          s"${System.currentTimeMillis()}\t$token\n".getBytes(UTF_8))
-        // last-instant shutdown check: a beat that was in flight when
-        // the transaction finished must not re-create the lock AFTER
-        // release() deleted it (an orphan lock under a dead token
-        // would wedge the table for a full lease). transact() also
-        // joins the renewer WITHOUT a timeout before releasing, so
-        // this check is belt-and-braces for any future caller that
-        // cannot join.
-        if (!stopped()) {
-          Files.move(tmp, p, StandardCopyOption.REPLACE_EXISTING,
-            StandardCopyOption.ATOMIC_MOVE)
-          ()
-        }
-      } catch { case _: Exception => () } // next beat retries
-      finally { Files.deleteIfExists(tmp); () }
-    }
+    // last-instant shutdown check: a beat that was in flight when
+    // the transaction finished must not re-create the lock AFTER
+    // release() deleted it (an orphan lock under a dead token would
+    // wedge the table for a full lease). transact() also joins the
+    // renewer WITHOUT a timeout before releasing, so this check is
+    // belt-and-braces for any future caller that cannot join.
+    if (mine && !stopped())
+      try TxLog.replace(p, stamp(token))
+      catch { case _: Exception => () } // next beat retries
   }
 
   /** The fence body installed on every scoped sink: throws unless

@@ -1,9 +1,10 @@
 package graft.etl
 
 import java.nio.charset.StandardCharsets.UTF_8
-import java.nio.file.{FileAlreadyExistsException, Files, Path, Paths}
+import java.nio.file.{Files, Path, Paths}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import scala.jdk.CollectionConverters._
+import TxLog.{BloomBits, ColStats, KmvMins, Manifest, deleteTree, encodePartition}
 
 /** Transactional parquet sink — the reference's transactional
   * insert-if-not-exists (`/root/reference/src/Meshjoin.java:489-591`
@@ -20,12 +21,12 @@ import scala.jdk.CollectionConverters._
   *     ([[stageObserved]]) before anything is published; a short write
   *     aborts the commit instead of corrupting the table.
   *  3. **Publish**: one manifest file `_txlog/<version>.txn` appears
-  *     ATOMICALLY via hard-link creation (`Files.createLink` is an
+  *     ATOMICALLY through [[TxLog.createExclusive]] (a hard link: an
   *     atomic create-if-absent on POSIX — unlike create-then-rename,
-  *     which `rename(2)` makes last-writer-wins). Losing the race throws
-  *     `FileAlreadyExistsException` → optimistic-concurrency retry, which
-  *     every retrying commit runs through one loop ([[publishLoop]]),
-  *     bounded at [[TxParquetSink.MaxPublishAttempts]] attempts.
+  *     which `rename(2)` makes last-writer-wins). Losing the race →
+  *     optimistic-concurrency retry, which every retrying commit runs
+  *     through one loop ([[publishLoop]]), bounded at
+  *     [[TxParquetSink.MaxPublishAttempts]] attempts.
   *
   * MERGE semantics ([[mergeUpsert]]): insert-if-absent on `keys` under
   * snapshot isolation. The anti-join runs against the snapshot the
@@ -42,18 +43,22 @@ import scala.jdk.CollectionConverters._
   * data scan; the per-commit data cost is the same single anti-join
   * shuffle as the non-transactional path (broadcast when the batch is
   * small, the common case). Conflict resolution reads only the DELTA
-  * commits, not the table. The one deployment-specific primitive is
-  * atomic create-if-absent, provided here by the POSIX filesystem
-  * (local disk, NFS, anything with atomic `link(2)`); an object-store
-  * deployment swaps exactly this one method for a conditional PUT /
+  * commits, not the table. The deployment-specific primitives are
+  * [[TxLog]]'s two file writes — atomic create-if-absent
+  * ([[TxLog.createExclusive]], the publish) and atomic replace
+  * ([[TxLog.replace]], the advisory base pointer and the constraint
+  * registry) — provided here by the POSIX filesystem (local disk, NFS,
+  * anything with atomic `link(2)` and `rename(2)`); an object-store
+  * deployment swaps exactly those two methods for a conditional PUT /
   * DynamoDB-style log store, as Delta's LogStore does — the protocol
-  * above it is unchanged.
+  * above them is unchanged. The manifest format and the log layout
+  * are [[TxLog]]'s too.
   */
 final case class TxParquetSink(dir: String) extends WarehouseSink {
   import TxParquetSink._
 
   private val root: Path = Paths.get(dir)
-  private val logDir: Path = root.resolve("_txlog")
+  private val logDir: Path = TxLog.logDir(root)
 
   /** PUBLISH FENCE — a check [[tryPublish]] runs immediately before
     * the atomic manifest link. [[TxCatalog.transact]] installs one
@@ -124,14 +129,7 @@ final case class TxParquetSink(dir: String) extends WarehouseSink {
     val ino: Long =
       try Files.getAttribute(logDir, "unix:ino").asInstanceOf[Long]
       catch { case _: Exception => 0L }
-    val names: Seq[String] =
-      if (!Files.isDirectory(logDir)) Nil
-      else {
-        val s = Files.list(logDir)
-        try s.iterator.asScala.map(_.getFileName.toString)
-          .filter(_.matches("\\d{20}\\.txn")).toSeq.sorted
-        finally s.close()
-      }
+    val names: Seq[String] = TxLog.entries(logDir, TxLog.Txn)
     val headMtime: Long = names.headOption.map { n =>
       try Files.getLastModifiedTime(logDir.resolve(n)).to(
         java.util.concurrent.TimeUnit.NANOSECONDS)
@@ -153,7 +151,7 @@ final case class TxParquetSink(dir: String) extends WarehouseSink {
     def parse(n: String): (Long, Manifest) =
       parses.computeIfAbsent(n, nn => {
         TxParquetSink.manifestParses.incrementAndGet()
-        (nn.stripSuffix(".txn").toLong, parseManifest(
+        (TxLog.entryVersion(nn), TxLog.parseManifest(
           new String(Files.readAllBytes(logDir.resolve(nn)), UTF_8)))
       })
     val suffix = {
@@ -163,7 +161,7 @@ final case class TxParquetSink(dir: String) extends WarehouseSink {
           else {
             val v0 =
               new String(Files.readAllBytes(basePointer), UTF_8).trim.toLong
-            val n0 = f"$v0%020d.txn"
+            val n0 = TxLog.entryName(v0, TxLog.Txn)
             if (!nameSet.contains(n0)) None
             else Some(effective(names.dropWhile(_ < n0).map(parse)))
           }
@@ -205,17 +203,11 @@ final case class TxParquetSink(dir: String) extends WarehouseSink {
     * legacy pre-base manifest never poisons snapshot reads and a cold
     * resolution on a compacted table costs O(commits-since-base)
     * reads, not O(history). */
-  private val basePointer: Path = logDir.resolve("_last_base")
+  private val basePointer: Path = TxLog.basePointer(root)
 
   private def writeBasePointer(v: Long): Unit =
-    try {
-      Files.createDirectories(logDir)
-      val tmp = Files.createTempFile(logDir, ".bp-", ".txn.tmp")
-      Files.write(tmp, v.toString.getBytes(UTF_8))
-      Files.move(tmp, basePointer,
-        java.nio.file.StandardCopyOption.REPLACE_EXISTING,
-        java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-    } catch { case _: java.io.IOException => () } // advisory — never fails a commit
+    try TxLog.replace(basePointer, v.toString.getBytes(UTF_8))
+    catch { case _: java.io.IOException => () } // advisory — never fails a commit
 
   /** Snapshot-resolution commit list: the effective suffix (newest
     * base onward), served from the log snapshot cache — one readdir
@@ -377,7 +369,7 @@ final case class TxParquetSink(dir: String) extends WarehouseSink {
     // and read it back once more.
     val cons = constraintViolationAggs()
     val (staged, n, metrics) = stageObserved(df, cons.map(_._3))
-    if (n == 0) { deleteRecursively(root.resolve(staged)); return }
+    if (n == 0) { deleteTree(root.resolve(staged)); return }
     checkConstraintMetrics(cons, metrics, Some(staged))
     val m = Manifest(n, Seq(staged), schema = Some(df.schema.json))
     publishLoop("append")((_, _) => ())(() => Claim(version() + 1, m))
@@ -417,7 +409,7 @@ final case class TxParquetSink(dir: String) extends WarehouseSink {
     // one fused staging pass — the [[append]] discipline
     val cons = constraintViolationAggs()
     val (staged, n, metrics) = stageObserved(df, cons.map(_._3))
-    if (n == 0) { deleteRecursively(root.resolve(staged)); return false }
+    if (n == 0) { deleteTree(root.resolve(staged)); return false }
     checkConstraintMetrics(cons, metrics, Some(staged))
     val manifest = Manifest(n, Seq(staged), txn = Some((appId, txnVersion)),
       schema = Some(df.schema.json))
@@ -428,7 +420,7 @@ final case class TxParquetSink(dir: String) extends WarehouseSink {
       // sees its mark — no TOCTOU double-commit
       val v = version() + 1
       if (txnVersion <= lastTxnVersion(appId)) { // raced a twin writer
-        deleteRecursively(root.resolve(staged))
+        deleteTree(root.resolve(staged))
         Done(false)
       } else Claim(v, manifest)
     }
@@ -455,7 +447,7 @@ final case class TxParquetSink(dir: String) extends WarehouseSink {
     val cons = constraintViolationAggs()
     val (staged, n, metrics) = stageObserved(df,
       cons.map(_._3) ++ statsAggsFor(df.schema, statsCols))
-    if (n == 0) { deleteRecursively(root.resolve(staged)); return }
+    if (n == 0) { deleteTree(root.resolve(staged)); return }
     checkConstraintMetrics(cons, metrics, Some(staged))
     lazy val stagedDf = spark.read.parquet(root.resolve(staged).toString)
     val (stats, nullCounts, sums, sumsqs) =
@@ -838,7 +830,7 @@ final case class TxParquetSink(dir: String) extends WarehouseSink {
 
   private def scanned(boundary: Option[org.apache.spark.sql.Row],
       rec: String, c: String): Option[String] =
-    boundary.flatMap(r => Option(r.getAs[String](s"__${rec}_$c")))
+    boundary.flatMap(r => statValue(r.getAs[Any](_), rec, c))
 
   private def colOfCons(c: PruneCons): String = c match {
     case r: RangeCons => r.col
@@ -1014,14 +1006,19 @@ final case class TxParquetSink(dir: String) extends WarehouseSink {
     * the optimization-round move that cut one full read per
     * stats-recording commit), per segment of a clustered rewrite
     * ([[compactClustered]]), or over a boundary scan
-    * ([[classifiedScan]]): per-column min/max (cast-to-string domain),
-    * non-null counts, and — for INTEGRAL columns, the domain where
-    * addition is exact and associative — the column SUM and SUM OF
-    * SQUARES (the second moment: a long² always fits decimal(38,0)). */
+    * ([[classifiedScan]]): per-column min/max (cast-to-string domain;
+    * a TIMESTAMP extreme as epoch micros, which [[statValue]] renders
+    * in UTC), non-null counts, and — for INTEGRAL columns, the domain
+    * where addition is exact and associative — the column SUM and SUM
+    * OF SQUARES (the second moment: a long² always fits decimal(38,0)). */
   private def statsAggsFor(schema: org.apache.spark.sql.types.StructType,
       statsCols: Seq[String]): Seq[org.apache.spark.sql.Column] = {
-    import org.apache.spark.sql.functions.{col, count, lit, max, min, try_sum}
-    val integral = schema.fields.map(f => f.name -> integralType(f.dataType)).toMap
+    import org.apache.spark.sql.functions.{col, count, lit, max, min, try_sum, unix_micros}
+    val types = schema.fields.map(f => f.name -> f.dataType).toMap
+    val integral = types.map { case (c, t) => c -> integralType(t) }
+    def extreme(agg: org.apache.spark.sql.Column, c: String) =
+      if (types.get(c).contains(org.apache.spark.sql.types.TimestampType)) unix_micros(agg)
+      else agg.cast("string")
     // sums fold in decimal(38,0) via try_sum: exact up to 38 digits
     // (a wrapped int64 sum would be recorded as truth otherwise), and
     // an overflow NULLS OUT under ANSI mode too instead of throwing —
@@ -1030,17 +1027,31 @@ final case class TxParquetSink(dir: String) extends WarehouseSink {
       if (integral.getOrElse(c, false)) try_sum(term).cast("string")
       else lit(null).cast("string")
     statsCols.flatMap(c => Seq(
-      min(col(c)).cast("string").as(s"__min_$c"),
-      max(col(c)).cast("string").as(s"__max_$c"),
+      extreme(min(col(c)), c).as(s"__min_$c"),
+      extreme(max(col(c)), c).as(s"__max_$c"),
       count(col(c)).as(s"__cnt_$c"),
       integralSum(c, col(c).cast("decimal(38,0)")).as(s"__sum_$c"),
       integralSum(c, col(c).cast("decimal(19,0)") * col(c).cast("decimal(19,0)"))
         .as(s"__sumsq_$c")))
   }
 
-  /** Decode [[statsAggsFor]]'s aliases back into the manifest records,
-    * from any alias→value lookup (an agg Row or an observe metrics
-    * map), with the [[finiteNumeric]] admission rule on the extremes. */
+  /** One [[statsAggsFor]] record (`min`, `max`, `sum`, `sumsq`) of
+    * column `c` as its manifest string, None when NULL — THE decode
+    * the staging observe, the bucket read-back and the boundary scan
+    * share, from any alias→value lookup (an agg Row or an observe
+    * metrics map). A TIMESTAMP extreme arrives as epoch micros and
+    * renders in UTC with the formatter Spark's cast uses: the cast
+    * itself renders in the writer's session zone, and renderings from
+    * two zones do not compare as the instants do. */
+  private def statValue(lookup: String => Any, rec: String, c: String): Option[String] =
+    Option(lookup(s"__${rec}_$c")).map {
+      case micros: Long => UtcTimestamps.format(micros)
+      case v => v.asInstanceOf[String]
+    }
+
+  /** Decode [[statsAggsFor]]'s aliases back into the manifest records
+    * ([[statValue]]), with the [[finiteNumeric]] admission rule on the
+    * extremes. */
   private def decodeStatsMetrics(lookup: String => Any, n: Long,
       statsCols: Seq[String],
       schema: org.apache.spark.sql.types.StructType)
@@ -1051,19 +1062,20 @@ final case class TxParquetSink(dir: String) extends WarehouseSink {
       return (Map.empty, Map.empty, Map.empty, Map.empty)
     val numeric = schema.fields
       .map(f => f.name -> f.dataType.isInstanceOf[NumericType]).toMap
-    def str(k: String): String = lookup(k).asInstanceOf[String]
     val st = statsCols.flatMap { c =>
-      val (mn, mx) = (str(s"__min_$c"), str(s"__max_$c"))
       val num = numeric.getOrElse(c, false)
-      if (mn == null || mx == null || !finiteNumeric(num, mn, mx)) None
-      else Some(c -> ColStats(num, mn, mx))
+      for {
+        mn <- statValue(lookup, "min", c)
+        mx <- statValue(lookup, "max", c)
+        if finiteNumeric(num, mn, mx)
+      } yield c -> ColStats(num, mn, mx)
     }.toMap
     val nc = statsCols.map(c =>
       c -> (n - lookup(s"__cnt_$c").asInstanceOf[Long])).toMap
     // render as a plain integer string (decimal cast may print a
     // scale); BigDecimal normalizes "123" and "123.000" alike
     def exact(k: String) = statsCols.flatMap(c =>
-      Option(str(s"__${k}_$c")).map(v => c -> exactSum(v).toString)).toMap
+      statValue(lookup, k, c).map(v => c -> exactSum(v).toString)).toMap
     (st, nc, exact("sum"), exact("sumsq"))
   }
 
@@ -1077,7 +1089,8 @@ final case class TxParquetSink(dir: String) extends WarehouseSink {
     * the EXACT column sum folded from per-commit `sum=` records
     * (integral columns only, where addition is exact and associative;
     * NULL when any commit lacks the record) — min/max rendered exactly
-    * as [[appendWithStats]] captured them (Spark's `CAST(x AS STRING)`),
+    * as [[appendWithStats]] captured them (Spark's `CAST(x AS STRING)`;
+    * a TIMESTAMP rendered in UTC whatever the writer's session zone),
     * so integer/string columns round-trip bit-for-bit against a
     * declarative recompute — which is precisely what the registered
     * oracle twin (`etl_tx_stats_agg`) gates every round.
@@ -1206,7 +1219,7 @@ final case class TxParquetSink(dir: String) extends WarehouseSink {
     var (staged, n, metrics) = stageObserved(toAdd, cons.map(_._3) ++
       (if (partitionCols.isEmpty) Nil
        else Seq(touchedPartitionsAgg(partitionCols))))
-    if (n == 0) { deleteRecursively(root.resolve(staged)); return 0 }
+    if (n == 0) { deleteTree(root.resolve(staged)); return 0 }
     checkConstraintMetrics(cons, metrics, Some(staged))
     val touched: Option[Set[String]] =
       if (partitionCols.isEmpty) None
@@ -1261,7 +1274,7 @@ final case class TxParquetSink(dir: String) extends WarehouseSink {
             .localCheckpoint(eager = true)
           val m = remaining.count()
           if (m < n) {
-            deleteRecursively(root.resolve(staged))
+            deleteTree(root.resolve(staged))
             n = m
             if (n > 0) staged = stageAudited(spark, remaining, n)
           }
@@ -1284,7 +1297,7 @@ final case class TxParquetSink(dir: String) extends WarehouseSink {
   /** Distinct partition tuples of one staged batch, as raw value
     * sequences — driver-side collect of a batch-local distinct, small
     * by the same argument as the commit's key set; call sites pick the
-    * encoding ([[encodePartition]] for conflict sets, [[sepEncode]]
+    * encoding ([[TxLog.encodePartition]] for conflict sets, [[sepEncode]]
     * for the overwrite read filter). */
   private def touchedPartitions(df: DataFrame,
       partitionCols: Seq[String]): Set[Seq[String]] = {
@@ -1356,7 +1369,7 @@ final case class TxParquetSink(dir: String) extends WarehouseSink {
     val (staged, n, metrics) = stageObserved(incoming,
       cons.map(_._3) ++ Seq(touchedPartitionsAgg(partitionCols)) ++
         statsAggsFor(incoming.schema, statsCols))
-    if (n == 0) { deleteRecursively(root.resolve(staged)); return 0 }
+    if (n == 0) { deleteTree(root.resolve(staged)); return 0 }
     checkConstraintMetrics(cons, metrics, Some(staged))
     val tuples = decodeTouchedPartitions(metrics, partitionCols)
     val (stats, nullCounts, sums, sumsqs) =
@@ -1533,18 +1546,18 @@ final case class TxParquetSink(dir: String) extends WarehouseSink {
           cons.map(_._3))(
         _.where(col("__cls") =!= "D").drop("__cls")
           .write.mode("error").parquet(stagedPath.toString))
-      catch { case e: Throwable => deleteRecursively(stagedPath); throw e }
+      catch { case e: Throwable => deleteTree(stagedPath); throw e }
     val (nDel, nUpd, nIns) = (metrics("__mD").asInstanceOf[Long],
       metrics("__mU").asInstanceOf[Long], metrics("__mI").asInstanceOf[Long])
     val n = nUpd + nIns
     val landed = footerRows(stagedPath)
     if (landed != n) {
-      deleteRecursively(stagedPath)
+      deleteTree(stagedPath)
       throw new IllegalStateException(
         s"stage audit failed: wrote $landed rows, expected $n ($stagedPath)")
     }
     checkConstraintMetrics(cons, metrics, Some(rel))
-    if (n == 0) deleteRecursively(stagedPath) // all-delete or no-op batch
+    if (n == 0) deleteTree(stagedPath) // all-delete or no-op batch
     if (nDel == 0 && nUpd == 0 && nIns == 0) return MergeStats(0, 0, 0)
     def tuplesOf(alias: String): Set[Seq[String]] =
       Option(metrics(alias)).map(_.asInstanceOf[Seq[org.apache.spark.sql.Row]])
@@ -1627,7 +1640,7 @@ final case class TxParquetSink(dir: String) extends WarehouseSink {
             Claim(snapV + 1, Manifest(n, Seq(staged),
               deletePred = Some(predicateSql), schema = Some(rewritten.schema.json)))
           } else {
-            deleteRecursively(root.resolve(staged))
+            deleteTree(root.resolve(staged))
             // no matching row in snapshot snapV: the UPDATE serializes at
             // snapV as a no-op (later concurrent appends serialize after
             // it) — unless something landed while we validated: re-read
@@ -1859,8 +1872,8 @@ final case class TxParquetSink(dir: String) extends WarehouseSink {
   }
 
   /** CHECK-constraint registry file: `name=<urlencoded sql>` lines,
-    * rewritten atomically (temp + rename) like the base pointer. */
-  private val constraintsFile: Path = logDir.resolve("_constraints")
+    * rewritten atomically ([[TxLog.replace]]) like the base pointer. */
+  private val constraintsFile: Path = TxLog.constraintsFile(root)
 
   /** The registered CHECK constraints, in registration order. */
   def constraints(): Seq[(String, String)] =
@@ -1907,16 +1920,10 @@ final case class TxParquetSink(dir: String) extends WarehouseSink {
   def dropConstraint(name: String): Unit =
     writeConstraints(constraints().filterNot(_._1 == name))
 
-  private def writeConstraints(cs: Seq[(String, String)]): Unit = {
-    Files.createDirectories(logDir)
-    val tmp = Files.createTempFile(logDir, ".cons-", ".txn.tmp")
-    Files.write(tmp, cs.map { case (n, p) =>
+  private def writeConstraints(cs: Seq[(String, String)]): Unit =
+    TxLog.replace(constraintsFile, cs.map { case (n, p) =>
       s"$n=${java.net.URLEncoder.encode(p, UTF_8.name())}"
     }.mkString("", "\n", "\n").getBytes(UTF_8))
-    Files.move(tmp, constraintsFile,
-      java.nio.file.StandardCopyOption.REPLACE_EXISTING,
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-  }
 
   /** Rows of `df` that VIOLATE the predicate: FALSE violates, TRUE and
     * NULL pass (SQL CHECK semantics). */
@@ -1971,7 +1978,7 @@ final case class TxParquetSink(dir: String) extends WarehouseSink {
     // the hard links, proving the adopted bytes serve
     val rows = footerRows(stagedRoot)
     if (!tryPublish(0L, Manifest(rows, Seq(rel)))) {
-      deleteRecursively(stagedRoot)
+      deleteTree(stagedRoot)
       throw new IllegalStateException(
         "convertFrom lost the version-0 race — another writer initialized the table")
     }
@@ -1995,7 +2002,7 @@ final case class TxParquetSink(dir: String) extends WarehouseSink {
     val (rel, n, metrics) = stageObserved(df, cons.map(_._3))
     checkConstraintMetrics(cons, metrics, Some(rel))
     val staged =
-      if (n == 0) { deleteRecursively(root.resolve(rel)); Nil }
+      if (n == 0) { deleteTree(root.resolve(rel)); Nil }
       else Seq(rel)
     // record the incoming schema as catalog DDL (best effort): an
     // EMPTY base has no files to read a schema from, and without this
@@ -2003,29 +2010,12 @@ final case class TxParquetSink(dir: String) extends WarehouseSink {
     // WHERE false` would become unreadable through the catalog
     // (review finding r13). Written on every replace so the recorded
     // DDL also tracks schema evolution.
-    locally {
-      var tmp: Path = null
-      try {
-        Files.createDirectories(logDir)
-        tmp = Files.createTempFile(logDir, ".ddl-", ".tmp")
-        Files.write(tmp, df.schema.toDDL.getBytes(UTF_8))
-        try Files.move(tmp, logDir.resolve("_schema.ddl"),
-          java.nio.file.StandardCopyOption.REPLACE_EXISTING,
-          java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-        catch { // filesystems without atomic move still get the DDL
-          case _: java.nio.file.AtomicMoveNotSupportedException =>
-            Files.move(tmp, logDir.resolve("_schema.ddl"),
-              java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-        }
-        ()
-      } catch { case e: Exception => // advisory, never fails a commit —
-        // but visible: a silently missing DDL reinstates the
-        // truncated-table unreadability this record exists to prevent
-        System.err.println(
-          s"[tx] replaceAll: could not record _schema.ddl for $dir: $e")
-      } finally {
-        if (tmp != null) { Files.deleteIfExists(tmp); () } // no tmp litter
-      }
+    try TxLog.replace(TxLog.schemaFile(root), df.schema.toDDL.getBytes(UTF_8))
+    catch { case e: Exception => // advisory, never fails a commit —
+      // but visible: a silently missing DDL reinstates the
+      // truncated-table unreadability this record exists to prevent
+      System.err.println(
+        s"[tx] replaceAll: could not record the schema DDL for $dir: $e")
     }
     val m = Manifest(n, staged, base = true,
       schema = if (staged.isEmpty) None else Some(df.schema.json))
@@ -2035,7 +2025,7 @@ final case class TxParquetSink(dir: String) extends WarehouseSink {
   private def stageAudited(spark: SparkSession, df: DataFrame, expected: Long): String = {
     val (rel, n, _) = stageObserved(df)
     if (n != expected) {
-      deleteRecursively(root.resolve(rel))
+      deleteTree(root.resolve(rel))
       throw new IllegalStateException(
         s"stage audit failed: wrote $n rows, expected $expected ($rel)")
     }
@@ -2080,12 +2070,12 @@ final case class TxParquetSink(dir: String) extends WarehouseSink {
       try runObserved(df, count(lit(1)).as("__n") +: extraAggs)(
         _.write.mode("error").parquet(p.toString))
       catch { case e: Throwable => // staged bytes may already be on disk
-        deleteRecursively(p); throw e
+        deleteTree(p); throw e
       }
     val n = metrics("__n").asInstanceOf[Long]
     val landed = footerRows(p)
     if (landed != n) {
-      deleteRecursively(p)
+      deleteTree(p)
       throw new IllegalStateException(
         s"stage audit failed: wrote $landed rows, expected $n ($p)")
     }
@@ -2151,16 +2141,16 @@ final case class TxParquetSink(dir: String) extends WarehouseSink {
     cons.zipWithIndex.foreach { case ((n, p, _), i) =>
       val bad = metrics(s"__cons$i").asInstanceOf[Long]
       if (bad != 0L) {
-        stagedRel.foreach(rel => deleteRecursively(root.resolve(rel)))
+        stagedRel.foreach(rel => deleteTree(root.resolve(rel)))
         throw new IllegalArgumentException(
           s"CHECK constraint $n violated by $bad incoming rows: $p")
       }
     }
 
-  /** The single atomicity primitive: publish manifest `m` as version `v`
+  /** The single atomicity point: publish manifest `m` as version `v`
     * iff no commit at `v` exists AND `v` is beyond the current tip.
-    * Hard-link creation is atomic create-if-absent on POSIX; a swap
-    * target for object stores. The tip guard exists because
+    * [[TxLog.createExclusive]] is the atomic create-if-absent (the swap
+    * target for object stores). The tip guard exists because
     * [[truncateHistory]] deletes pre-base manifest FILES, freeing
     * their names: a stale writer could otherwise re-publish at a
     * truncated version and commit a manifest `effective()` never
@@ -2188,13 +2178,8 @@ final case class TxParquetSink(dir: String) extends WarehouseSink {
           "mid-commit?) — aborting instead of committing a dangling manifest")
     }
     if (v <= version()) return false
-    Files.createDirectories(logDir)
-    val tmp = Files.createTempFile(logDir, ".stage-", ".txn.tmp")
-    try {
-      Files.write(tmp, renderManifest(m).getBytes(UTF_8))
-      try { Files.createLink(logDir.resolve(f"$v%020d.txn"), tmp); true }
-      catch { case _: FileAlreadyExistsException => false }
-    } finally Files.deleteIfExists(tmp)
+    TxLog.createExclusive(logDir.resolve(TxLog.entryName(v, TxLog.Txn)),
+      TxLog.renderManifest(m).getBytes(UTF_8))
   }
 
   /** THE OPTIMISTIC PUBLISH LOOP — the one concurrency policy of every
@@ -2218,7 +2203,7 @@ final case class TxParquetSink(dir: String) extends WarehouseSink {
       stale: Boolean = false)(won: (Long, Manifest) => T)(
       turn: () => Turn[T]): T = {
     var held: Seq[String] = Nil
-    def release(): Unit = { held.foreach(f => deleteRecursively(root.resolve(f))); held = Nil }
+    def release(): Unit = { held.foreach(f => deleteTree(root.resolve(f))); held = Nil }
     var attempts = 0
     while (attempts < MaxPublishAttempts) {
       attempts += 1
@@ -2272,22 +2257,23 @@ final case class TxParquetSink(dir: String) extends WarehouseSink {
     if (before.isEmpty) return Nil
     val keepDirs = fromBase.flatMap(_._2.files).toSet
     val dropDirs = before.flatMap(_._2.files).toSet -- keepDirs
-    val manifests = before.map { case (v, _) => logDir.resolve(f"$v%020d.txn") }
+    val manifests = before.map { case (v, _) => logDir.resolve(TxLog.entryName(v, TxLog.Txn)) }
     // a shallow clone ([[cloneTo]]) references the SOURCE's files by
     // absolute path — truncating the clone forgets the references but
     // must never delete bytes it does not own
     val dirs = dropDirs.toSeq.sorted
       .filterNot(f => Paths.get(f).isAbsolute)
       .map(root.resolve(_))
-    dirs.foreach(deleteRecursively)
+    dirs.foreach(deleteTree)
     manifests.foreach(Files.deleteIfExists(_))
     (manifests ++ dirs).map(_.toString)
   }
 
   /** Remove crashed-writer litter: staged data directories no manifest
     * references (they staged, never published, so their data was never
-    * visible) and `.txn.tmp` manifest scratch files in `_txlog` left by a
-    * committer that died between link and delete. Gated on an age TTL
+    * visible) and [[TxLog]]'s scratch files in `_txlog` left by a
+    * writer that died between writing one and its link, rename or
+    * delete. Gated on an age TTL
     * exactly like Delta's VACUUM retention window: anything younger
     * than `minAgeMs` is presumed to belong to an IN-FLIGHT commit and
     * is left alone — deleting a live writer's staged dir aborts its
@@ -2304,7 +2290,7 @@ final case class TxParquetSink(dir: String) extends WarehouseSink {
     val tmps =
       if (!Files.isDirectory(logDir)) Nil
       else listDir(logDir)
-        .filter(p => p.getFileName.toString.endsWith(".txn.tmp"))
+        .filter(p => TxLog.isScratch(p.getFileName.toString))
         .filter(oldEnough)
     tmps.foreach(Files.deleteIfExists(_))
     val dataDir = root.resolve("data")
@@ -2321,7 +2307,7 @@ final case class TxParquetSink(dir: String) extends WarehouseSink {
         }
         listDir(dataDir).filterNot(isReferenced).filter(oldEnough)
       }
-    orphans.foreach(deleteRecursively)
+    orphans.foreach(deleteTree)
     (orphans ++ tmps).map(_.toString)
   }
 
@@ -2466,7 +2452,7 @@ final case class TxParquetSink(dir: String) extends WarehouseSink {
         Seq(count(lit(1)).as("__n")))(
         _.write.mode("error").partitionBy("__bucket")
           .parquet(stagedRoot.toString))("__n").asInstanceOf[Long]
-      catch { case e: Throwable => deleteRecursively(stagedRoot); throw e }
+      catch { case e: Throwable => deleteTree(stagedRoot); throw e }
     val back = df.sparkSession.read.parquet(stagedRoot.toString)
       .withColumn("__file",
         concat(lit(s"$rel/__bucket="), col("__bucket").cast("string")))
@@ -2481,7 +2467,7 @@ final case class TxParquetSink(dir: String) extends WarehouseSink {
       }
     val audited = buckets.map(_.rows).sum
     if (audited != n) {
-      deleteRecursively(stagedRoot)
+      deleteTree(stagedRoot)
       throw new IllegalStateException(
         s"stage audit failed: wrote $audited rows, expected $n ($stagedRoot)")
     }
@@ -2633,6 +2619,11 @@ object TxParquetSink {
       metrics.get
     }
   }
+
+  /** TIMESTAMP stats rendering: Spark's cast-to-string formatter,
+    * pinned to UTC ([[TxParquetSink.statValue]]). */
+  private lazy val UtcTimestamps = org.apache.spark.sql.catalyst.util
+    .TimestampFormatter.getFractionFormatter(java.time.ZoneOffset.UTC)
 
   /** The shared no-op publish fence (plain sinks). */
   private val NoFence: () => Unit = () => ()
@@ -2824,76 +2815,6 @@ object TxParquetSink {
     * they were never rewritten. */
   final case class MergeStats(inserted: Long, updated: Long, deleted: Long)
 
-  /** One commit's content: the row count audited at stage time, the
-    * table-relative data directories this commit makes visible, whether
-    * the commit is a BASE (a full-table rewrite — readers resolve
-    * snapshots from the newest base onward; see
-    * [[TxParquetSink.compact]]), and — when the writer declared
-    * partition scope — the set of partition tuples the commit touches.
-    * `partitions = None` means UNSCOPED: the commit conservatively
-    * conflicts with everything, which is both the legacy-manifest
-    * reading and the safe default. */
-  final case class Manifest(rows: Long, files: Seq[String],
-      base: Boolean = false, partitions: Option[Set[String]] = None,
-      partitionCols: Seq[String] = Nil,
-      replaceCols: Seq[String] = Nil, replaceKeys: Set[String] = Set.empty,
-      stats: Map[String, ColStats] = Map.empty,
-      blooms: Map[String, BloomBits] = Map.empty,
-      fileStats: Map[String, Map[String, ColStats]] = Map.empty,
-      fileBlooms: Map[String, Map[String, BloomBits]] = Map.empty,
-      sketches: Map[String, KmvMins] = Map.empty,
-      deletePred: Option[String] = None,
-      txn: Option[(String, Long)] = None,
-      nullCounts: Map[String, Long] = Map.empty,
-      fileRows: Map[String, Long] = Map.empty,
-      sums: Map[String, String] = Map.empty,
-      fileSums: Map[String, Map[String, String]] = Map.empty,
-      sumsqs: Map[String, String] = Map.empty,
-      // a base commit that RESTATED contents (RESTORE) rather than
-      // materializing them (compaction): the signal incremental CDC
-      // consumers need, because the change feed emits no rows for
-      // base commits — folding a feed across a restore silently
-      // diverges. Advisory for readers (ignoring it risks only a
-      // stale derived view, never wrong table reads).
-      restated: Boolean = false,
-      // the STAGED FILES' Spark schema (StructType JSON), recorded at
-      // commit time — the Delta/Iceberg move of serving the table
-      // schema from the LOG instead of the data: when every commit of
-      // a scan group carries the same recorded schema, snapshot reads
-      // pass it to the parquet reader explicitly and skip the
-      // mergeSchema footer-reading job entirely (a per-relation-build
-      // Spark job + O(files) footer I/O — the dominant driver cost of
-      // replay-style commit loops; measured round 14, see git history).
-      // Advisory: absent or divergent schemas fall back to
-      // mergeSchema=true, the exact pre-round-14 read path.
-      schema: Option[String] = None) {
-    /** Does this commit hide rows of EARLIER commits (a predicate
-      * delete or a partition/key replace set)? */
-    private[etl] def hidesRows: Boolean =
-      deletePred.nonEmpty || replaceCols.nonEmpty
-    /** Top-level column types of the recorded `schema` (empty when
-      * absent or unreadable) — the bloom-safety proof for columns
-      * without stats. */
-    @transient private[etl] lazy val fieldTypes
-        : Map[String, org.apache.spark.sql.types.DataType] =
-      try schema.map(s => org.apache.spark.sql.types.DataType.fromJson(s)
-        .asInstanceOf[org.apache.spark.sql.types.StructType].fields
-        .map(f => f.name -> f.dataType).toMap).getOrElse(Map.empty)
-      catch { case scala.util.control.NonFatal(_) => Map.empty }
-  }
-
-  /** Per-commit KMV DISTINCT-VALUE sketch of a column — the third
-    * metadata tier next to [[ColStats]] (ranges) and [[BloomBits]]
-    * (membership): the k smallest md5-contract hashes of the commit's
-    * distinct values, from which a reader estimates the column's
-    * distinct count — and, across TWO tables, a join's cardinality —
-    * from MANIFESTS ALONE, zero data reads (what a cost-based planner
-    * consults before choosing a join strategy at 100 TB). Bottom-k is
-    * a semilattice, so per-commit sketches union-truncate to exactly
-    * the table-level sketch ([[tableSketch]]) no matter how ingestion
-    * was batched. ~0.5 KiB per column per commit at k = 64. */
-  final case class KmvMins(k: Int, mins: Seq[Long])
-
   /** Manifest sketch size: [[graft.ext.SketchOps.JoinCardK]]'s 64 —
     * ±1/√k ≈ 12 % relative error on distinct counts, the planning
     * accuracy CBOs operate at. */
@@ -2910,20 +2831,6 @@ object TxParquetSink {
     if (s.mins.size < s.k) s.mins.size.toDouble
     else (s.k - 1).toDouble * 4294967296.0 / s.mins(s.k - 1).toDouble
 
-  /** Per-commit BLOOM FILTER over a column's value set — the POINT
-    * companion to [[ColStats]]'s range skipping (min/max can't help a
-    * key lookup when every commit's range spans it; a bloom can). Bits
-    * are set from `pmod(md5_prefix32("bloom<i>:" || value), m)` for
-    * i < k — the engine's cross-engine hash contract, so the
-    * driver-side membership test ([[graft.functions.Md5Prefix32.hash]])
-    * reproduces the distributed writer's bits exactly. m = 2¹³ bits
-    * (1 KiB per column per commit in the manifest), k = 6: ≈ 1.9 %
-    * false-positive rate at 1 000 distinct keys per commit — a false
-    * positive only costs reading one extra commit (the superset
-    * contract); a false NEGATIVE is impossible, which is the half that
-    * matters. `bits` stays in its URL-safe base64 form. */
-  final case class BloomBits(m: Int, k: Int, bits: String)
-
   val BloomM: Int = 8192
   val BloomK: Int = 6
 
@@ -2936,16 +2843,6 @@ object TxParquetSink {
       bs.get((graft.functions.Md5Prefix32.hash(s"bloom$i:$value") % b.m).toInt)
     }
   }
-
-  /** Per-commit column statistics for DATA SKIPPING: min/max of a
-    * column over the commit's files, captured at write time. `num`
-    * selects the comparison domain — numeric stats compare as exact
-    * BigDecimal, everything else lexicographically (dates/timestamps in
-    * their canonical cast-to-string form are order-preserving). A
-    * commit WITHOUT stats for a queried column is conservatively always
-    * read — so old manifests, compaction bases, and overwrites keep
-    * exactly their current semantics. */
-  final case class ColStats(num: Boolean, min: String, max: String)
 
   /** A pruning constraint derived from one WHERE conjunct by
     * [[TxParquetSink.readSnapshotWhere]]. `litNum` records the
@@ -2974,201 +2871,6 @@ object TxParquetSink {
     * (DOUBLE min/max always carry '.'/'E'; integral and scale-0 decimal
     * casts never do.) */
   private[etl] def integralForm(s: String): Boolean = s.matches("-?\\d+")
-
-  /** Line-oriented manifest codec (`rows=<n>` then one `file=<rel>` per
-    * line, `pscope=true` + one `part=<tuple>` per touched partition for
-    * scoped commits): trivially greppable, no parser dependency, and
-    * append-only fields keep old readers working — an old reader
-    * ignores `part=` lines and treats every commit as unscoped, which
-    * only ever ADDS conflicts, never hides one. */
-  private[etl] def renderManifest(m: Manifest): String =
-    ((s"rows=${m.rows}" +: m.files.map(f => s"file=$f")) ++
-      (if (m.base) Seq("base=true") else Nil) ++
-      m.partitions.toSeq.flatMap(ps =>
-        "pscope=true" +: ps.toSeq.sorted.map(p => s"part=$p")) ++
-      (if (m.partitionCols.nonEmpty)
-        Seq(s"pcols=${m.partitionCols.mkString(",")}") else Nil) ++
-      (if (m.replaceCols.nonEmpty)
-        s"rcols=${m.replaceCols.mkString(",")}" +:
-          m.replaceKeys.toSeq.sorted.map(k => s"rkey=$k")
-      else Nil) ++
-      m.stats.toSeq.sortBy(_._1).map { case (c, s) =>
-        s"stat=${encodePartition(Seq(c, if (s.num) "n" else "s", s.min, s.max))}"
-      } ++
-      m.blooms.toSeq.sortBy(_._1).map { case (c, b) =>
-        s"bloom=${encodePartition(Seq(c, b.m.toString, b.k.toString, b.bits))}"
-      } ++
-      m.fileStats.toSeq.sortBy(_._1).flatMap { case (f, cols) =>
-        cols.toSeq.sortBy(_._1).map { case (c, s) =>
-          s"fstat=${encodePartition(Seq(f, c, if (s.num) "n" else "s", s.min, s.max))}"
-        }
-      } ++
-      m.fileBlooms.toSeq.sortBy(_._1).flatMap { case (f, cols) =>
-        cols.toSeq.sortBy(_._1).map { case (c, b) =>
-          s"fbloom=${encodePartition(Seq(f, c, b.m.toString, b.k.toString, b.bits))}"
-        }
-      } ++
-      // advisory metadata: a reader ignoring kmv= lines loses only the
-      // planning estimate, never data — the append-only-is-safe class
-      m.sketches.toSeq.sortBy(_._1).map { case (c, s) =>
-        s"kmv=${encodePartition(Seq(c, s.k.toString, s.mins.mkString(",")))}"
-      } ++
-      // per-column null counts ([[appendWithStats]]): advisory — used
-      // only to PROVE a file fully satisfies a predicate (countWhere);
-      // ignoring them merely demotes Full files to Boundary scans
-      m.nullCounts.toSeq.sortBy(_._1).map { case (c, n) =>
-        s"nullc=${encodePartition(Seq(c, n.toString))}"
-      } ++
-      // per-file row counts ([[compactClustered]]): advisory — lets
-      // countWhere credit individual files of a multi-file base
-      m.fileRows.toSeq.sortBy(_._1).map { case (f, n) =>
-        s"frows=${encodePartition(Seq(f, n.toString))}"
-      } ++
-      // per-column EXACT sums (integral columns only — the associative
-      // domain): advisory, lets statsAggregate answer SUM with zero I/O
-      m.sums.toSeq.sortBy(_._1).map { case (c, v) =>
-        s"sum=${encodePartition(Seq(c, v))}"
-      } ++
-      // per-file sums ([[compactClustered]]): advisory — SUM credit for
-      // individual segments of a multi-file base
-      m.fileSums.toSeq.sortBy(_._1).flatMap { case (f, cols) =>
-        cols.toSeq.sortBy(_._1).map { case (c, v) =>
-          s"fsum=${encodePartition(Seq(f, c, v))}"
-        }
-      } ++
-      // per-column EXACT sums of squares (the second moment): advisory,
-      // lets momentsAggregate answer AVG/VARIANCE with zero I/O
-      m.sumsqs.toSeq.sortBy(_._1).map { case (c, v) =>
-        s"sumsq=${encodePartition(Seq(c, v))}"
-      } ++
-      // NOT covered by the append-only-is-safe argument above: a reader
-      // that ignored delwhere= would RESURRECT deleted rows. The parser
-      // below understands it, and no other reader of this log exists;
-      // a multi-reader deployment versions the protocol (Delta's
-      // minReaderVersion) before shipping a row-hiding field.
-      m.deletePred.toSeq.map(p =>
-        s"delwhere=${java.net.URLEncoder.encode(p, UTF_8.name())}") ++
-      m.txn.toSeq.map { case (app, v) =>
-        s"txn=${encodePartition(Seq(app, v.toString))}"
-      } ++
-      (if (m.restated) Seq("restated=true") else Nil) ++
-      // advisory (append-only-is-safe): a reader ignoring schema= pays
-      // the mergeSchema footer scan it always paid, never misreads
-      m.schema.toSeq.map(s =>
-        s"schema=${java.net.URLEncoder.encode(s, UTF_8.name())}")
-      ).mkString("", "\n", "\n")
-
-  private[etl] def parseManifest(s: String): Manifest = {
-    val kv = s.linesIterator.filter(_.nonEmpty).map { line =>
-      val i = line.indexOf('=')
-      require(i > 0, s"malformed manifest line: $line")
-      (line.substring(0, i), line.substring(i + 1))
-    }.toSeq
-    Manifest(
-      kv.collectFirst { case ("rows", v) => v.toLong }
-        .getOrElse(throw new IllegalArgumentException("manifest missing rows=")),
-      kv.collect { case ("file", v) => v },
-      kv.collectFirst { case ("base", v) => v.toBoolean }.getOrElse(false),
-      if (kv.exists(_ == ("pscope", "true")))
-        Some(kv.collect { case ("part", v) => v }.toSet)
-      else None,
-      kv.collectFirst { case ("pcols", v) => v.split(',').toSeq }.getOrElse(Nil),
-      kv.collectFirst { case ("rcols", v) => v.split(',').toSeq }.getOrElse(Nil),
-      kv.collect { case ("rkey", v) => v }.toSet,
-      kv.collect { case ("stat", v) =>
-        val parts = v.split('/').toSeq.map(p =>
-          java.net.URLDecoder.decode(p, UTF_8.name()))
-        require(parts.size == 4, s"malformed stat line: $v")
-        parts(0) -> ColStats(parts(1) == "n", parts(2), parts(3))
-      }.toMap,
-      kv.collect { case ("bloom", v) =>
-        val parts = v.split('/').toSeq.map(p =>
-          java.net.URLDecoder.decode(p, UTF_8.name()))
-        require(parts.size == 4, s"malformed bloom line: $v")
-        parts(0) -> BloomBits(parts(1).toInt, parts(2).toInt, parts(3))
-      }.toMap,
-      kv.collect { case ("fstat", v) =>
-        val parts = v.split('/').toSeq.map(p =>
-          java.net.URLDecoder.decode(p, UTF_8.name()))
-        require(parts.size == 5, s"malformed fstat line: $v")
-        (parts(0), parts(1), ColStats(parts(2) == "n", parts(3), parts(4)))
-      }.groupBy(_._1).map { case (f, rows) =>
-        f -> rows.map(r => r._2 -> r._3).toMap
-      },
-      kv.collect { case ("fbloom", v) =>
-        val parts = v.split('/').toSeq.map(p =>
-          java.net.URLDecoder.decode(p, UTF_8.name()))
-        require(parts.size == 5, s"malformed fbloom line: $v")
-        (parts(0), parts(1), BloomBits(parts(2).toInt, parts(3).toInt, parts(4)))
-      }.groupBy(_._1).map { case (f, rows) =>
-        f -> rows.map(r => r._2 -> r._3).toMap
-      },
-      kv.collect { case ("kmv", v) =>
-        val parts = v.split('/').toSeq.map(p =>
-          java.net.URLDecoder.decode(p, UTF_8.name()))
-        require(parts.size >= 2, s"malformed kmv line: $v")
-        val mins =
-          if (parts.size < 3 || parts(2).isEmpty) Nil
-          else parts(2).split(',').toSeq.map(_.toLong)
-        parts(0) -> KmvMins(parts(1).toInt, mins)
-      }.toMap,
-      kv.collectFirst { case ("delwhere", v) =>
-        java.net.URLDecoder.decode(v, UTF_8.name())
-      },
-      kv.collectFirst { case ("txn", v) =>
-        val parts = v.split('/').toSeq.map(p =>
-          java.net.URLDecoder.decode(p, UTF_8.name()))
-        require(parts.size == 2, s"malformed txn line: $v")
-        (parts(0), parts(1).toLong)
-      },
-      kv.collect { case ("nullc", v) =>
-        val parts = v.split('/').toSeq.map(p =>
-          java.net.URLDecoder.decode(p, UTF_8.name()))
-        require(parts.size == 2, s"malformed nullc line: $v")
-        parts(0) -> parts(1).toLong
-      }.toMap,
-      kv.collect { case ("frows", v) =>
-        val parts = v.split('/').toSeq.map(p =>
-          java.net.URLDecoder.decode(p, UTF_8.name()))
-        require(parts.size == 2, s"malformed frows line: $v")
-        parts(0) -> parts(1).toLong
-      }.toMap,
-      kv.collect { case ("sum", v) =>
-        val parts = v.split('/').toSeq.map(p =>
-          java.net.URLDecoder.decode(p, UTF_8.name()))
-        require(parts.size == 2, s"malformed sum line: $v")
-        parts(0) -> parts(1)
-      }.toMap,
-      kv.collect { case ("fsum", v) =>
-        val parts = v.split('/').toSeq.map(p =>
-          java.net.URLDecoder.decode(p, UTF_8.name()))
-        require(parts.size == 3, s"malformed fsum line: $v")
-        (parts(0), parts(1), parts(2))
-      }.groupBy(_._1).map { case (f, rows) =>
-        f -> rows.map(r => r._2 -> r._3).toMap
-      },
-      kv.collect { case ("sumsq", v) =>
-        val parts = v.split('/').toSeq.map(p =>
-          java.net.URLDecoder.decode(p, UTF_8.name()))
-        require(parts.size == 2, s"malformed sumsq line: $v")
-        parts(0) -> parts(1)
-      }.toMap,
-      kv.collectFirst { case ("restated", v) => v.toBoolean }.getOrElse(false),
-      kv.collectFirst { case ("schema", v) =>
-        java.net.URLDecoder.decode(v, UTF_8.name())
-      })
-  }
-
-  /** Canonical string for one partition tuple: URL-encoded values
-    * joined by '/', so values containing the separator, '=' or
-    * newlines cannot forge a different tuple or break the line codec.
-    * A SQL NULL value (Scala null) encodes as "%N" — URL encoding
-    * always escapes '%' to "%25", so no real string can collide with
-    * it and NULL stays distinct from the literal string "null". */
-  private[etl] def encodePartition(values: Seq[String]): String =
-    values.map(v =>
-      if (v == null) "%N"
-      else java.net.URLEncoder.encode(v, UTF_8.name())).mkString("/")
 
   /** The -separated tuple key used by the OVERWRITE read filter —
     * a second encoding of the same tuples because this one must be
@@ -3284,16 +2986,4 @@ object TxParquetSink {
     !num || (try { BigDecimal(mn); BigDecimal(mx); true }
              catch { case _: NumberFormatException => false })
 
-  private def deleteRecursively(p: Path): Unit = deleteTree(p)
-
-  /** THE recursive tree delete — shared with [[graft.catalog
-    * .GraftCatalog]] and [[graft.plans.MvRewrite]]'s GC so the three
-    * call sites cannot drift (review finding r13). Depth-first via
-    * one listing snapshot; vanished entries are fine (deleteIfExists). */
-  private[graft] def deleteTree(p: Path): Unit =
-    if (Files.exists(p)) {
-      val s = Files.walk(p)
-      val all = try s.iterator.asScala.toSeq finally s.close()
-      all.reverseIterator.foreach(Files.deleteIfExists(_))
-    }
 }

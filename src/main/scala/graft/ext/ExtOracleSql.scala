@@ -530,51 +530,61 @@ object ExtOracleSql {
 
   /** Streaming incremental-dedup twin: the greedy SEQUENTIAL replay of
     * [[graft.streaming.StreamDedup.incrementalStreamDedupBatch]],
-    * batches unrolled (one kept/surv CTE pair per micro-batch — the
-    * batch count is [[graft.streaming.StreamDedup.ReplayBatches]],
+    * batches unrolled (one kept/surv/adm CTE triple per micro-batch —
+    * the batch count is [[graft.streaming.StreamDedup.ReplayBatches]],
     * shared, so engine and oracle replay the same schedule).
     * Per batch b: `kept_b` = batch docs surviving in-batch content
-    * first-wins and the exact-text check against ADMITTED docs;
+    * first-wins and the exact-text check against the docs ADMITTED
+    * before it (`adm_b`, the union of `surv_0 … surv_{b-1}`);
     * `surv_b` = kept_b minus verified LSH near-dups of admitted docs
     * or of earlier-id kept peers in the same batch. The near-dup
     * relation is the shared `lshpairs` CTE (band collision is
     * intrinsic to a pair, so the global pair table restricted to the
-    * right doc sets is exactly what the live index join produces).
+    * right doc sets is exactly what the live index join produces),
+    * materialized once, plus its symmetric closure `sym` so the
+    * admitted-doc check is one equality join. Every CTE a later batch
+    * reads is MATERIALIZED: inlined, each batch would re-plan the
+    * whole MinHash chain once per reference.
     * NOTE the semantics pinned here are greedy-sequential, NOT
     * connected components: a doc dropped against an admitted doc does
     * not itself block later docs (its bands never enter the index). */
   lazy val streamIncrementalDedup: String = {
     val nB = graft.streaming.StreamDedup.ReplayBatches
-    def survPrev(b: Int): String =
-      (0 until b).map(j => s"SELECT doc_id FROM surv_$j").mkString(" UNION ALL ")
     val perBatch = (0 until nB).map { b =>
       val exactPrev =
         if (b == 0) ""
         else s"""
-           |    AND NOT EXISTS (SELECT 1 FROM (${survPrev(b)}) s
-           |                    JOIN batched ds ON ds.doc_id = s.doc_id
+           |    AND NOT EXISTS (SELECT 1 FROM adm_$b a
+           |                    JOIN batched ds ON ds.doc_id = a.doc_id
            |                    WHERE ds.norm_text = d.norm_text)""".stripMargin
       val lshPrev =
         if (b == 0) ""
         else s"""
-           |    AND NOT EXISTS (SELECT 1 FROM lshpairs p JOIN (${survPrev(b)}) s
-           |      ON (p.doc_a = k.doc_id AND p.doc_b = s.doc_id)
-           |      OR (p.doc_b = k.doc_id AND p.doc_a = s.doc_id))""".stripMargin
-      s"""kept_$b AS (
+           |    AND NOT EXISTS (SELECT 1 FROM sym p JOIN adm_$b a
+           |      ON p.peer = a.doc_id WHERE p.doc_id = k.doc_id)""".stripMargin
+      val admPrev = if (b == 0) "" else s"SELECT doc_id FROM adm_$b UNION ALL "
+      s"""kept_$b AS MATERIALIZED (
          |  SELECT d.doc_id, d.norm_text FROM batched d
          |  WHERE d.batch = $b
          |    AND NOT EXISTS (SELECT 1 FROM batched d2
          |                    WHERE d2.batch = $b AND d2.norm_text = d.norm_text
          |                      AND d2.doc_id < d.doc_id)$exactPrev
          |),
-         |surv_$b AS (
+         |surv_$b AS MATERIALIZED (
          |  SELECT k.doc_id FROM kept_$b k
-         |  WHERE NOT EXISTS (SELECT 1 FROM lshpairs p JOIN kept_$b k2
+         |  WHERE NOT EXISTS (SELECT 1 FROM pairs p JOIN kept_$b k2
          |      ON p.doc_b = k.doc_id AND p.doc_a = k2.doc_id)$lshPrev
-         |)""".stripMargin
+         |),
+         |adm_${b + 1} AS MATERIALIZED (${admPrev}SELECT doc_id FROM surv_$b)""".stripMargin
     }.mkString(",\n")
     s"""$minhashPairsCtes,
-       |batched AS (
+       |pairs AS MATERIALIZED (SELECT doc_a, doc_b FROM lshpairs),
+       |sym AS MATERIALIZED (
+       |  SELECT doc_a AS doc_id, doc_b AS peer FROM pairs
+       |  UNION ALL
+       |  SELECT doc_b AS doc_id, doc_a AS peer FROM pairs
+       |),
+       |batched AS MATERIALIZED (
        |  SELECT doc_id,
        |    CAST(doc_id // (SELECT (max(doc_id) + $nB) // $nB FROM documents)
        |         AS INT) AS batch,
@@ -583,7 +593,7 @@ object ExtOracleSql {
        |),
        |$perBatch
        |SELECT d.doc_id, d.batch,
-       |  d.doc_id IN (${survPrev(nB)}) AS is_novel
+       |  d.doc_id IN (SELECT doc_id FROM adm_$nB) AS is_novel
        |FROM batched d
        |ORDER BY d.doc_id""".stripMargin
   }

@@ -1,13 +1,13 @@
 package graft.plans
 
-import java.nio.file.{Files, Paths}
+import java.nio.file.Paths
 
 import org.apache.spark.sql.catalyst.plans.Inner
 import org.apache.spark.sql.catalyst.plans.logical._
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 
-import graft.etl.TxParquetSink
+import graft.etl.{TxLog, TxParquetSink}
 
 /** MANIFEST-DRIVEN BROADCAST SELECTION — the strategy decision a
   * cost-based optimizer makes from table statistics, sourced from the
@@ -95,7 +95,7 @@ object ManifestBroadcastJoins extends Rule[LogicalPlan] {
     var p = Paths.get(path)
     var depth = 0
     while (p != null && depth < 16) {
-      if (Files.isDirectory(p.resolve("_txlog"))) return Some(p.toString)
+      if (TxLog.isTable(p)) return Some(p.toString)
       p = p.getParent
       depth += 1
     }

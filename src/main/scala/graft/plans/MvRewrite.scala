@@ -7,7 +7,7 @@ import org.apache.spark.sql.catalyst.plans.logical._
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.types.{DoubleType, LongType, StructType}
 
-import graft.etl.TxParquetSink
+import graft.etl.{TxLog, TxParquetSink}
 
 /** MATERIALIZED-VIEW ROLLUP REWRITE — the classic aggregate-rewrite
   * optimization (Goldstein & Larson, SIGMOD 2001; the feature every
@@ -634,7 +634,7 @@ object MvCatalog {
     * [[refresh]]/[[registerRollup]] brings it forward — the version
     * gate makes stale persistence safe by construction. */
   def save(catalogDir: String): Unit = {
-    import java.nio.file.{Files, Paths, StandardCopyOption}
+    import java.nio.file.{Files, Paths}
     val d = Paths.get(catalogDir)
     Files.createDirectories(d)
     defs.forEach { (base, mvs) =>
@@ -649,12 +649,8 @@ object MvCatalog {
           s"minMax=${mv.mins.nonEmpty}",
           s"rows=${mv.rows}").mkString("", "\n", "\n")
       }.mkString("---\n") // one file per base, one block per grain
-      val tmp = Files.createTempFile(d, ".stage-", ".mv.tmp")
-      Files.write(tmp,
+      TxLog.replace(d.resolve(enc(base) + ".mv"),
         content.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      Files.move(tmp, d.resolve(enc(base) + ".mv"),
-        StandardCopyOption.REPLACE_EXISTING,
-        StandardCopyOption.ATOMIC_MOVE)
     }
     // the registry is authoritative: prune .mv files whose base is no
     // longer registered — without this a long-lived deployment's
@@ -914,7 +910,7 @@ object MvCatalog {
       .sortBy(-_._2)
       .drop(math.max(retention.keep - 1, 0))
       .filter { case (_, mtime) => now - mtime > retention.graceMs }
-    dropped.foreach { case (p, _) => deleteRecursively(Paths.get(p)) }
+    dropped.foreach { case (p, _) => TxLog.deleteTree(Paths.get(p)) }
     val gone = dropped.map(_._1).toSet ++ vanished
     if (gone.nonEmpty) {
       writtenViews.computeIfPresent(stem,
@@ -922,9 +918,6 @@ object MvCatalog {
       ()
     }
   }
-
-  private def deleteRecursively(p: java.nio.file.Path): Unit =
-    graft.etl.TxParquetSink.deleteTree(p)
 
   /** WRITE-PATH FRESHNESS POLICY — the
     * [[TxParquetSink.maintainIfNeeded]] pattern for the MV tier:

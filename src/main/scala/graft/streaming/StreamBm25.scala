@@ -121,18 +121,7 @@ object StreamBm25 {
       StandardCopyOption.ATOMIC_MOVE)
     Files.move(Paths.get(tmp), Paths.get(store.dfDir),
       StandardCopyOption.ATOMIC_MOVE)
-    deleteDir(trash)
-  }
-
-  private def deleteDir(d: String): Unit = {
-    import java.nio.file.{Files, Paths}
-    import scala.jdk.CollectionConverters._
-    val p = Paths.get(d)
-    if (Files.exists(p)) {
-      val s = Files.walk(p)
-      val all = try s.iterator.asScala.toSeq finally s.close()
-      all.reverseIterator.foreach(Files.deleteIfExists(_))
-    }
+    graft.etl.TxLog.deleteTree(Paths.get(trash))
   }
 
   /** Drop orphan/duplicate posting+df rows left by a crash between the

@@ -106,15 +106,7 @@ object StreamQuantile {
       StandardCopyOption.ATOMIC_MOVE)
     Files.move(Paths.get(tmp), Paths.get(store.skDir),
       StandardCopyOption.ATOMIC_MOVE)
-    val p = Paths.get(trash)
-    if (Files.exists(p)) {
-      val s = Files.walk(p)
-      val all = try {
-        import scala.jdk.CollectionConverters._
-        s.iterator.asScala.toSeq
-      } finally s.close()
-      all.reverseIterator.foreach(Files.deleteIfExists(_))
-    }
+    graft.etl.TxLog.deleteTree(Paths.get(trash))
   }
 
   /** Oracle-checkable REPLAY: the documents table carved into

@@ -111,12 +111,16 @@ class TxSinkSpec extends SparkSpec {
     // a committer that died between manifest link and tmp delete
     val tmp = java.nio.file.Paths.get(t.dir, "_txlog", ".stage-dead.txn.tmp")
     Files.write(tmp, "rows=1\n".getBytes)
+    // a replaceAll that died between writing its DDL scratch and the rename
+    val ddlTmp = java.nio.file.Paths.get(t.dir, "_txlog", ".ddl-dead.tmp")
+    Files.write(ddlTmp, "k STRING".getBytes)
     assert(keySet(t) == Seq("P1"), "staged-but-unpublished data leaked into reads")
     val removed = t.vacuumOrphans(minAgeMs = 0)
     assert(removed.exists(_.endsWith("tx-orphan")))
     assert(removed.exists(_.endsWith(".txn.tmp")) && !Files.exists(tmp),
       "crashed-committer manifest scratch must be vacuumed too")
-    assert(removed.size == 2)
+    assert(!Files.exists(ddlTmp), "every aged log scratch file is vacuumed")
+    assert(removed.size == 3)
     assert(keySet(t) == Seq("P1"))
   }
 
@@ -201,15 +205,71 @@ class TxSinkSpec extends SparkSpec {
   }
 
   test("manifest codec round-trips") {
-    val m = TxParquetSink.Manifest(42L, Seq("data/tx-a", "data/tx-b"))
-    assert(TxParquetSink.parseManifest(TxParquetSink.renderManifest(m)) == m)
-    val b = TxParquetSink.Manifest(7L, Seq("data/tx-c"), base = true)
-    assert(TxParquetSink.parseManifest(TxParquetSink.renderManifest(b)) == b)
+    val m = TxLog.Manifest(42L, Seq("data/tx-a", "data/tx-b"))
+    assert(TxLog.parseManifest(TxLog.renderManifest(m)) == m)
+    val b = TxLog.Manifest(7L, Seq("data/tx-c"), base = true)
+    assert(TxLog.parseManifest(TxLog.renderManifest(b)) == b)
     // schema= line (round-14: metadata-served read schema) — JSON with
     // URL-hostile characters survives the line codec
-    val s = TxParquetSink.Manifest(1L, Seq("data/tx-d"),
+    val s = TxLog.Manifest(1L, Seq("data/tx-d"),
       schema = Some(batch("P" -> "x").schema.json))
-    assert(TxParquetSink.parseManifest(TxParquetSink.renderManifest(s)) == s)
+    assert(TxLog.parseManifest(TxLog.renderManifest(s)) == s)
+    // every field set, codec-hostile characters included; the rendered
+    // bytes are pinned, so tables already on disk keep reading back
+    import TxLog.{BloomBits, ColStats, KmvMins}
+    val full = TxLog.Manifest(5L, Seq("data/tx-e", "data/tx-f/__bucket=0"),
+      base = true, partitions = Some(Set("2024-01-01/eu", "a%2Fb/%N")),
+      partitionCols = Seq("day", "region"),
+      replaceCols = Seq("day"), replaceKeys = Set("2024-01-01", "null"),
+      stats = Map("amount" -> ColStats(num = true, "-1", "30"),
+        "day" -> ColStats(num = false, "", "z/=\n%\u00e9")),
+      blooms = Map("k" -> BloomBits(8192, 6, "AAEC_w")),
+      fileStats = Map("data/tx-e" -> Map(
+        "amount" -> ColStats(num = true, "1", "2"),
+        "day" -> ColStats(num = false, "a", "b"))),
+      fileBlooms = Map("data/tx-e" -> Map("k" -> BloomBits(64, 2, "AQ"))),
+      sketches = Map("k" -> KmvMins(64, Seq(3L, 17L)), "e" -> KmvMins(64, Nil)),
+      deletePred = Some("day = 'a/b' AND x <> '='"),
+      txn = Some(("app/1", 9L)),
+      nullCounts = Map("amount" -> 0L, "day" -> 2L),
+      fileRows = Map("data/tx-e" -> 3L, "data/tx-f/__bucket=0" -> 2L),
+      sums = Map("amount" -> "465"),
+      fileSums = Map("data/tx-e" -> Map("amount" -> "3")),
+      sumsqs = Map("amount" -> "9455"),
+      restated = true,
+      schema = Some("""{"type":"struct","fields":[]}"""))
+    assert(TxLog.renderManifest(full) == Seq(
+      "rows=5",
+      "file=data/tx-e",
+      "file=data/tx-f/__bucket=0",
+      "base=true",
+      "pscope=true",
+      "part=2024-01-01/eu",
+      "part=a%2Fb/%N",
+      "pcols=day,region",
+      "rcols=day",
+      "rkey=2024-01-01",
+      "rkey=null",
+      "stat=amount/n/-1/30",
+      "stat=day/s//z%2F%3D%0A%25%C3%A9",
+      "bloom=k/8192/6/AAEC_w",
+      "fstat=data%2Ftx-e/amount/n/1/2",
+      "fstat=data%2Ftx-e/day/s/a/b",
+      "fbloom=data%2Ftx-e/k/64/2/AQ",
+      "kmv=e/64/",
+      "kmv=k/64/3%2C17",
+      "nullc=amount/0",
+      "nullc=day/2",
+      "frows=data%2Ftx-e/3",
+      "frows=data%2Ftx-f%2F__bucket%3D0/2",
+      "sum=amount/465",
+      "fsum=data%2Ftx-e/amount/3",
+      "sumsq=amount/9455",
+      "delwhere=day+%3D+%27a%2Fb%27+AND+x+%3C%3E+%27%3D%27",
+      "txn=app%2F1/9",
+      "restated=true",
+      "schema=%7B%22type%22%3A%22struct%22%2C%22fields%22%3A%5B%5D%7D").mkString("", "\n", "\n"))
+    assert(TxLog.parseManifest(TxLog.renderManifest(full)) == full)
   }
 
   test("commits record their schema; snapshot reads serve it without footer merging") {
@@ -690,8 +750,8 @@ class TxSinkSpec extends SparkSpec {
     // hand-publish a base that REUSES the first commit's directory
     val logDir = java.nio.file.Paths.get(t.dir, "_txlog")
     java.nio.file.Files.write(logDir.resolve(f"${1L}%020d.txn"),
-      TxParquetSink.renderManifest(
-        TxParquetSink.Manifest(1L, Seq(shared), base = true)).getBytes)
+      TxLog.renderManifest(
+        TxLog.Manifest(1L, Seq(shared), base = true)).getBytes)
     val removed = t.truncateHistory()
     // the version-0 manifest goes; the shared data directory must stay
     assert(removed.exists(_.endsWith(".txn")))
@@ -700,19 +760,19 @@ class TxSinkSpec extends SparkSpec {
   }
 
   test("scoped manifest codec round-trips; separator chars cannot forge a tuple") {
-    val m = TxParquetSink.Manifest(3L, Seq("data/tx-a"),
+    val m = TxLog.Manifest(3L, Seq("data/tx-a"),
       partitions = Some(Set("d1", "d2/x")), partitionCols = Seq("day"))
-    assert(TxParquetSink.parseManifest(TxParquetSink.renderManifest(m)) == m)
-    val ow = TxParquetSink.Manifest(2L, Seq("data/tx-b"),
+    assert(TxLog.parseManifest(TxLog.renderManifest(m)) == m)
+    val ow = TxLog.Manifest(2L, Seq("data/tx-b"),
       partitions = Some(Set("d1")), partitionCols = Seq("day"),
       replaceCols = Seq("day"),
       replaceKeys = Set(TxParquetSink.sepEncode(Seq("d1"))))
-    assert(TxParquetSink.parseManifest(TxParquetSink.renderManifest(ow)) == ow)
+    assert(TxLog.parseManifest(TxLog.renderManifest(ow)) == ow)
     // a value containing the tuple separator encodes differently from a
     // genuine two-column tuple with the same rendered characters
-    assert(TxParquetSink.encodePartition(Seq("a/b")) !=
-      TxParquetSink.encodePartition(Seq("a", "b")))
-    assert(TxParquetSink.encodePartition(Seq("a=b\nc")) // codec-hostile chars
+    assert(TxLog.encodePartition(Seq("a/b")) !=
+      TxLog.encodePartition(Seq("a", "b")))
+    assert(TxLog.encodePartition(Seq("a=b\nc")) // codec-hostile chars
       .forall(c => c != '=' && c != '\n'))
   }
 
@@ -739,6 +799,28 @@ class TxSinkSpec extends SparkSpec {
     assert(t2 == 3 && s2 == 2, s"numeric stats compare: ($t2, $s2)")
     // a column with no recorded stats is never pruned
     assert(t.skippingAuditWhere(spark, "absent >= 'a' AND absent <= 'b'") == ((3, 0)))
+  }
+
+  /** A TIMESTAMP column committed under two session zones: a UTC
+    * commit at 2024-01-01T00:00Z (k = 1) and an America/New_York
+    * commit at 02:00Z and 01:00Z (k = 2, 5) — with its scan's extremes
+    * in the (UTC) test session. */
+  private def twoZoneCommits(): TxParquetSink = {
+    val t = table()
+    def at(i: String) = java.sql.Timestamp.from(java.time.Instant.parse(i))
+    try Seq("UTC" -> Seq((1L, at("2024-01-01T00:00:00Z"))),
+        "America/New_York" -> Seq((2L, at("2024-01-01T02:00:00Z")),
+          (5L, at("2024-01-01T01:00:00Z")))).foreach { case (zone, rows) =>
+      spark.conf.set("spark.sql.session.timeZone", zone)
+      t.appendWithStats(rows.toDF("k", "ts"), Seq("k", "ts"))
+    } finally spark.conf.set("spark.sql.session.timeZone", "UTC")
+    t
+  }
+
+  private def scanExtremes(t: TxParquetSink, pred: String): (String, String) = {
+    val r = t.readSnapshot(spark).get.where(pred)
+      .selectExpr("CAST(min(ts) AS STRING)", "CAST(max(ts) AS STRING)").head()
+    (r.getString(0), r.getString(1))
   }
 
   test("statsAggregate answers count/min/max from manifests alone — zero data reads") {
@@ -779,6 +861,12 @@ class TxSinkSpec extends SparkSpec {
     t3.appendWithStats(Seq(("a", 1L)).toDF("day", "amount"), Seq("amount"))
     assertThrows[IllegalArgumentException](
       t3.statsAggregate(spark, Seq("day")))
+    // TIMESTAMP extremes compare as instants whatever zone each writer ran in
+    val t4 = twoZoneCommits()
+    val (mn, mx) = scanExtremes(t4, "true")
+    assert(t4.statsAggregate(spark, Seq("ts"))
+      .as[(String, Long, String, String, String)].collect().toSeq ==
+      Seq(("ts", 3L, mn, mx, null)))
   }
 
   test("momentsAggregate: exact AVG/VAR ingredients from manifests alone") {
@@ -948,7 +1036,7 @@ class TxSinkSpec extends SparkSpec {
     val logDir = java.nio.file.Paths.get(legacy.dir, "_txlog")
     Files.createDirectories(logDir)
     t.commits().foreach { case (v, m) =>
-      Files.write(logDir.resolve(f"$v%020d.txn"), TxParquetSink.renderManifest(
+      Files.write(logDir.resolve(f"$v%020d.txn"), TxLog.renderManifest(
         m.copy(files = m.files.map(f => java.nio.file.Paths.get(t.dir, f).toString),
           schema = None)).getBytes)
     }
@@ -1112,6 +1200,15 @@ class TxSinkSpec extends SparkSpec {
     val r = t2.statsAggregateWhere(spark, Seq("amount"), "amount > 99")
       .collect().head
     assert(r.getLong(1) == 0L && r.isNullAt(2) && r.isNullAt(3) && r.isNullAt(4))
+    // two-zone TIMESTAMP commits: both Full (k >= 1), and the
+    // New_York commit on the boundary (k <= 4)
+    val t3 = twoZoneCommits()
+    Seq("k >= 1" -> 3L, "k <= 4" -> 2L).foreach { case (pred, n) =>
+      val (mn, mx) = scanExtremes(t3, pred)
+      assert(t3.statsAggregateWhere(spark, Seq("ts"), pred)
+        .as[(String, Long, String, String, String)].collect().toSeq ==
+        Seq(("ts", n, mn, mx, null)), pred)
+    }
   }
 
   test("data skipping: a pruned overwrite still masks earlier commits") {
@@ -1132,10 +1229,10 @@ class TxSinkSpec extends SparkSpec {
     assert(jan.toSeq == Seq(("2024-01-01", 1L), ("2024-01-02", 20L)),
       s"pruned read must apply the overwrite mask: ${jan.toSeq}")
     // plain appends (no stats) round-trip through the manifest codec
-    val m = TxParquetSink.Manifest(1, Seq("data/x"),
-      stats = Map("day" -> TxParquetSink.ColStats(num = false, "a", "b"),
-        "amount" -> TxParquetSink.ColStats(num = true, "1", "2")))
-    assert(TxParquetSink.parseManifest(TxParquetSink.renderManifest(m)) == m)
+    val m = TxLog.Manifest(1, Seq("data/x"),
+      stats = Map("day" -> TxLog.ColStats(num = false, "a", "b"),
+        "amount" -> TxLog.ColStats(num = true, "1", "2")))
+    assert(TxLog.parseManifest(TxLog.renderManifest(m)) == m)
   }
 
   test("bloom skipping: point lookup prunes commits the key never landed in, never loses a row") {
@@ -1165,9 +1262,9 @@ class TxSinkSpec extends SparkSpec {
     val (_, skAbsent) = t.skippingAuditWhere(spark, "k = 999999")
     assert(skAbsent >= 2, "absent key should prune nearly every commit")
     // bloom manifest codec round-trips
-    val m = TxParquetSink.Manifest(1, Seq("data/y"),
-      blooms = Map("k" -> TxParquetSink.BloomBits(8192, 6, "AAEC_w")))
-    assert(TxParquetSink.parseManifest(TxParquetSink.renderManifest(m)) == m)
+    val m = TxLog.Manifest(1, Seq("data/y"),
+      blooms = Map("k" -> TxLog.BloomBits(8192, 6, "AAEC_w")))
+    assert(TxLog.parseManifest(TxLog.renderManifest(m)) == m)
   }
 
   test("ranged compaction: skipping survives the base rewrite; vacuum spares the bucketed root") {
@@ -1226,7 +1323,7 @@ class TxSinkSpec extends SparkSpec {
     // file-level blooms round-trip the codec
     val m = t.commits().last._2
     assert(m.base && m.fileBlooms.nonEmpty)
-    assert(TxParquetSink.parseManifest(TxParquetSink.renderManifest(m)) == m)
+    assert(TxLog.parseManifest(TxLog.renderManifest(m)) == m)
   }
 
   // ---- round-9 regressions ------------------------------------------
@@ -1319,7 +1416,7 @@ class TxSinkSpec extends SparkSpec {
     // restore the manifest: full-listing resolution works again and
     // sees the same table
     java.nio.file.Files.write(logDir.resolve(f"${0L}%020d.txn"),
-      TxParquetSink.renderManifest(TxParquetSink.Manifest(0L, Nil)).getBytes)
+      TxLog.renderManifest(TxLog.Manifest(0L, Nil)).getBytes)
     assert(keySet(t) == Seq("P1", "P2", "P3", "P4"))
   }
 
@@ -1424,9 +1521,9 @@ class TxSinkSpec extends SparkSpec {
     assert(total == 2 && skipped == 1)
     // a legacy manifest that DID record "NaN" stats: conservative keep, no throw
     assert(!TxParquetSink.boundDisjoint(
-      TxParquetSink.ColStats(num = true, "NaN", "NaN"), Some("1"), Some("2")))
+      TxLog.ColStats(num = true, "NaN", "NaN"), Some("1"), Some("2")))
     assert(!TxParquetSink.boundDisjoint(
-      TxParquetSink.ColStats(num = true, "-Infinity", "Infinity"), Some("1"), Some("2")))
+      TxLog.ColStats(num = true, "-Infinity", "Infinity"), Some("1"), Some("2")))
   }
 
   test("deleteWhere: O(1) metadata commit hides matches; later appends unaffected") {
@@ -1775,12 +1872,13 @@ class TxSinkSpec extends SparkSpec {
   }
 
   test("manifest kmv sketches: codec round-trip, batching-invariant fold, capacity estimate, refusals") {
-    import TxParquetSink.{KmvMins, kmvEstimate, SketchK}
+    import TxLog.KmvMins
+    import TxParquetSink.{kmvEstimate, SketchK}
     // codec round-trip (including an empty sketch from an all-null column)
-    val m = TxParquetSink.Manifest(3, Seq("f1"),
+    val m = TxLog.Manifest(3, Seq("f1"),
       sketches = Map("a" -> KmvMins(SketchK, Seq(5L, 9L, 123456789L)),
         "b" -> KmvMins(SketchK, Nil)))
-    assert(TxParquetSink.parseManifest(TxParquetSink.renderManifest(m)) == m)
+    assert(TxLog.parseManifest(TxLog.renderManifest(m)) == m)
 
     // 200 distinct keys (> k, exercising the at-capacity estimator)
     // loaded in three UNEVEN commits with overlap — the fold must equal

@@ -3,7 +3,9 @@
 
 Prints the non-blank, non-comment Scala lines of src/main, src/test and
 etl/TxParquetSink.scala, the number of top-level `main` entry points
-in src/main, and the number of public TxParquetSink members. A line
+in src/main, the number of public TxParquetSink members, and the
+number of src/main code lines that call `Files.createLink` or use
+`ATOMIC_MOVE` (the hand-written atomic file writes). A line
 counts as comment when, stripped, it starts with `//`, `/*` or `*`
 (scaladoc bodies and closers); code followed by a trailing comment
 counts as code. A public member is a declaration (def, val, var, class,
@@ -45,6 +47,13 @@ def public_members(path):
         return sum(1 for l in f if MEMBER.match(l))
 
 
+def code_lines_with(path, needle):
+    with open(path, encoding="utf-8") as f:
+        return sum(1 for l in f
+                   if needle in l and l.strip()
+                   and not l.strip().startswith(("//", "/*", "*")))
+
+
 def main():
     root = sys.argv[1] if len(sys.argv) > 1 else "."
     src_main = os.path.join(root, "src", "main")
@@ -54,6 +63,9 @@ def main():
     print(f"TxParquetSink.scala code lines: {code_lines(os.path.join(root, SINK)):,}")
     print(f"top-level mains: {sum(map(mains, scala_files(src_main)))}")
     print(f"TxParquetSink public members: {public_members(os.path.join(root, SINK))}")
+    for needle in ("Files.createLink(", "ATOMIC_MOVE"):
+        n = sum(code_lines_with(p, needle) for p in scala_files(src_main))
+        print(f"src/main lines with {needle.rstrip('(')}: {n}")
 
 
 if __name__ == "__main__":
